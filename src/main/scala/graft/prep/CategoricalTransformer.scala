@@ -64,59 +64,81 @@ object CategoricalTransformer {
       .groupBy("feature", "value").agg(count(lit(1)).as("cnt"))
   }
 
-  /** Fit rare-label models for all columns in one job.
-    * Only rows with share >= threshold are ever collected.
-    * `knownTotal`/`knownVc` let an orchestrator share the row count
-    * and the (cached) value-counts frame instead of recomputing them.
+  /** Fit rare-label models for all columns. Job plan: one row count
+    * (two jobs under AQE), then ONE [[countStats]] aggregate (three jobs
+    * under AQE; the bloom filters ride in it when `buildBloom`). Only
+    * labels at share >= threshold are ever collected.
     */
   def fit(
       df: DataFrame,
       cols: Seq[String],
       threshold: Double,
       maxCategories: Int = 1024,
-      knownTotal: Option[Double] = None,
-      knownVc: Option[DataFrame] = None,
       buildBloom: Boolean = false,
       bloomItems: Long = 1000000L,
       bloomBits: Long = 8388608L,
-  ): Map[String, CatColModel] = {
-    if (cols.isEmpty) return Map.empty
-    val total = knownTotal.getOrElse(df.count().toDouble)
-    val vc = knownVc.map(_.filter(col("feature").isin(cols: _*)))
-      .getOrElse(valueCounts(df, cols).cache())
-    val blooms: Map[String, Array[Byte]] =
-      if (!buildBloom) Map.empty
-      else vc.filter(col("value").isNotNull && col("value") =!= "" && col("value") =!= " ")
-        .groupBy("feature")
-        .agg(org.apache.spark.sql.graft.ColumnBridge
-          .bloomFilterAgg(col("value"), bloomItems, bloomBits).as("bf"))
-        .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    try {
-      val keepRows = vc
-        .filter(col("cnt") >= lit(threshold) * lit(total))
-        .select("feature", "value").collect()
-      val stats = vc.groupBy("feature").agg(
-        count(lit(1)).as("n_distinct"),
-        sum(when(col("cnt") < lit(threshold) * lit(total), 1L).otherwise(0L)).as("n_rare"),
-        sum(when(col("value").isNull || col("value") === "" || col("value") === " ",
-          col("cnt")).otherwise(0L)).as("n_none"),
-      ).collect()
-      val keepByCol = keepRows.groupBy(_.getString(0)).view
-        .mapValues(_.flatMap(r => Option(r.getString(1))).filter(v => v.nonEmpty && v != " ")
-          .sorted.toSeq).toMap
-      cols.map { c =>
-        val st = stats.find(_.getString(0) == c)
-        val nDistinct = st.map(_.getLong(1)).getOrElse(0L)
-        val nRare     = st.map(_.getLong(2)).getOrElse(0L)
-        val nNone     = st.map(_.getLong(3)).getOrElse(0L)
-        val keep      = keepByCol.getOrElse(c, Seq.empty)
-        require(keep.size <= maxCategories,
-          s"column $c keeps ${keep.size} categories > maxCategories=$maxCategories")
-        // rare shrink only when the column has >2 distinct labels
-        c -> CatColModel(keep, hasRare = nRare > 0 && nDistinct > 2,
-          hasNone = nNone > 0, bloom = blooms.get(c))
-      }.toMap
-    } finally if (knownVc.isEmpty) vc.unpersist()
+  ): Map[String, CatColModel] =
+    if (cols.isEmpty) Map.empty
+    else {
+      val stats = countStats(df, cols, df.count().toDouble, threshold,
+        buildBloom, bloomItems, bloomBits)
+      cols.map(c => c -> model(c, stats.get(c), maxCategories)).toMap
+    }
+
+  /** What one column's value counts tell the fit: distinct labels
+    * (null and "" count as labels), the top label's count, labels
+    * below the threshold, None rows, the sorted keep set, and the bloom
+    * filter over every non-None label when one was asked for.
+    */
+  private[prep] final case class CatStats(nDistinct: Long, maxCnt: Long, nRare: Long, nNone: Long,
+                                          keep: Seq[String], bloom: Option[Array[Byte]])
+
+  /** ONE per-feature aggregate over [[valueCounts]] for all `cols` (two
+    * shuffles, one collect, no cache): every [[CatStats]] field, the
+    * keep set as a filtered `collect_list` and the bloom filter as a
+    * filtered aggregate. `total` is the fit's row count, passed in as a
+    * literal. Columns with no rows are absent from the result.
+    */
+  private[prep] def countStats(
+      df: DataFrame,
+      cols: Seq[String],
+      total: Double,
+      threshold: Double,
+      buildBloom: Boolean = false,
+      bloomItems: Long = 1000000L,
+      bloomBits: Long = 8388608L,
+  ): Map[String, CatStats] =
+    if (cols.isEmpty) Map.empty
+    else {
+      val value = col("value")
+      val rare = col("cnt") < lit(threshold) * lit(total)
+      val isNone = value.isNull || value === "" || value === " "
+      val aggs = Seq(
+        count(lit(1)),
+        max(col("cnt")),
+        sum(when(rare, 1L).otherwise(0L)),
+        sum(when(isNone, col("cnt")).otherwise(0L)),
+        collect_list(when(!rare, value)),
+      ) ++ (if (!buildBloom) Nil else Seq(org.apache.spark.sql.graft.ColumnBridge
+        .bloomFilterAgg(when(!isNone, value), bloomItems, bloomBits)))
+      valueCounts(df, cols).groupBy("feature").agg(aggs.head, aggs.tail: _*).collect()
+        .map { r =>
+          r.getString(0) -> CatStats(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+            r.getSeq[String](5).filter(v => v.nonEmpty && v != " ").sorted,
+            if (buildBloom) Option(r.getAs[Array[Byte]](6)) else None)
+        }.toMap
+    }
+
+  /** The fitted model of one column from its [[CatStats]] (absent:
+    * no rows), guarded by `maxCategories`. Rare labels shrink only
+    * when the column has more than 2 distinct labels.
+    */
+  private[prep] def model(c: String, stats: Option[CatStats], maxCategories: Int): CatColModel = {
+    val s = stats.getOrElse(CatStats(0L, 0L, 0L, 0L, Nil, None))
+    require(s.keep.size <= maxCategories,
+      s"column $c keeps ${s.keep.size} categories > maxCategories=$maxCategories")
+    CatColModel(s.keep, hasRare = s.nRare > 0 && s.nDistinct > 2, hasNone = s.nNone > 0,
+      bloom = s.bloom)
   }
 
   /** Dummy columns `col_value` over the fit-time registry; unseen

@@ -10,9 +10,13 @@ import org.apache.spark.sql.functions._
   *   3. rare labels (share < threshold) -> "other" (via
   *      [[CategoricalTransformer.shrink]]).
   *
-  * Scale design: decisions come from ONE value-counts shuffle for all
-  * categorical columns + the numerical stats pass (min==max test);
-  * nothing unbounded is collected.
+  * Scale design: decisions come from two aggregates and nothing
+  * unbounded is collected. Standalone `fit` runs one global aggregate
+  * (row count + numerical min/max, [[NumericalTransformer.scan]]: two
+  * jobs) and one value-count aggregate for all categorical columns
+  * ([[CategoricalTransformer.countStats]]: three jobs, the bloom
+  * filters riding along when asked for). `Preprocessor.fit` feeds
+  * [[select]] from its own two passes instead.
   */
 final case class SelectionModel(
     dropped: Map[String, String],            // column -> reason
@@ -24,50 +28,43 @@ final case class SelectionModel(
 object FeatureSelector {
   val DominantShare = 0.98
 
-  /** `knownNumStats` lets the orchestrator share its single stats pass
-    * instead of re-aggregating; the categorical value counts are
-    * computed once here and shared with the rare-label fit.
-    */
   def fit(
       df: DataFrame,
       numericalCols: Seq[String],
       categoricalCols: Seq[String],
       catLabelsThreshold: Double,
       maxCategories: Int = 1024,
-      knownNumStats: Option[Map[String, NumColStats]] = None,
       buildBloom: Boolean = false,
   ): SelectionModel = {
-    val total = df.count().toDouble
-    val dropped = scala.collection.mutable.LinkedHashMap[String, String]()
+    val scan = NumericalTransformer.scan(df, Nil, numericalCols.map(c => c -> col(c)))
+    val total = scan.total.toDouble
+    select(numericalCols, scan.stats, categoricalCols,
+      CategoricalTransformer.countStats(df, categoricalCols, total, catLabelsThreshold, buildBloom),
+      total, maxCategories)
+  }
 
-    val vcOpt =
-      if (categoricalCols.isEmpty) None
-      else Some(CategoricalTransformer.valueCounts(df, categoricalCols).cache())
-
-    // categorical: distinct count + dominant share in one pass
-    vcOpt.foreach { vc =>
-      val stats = vc.groupBy("feature")
-        .agg(count(lit(1)).as("n_distinct"), max(col("cnt")).as("max_cnt"))
-        .collect()
-      stats.foreach { r =>
-        val (c, n, mx) = (r.getString(0), r.getLong(1), r.getLong(2))
-        if (n <= 1) dropped(c) = "single value"
-        else if (mx >= total * DominantShare) dropped(c) = "dominant label >= 98%"
-      }
+  /** The drop decisions and the kept categorical columns' models from
+    * the fit's aggregates: numerical single value = min == max (or all
+    * null); categorical single value = at most one distinct label, then
+    * dominant = the top label covers >= 98% of `total` rows.
+    */
+  private[prep] def select(
+      numericalCols: Seq[String],
+      numStats: Map[String, NumColStats],
+      categoricalCols: Seq[String],
+      catStats: Map[String, CategoricalTransformer.CatStats],
+      total: Double,
+      maxCategories: Int,
+  ): SelectionModel = {
+    val catDropped = categoricalCols.flatMap(c => catStats.get(c).collect {
+      case s if s.nDistinct <= 1                => c -> "single value"
+      case s if s.maxCnt >= total * DominantShare => c -> "dominant label >= 98%"
+    })
+    val numDropped = numericalCols.collect {
+      case c if numStats(c).min.isNaN || numStats(c).min == numStats(c).max => c -> "single value"
     }
-    // numerical: single-value = min == max (or all null)
-    if (numericalCols.nonEmpty) {
-      val st = knownNumStats.getOrElse(NumericalTransformer.fit(df, numericalCols))
-      numericalCols.foreach { c =>
-        val s = st(c)
-        if (s.min.isNaN || s.min == s.max) dropped(c) = "single value"
-      }
-    }
-    val keptCats = categoricalCols.filterNot(dropped.contains)
-    val catModels = CategoricalTransformer.fit(df, keptCats, catLabelsThreshold,
-      maxCategories, knownTotal = Some(total), knownVc = vcOpt,
-      buildBloom = buildBloom)
-    vcOpt.foreach(_.unpersist())
-    SelectionModel(dropped.toMap, catModels)
+    val dropped = (catDropped ++ numDropped).toMap
+    SelectionModel(dropped, categoricalCols.filterNot(dropped.contains).map(c =>
+      c -> CategoricalTransformer.model(c, catStats.get(c), maxCategories)).toMap)
   }
 }

@@ -1,6 +1,6 @@
 package graft.prep
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -62,11 +62,11 @@ object QuantileFitMode {
 
 /** Numerical feature handling (reference: utils/numerical_transformer.py).
   *
-  * Scale design: `fit` runs ONE aggregation job covering every column's
-  * min/max/mean/std (+ exact percentile boundaries when needed); the
-  * fitted model is a handful of doubles on the driver; every transform
-  * and inverse is a pure column expression — narrow, whole-stage
-  * codegen, zero shuffle regardless of data size. The `Sketch`
+  * Scale design: `fit` runs ONE aggregation ([[scan]]) covering every
+  * column's min/max/mean/std (+ exact percentile boundaries when
+  * needed); the fitted model is a handful of doubles on the driver;
+  * every transform and inverse is a pure column expression — narrow,
+  * whole-stage codegen, zero shuffle regardless of data size. The `Sketch`
   * quantile mode adds one more (narrow, map-side-combined) aggregation
   * over (column, geometric bucket) pairs.
   */
@@ -83,6 +83,8 @@ object NumericalTransformer {
     * boundaries (used by kbins / quantile-grid / robust scaling),
     * fitted per [[QuantileFitMode]] — `Exact` below scale,
     * [[QuantileFitMode.Sketch]] as the documented 100 TB default.
+    * A thin caller of [[scan]] (+ [[sketched]]), the builders
+    * `Preprocessor.fit` shares.
     */
   def fit(
       df: DataFrame,
@@ -91,54 +93,88 @@ object NumericalTransformer {
       quantileFit: QuantileFitMode = QuantileFitMode.Exact,
   ): Map[String, NumColStats] = {
     require(cols.nonEmpty, "no numerical columns to fit")
-    val cleaned = df.select(cols.map(c => replaceInf(col(c)).as(c)): _*)
-    val aggs = cols.flatMap { c =>
+    val inputs = cols.map(c => c -> col(c))
+    sketched(df, scan(df, Nil, inputs, quantileProbs, quantileFit).stats, inputs,
+      quantileProbs, quantileFit)
+  }
+
+  /** Result of [[scan]]: the row count, the non-null count per counted
+    * column, the stats per stats column (no Sketch boundaries yet) and
+    * the values of the extra aggregates.
+    */
+  private[prep] final case class Scan(total: Long, nonNull: Map[String, Long],
+                                      stats: Map[String, NumColStats], extra: Row)
+
+  /** ONE global aggregate (two jobs under AQE): the row count, the non-null
+    * count of every `counted` column, then min/max/mean/std of every
+    * `stats` input after [[replaceInf]] (+ the Exact or TDigest
+    * boundaries), then `extra`. Every aggregate reads one column only,
+    * so a column's stats do not depend on which columns share the pass.
+    */
+  private[prep] def scan(
+      df: DataFrame,
+      counted: Seq[String],
+      stats: Seq[(String, Column)],
+      quantileProbs: Seq[Double] = Nil,
+      quantileFit: QuantileFitMode = QuantileFitMode.Exact,
+      extra: Seq[Column] = Nil,
+  ): Scan = {
+    val withQ = quantileProbs.nonEmpty && quantileFit != QuantileFitMode.Sketch
+    val statAggs = stats.flatMap { case (_, v) =>
+      val c = replaceInf(v)
       val qAgg = quantileFit match {
-        case _ if quantileProbs.isEmpty => Nil
-        case QuantileFitMode.Sketch     => Nil // separate bucket-count job
+        case _ if !withQ             => Nil
         case QuantileFitMode.TDigest =>
-          Seq(percentile_approx(col(c), lit(quantileProbs.toArray), lit(10000)).as(s"${c}__q"))
-        case QuantileFitMode.Exact =>
-          Seq(percentile(col(c), lit(quantileProbs.toArray)).as(s"${c}__q"))
+          Seq(percentile_approx(c, lit(quantileProbs.toArray), lit(10000)))
+        case _                       => Seq(percentile(c, lit(quantileProbs.toArray))) // Exact
       }
-      Seq(
-        min(col(c)).as(s"${c}__min"),
-        max(col(c)).as(s"${c}__max"),
-        avg(col(c)).as(s"${c}__mean"),
-        stddev_samp(col(c)).as(s"${c}__std"),
-      ) ++ qAgg
+      Seq(min(c), max(c), avg(c), stddev_samp(c)) ++ qAgg
     }
-    val row = cleaned.agg(aggs.head, aggs.tail: _*).head()
-    // Sketch boundaries: unpivot to (column, value) and run ONE
-    // (column, geometric-bucket) count aggregation — map-side combined,
-    // so the shuffle carries #cols × #occupied-buckets rows, not data.
-    // The boundary for prob p is the first bucket representative whose
-    // cumulative count reaches p·n (identical rule to the per-key
-    // sketch profile, replayable in SQL).
-    val sketchQs: Map[String, Seq[Double]] =
-      if (quantileProbs.isEmpty || quantileFit != QuantileFitMode.Sketch) Map.empty
-      else {
-        val long = cleaned.select(explode(array(cols.map(c =>
-          struct(lit(c).as("f"), col(c).cast("double").as("v"))): _*)).as("e"))
-          .select(col("e.f").as("f"), col("e.v").as("v"))
-          .where(col("v").isNotNull)
-        val named = quantileProbs.zipWithIndex.map { case (p, i) => s"__q$i" -> p }
-        graft.operators.QuantileSketch.profile(long, "f", "v", named)
-          .collect().map(r => r.getAs[String]("f") ->
-            named.map { case (nm, _) => r.getAs[Double](nm) }).toMap
-      }
-    def d(n: String): Double = row.getAs[Any](n) match {
-      case null               => Double.NaN
+    val aggs = (count(lit(1)) +: counted.map(c => count(col(c)))) ++ statAggs ++ extra
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    def d(i: Int): Double = row.get(i) match {
+      case null                => Double.NaN
       case x: java.lang.Number => x.doubleValue()
     }
-    cols.map { c =>
-      val qs =
-        if (quantileProbs.isEmpty) Nil
-        else if (quantileFit == QuantileFitMode.Sketch) sketchQs.getOrElse(c, Nil)
-        else row.getAs[scala.collection.Seq[Double]](s"${c}__q").toSeq
-      c -> NumColStats(d(s"${c}__min"), d(s"${c}__max"), d(s"${c}__mean"), d(s"${c}__std"), qs)
+    val base = 1 + counted.size
+    val width = if (withQ) 5 else 4
+    val parsed = stats.zipWithIndex.map { case ((c, _), k) =>
+      val i = base + k * width
+      val qs = if (!withQ || row.isNullAt(i + 4)) Nil
+        else row.getAs[scala.collection.Seq[Double]](i + 4).toSeq
+      c -> NumColStats(d(i), d(i + 1), d(i + 2), d(i + 3), qs)
     }.toMap
+    Scan(row.getLong(0), counted.zipWithIndex.map { case (c, i) => c -> row.getLong(1 + i) }.toMap,
+      parsed, Row.fromSeq(row.toSeq.drop(base + stats.size * width)))
   }
+
+  /** Sketch boundaries: unpivot the `inputs` to (column, value) and run
+    * ONE (column, geometric-bucket) count aggregation — map-side
+    * combined, so the shuffle carries #cols × #occupied-buckets rows,
+    * not data. The boundary for prob p is the first bucket
+    * representative whose cumulative count reaches p·n (identical rule
+    * to the per-key sketch profile, replayable in SQL). Other modes
+    * return `stats` unchanged, with no job.
+    */
+  private[prep] def sketched(
+      df: DataFrame,
+      stats: Map[String, NumColStats],
+      inputs: Seq[(String, Column)],
+      quantileProbs: Seq[Double],
+      quantileFit: QuantileFitMode,
+  ): Map[String, NumColStats] =
+    if (quantileProbs.isEmpty || quantileFit != QuantileFitMode.Sketch || inputs.isEmpty) stats
+    else {
+      val long = df.select(explode(array(inputs.map { case (c, v) =>
+        struct(lit(c).as("f"), replaceInf(v).cast("double").as("v")) }: _*)).as("e"))
+        .select(col("e.f").as("f"), col("e.v").as("v"))
+        .where(col("v").isNotNull)
+      val named = quantileProbs.zipWithIndex.map { case (p, i) => s"__q$i" -> p }
+      val qs = graft.operators.QuantileSketch.profile(long, "f", "v", named)
+        .collect().map(r => r.getAs[String]("f") ->
+          named.map { case (nm, _) => r.getAs[Double](nm) }).toMap
+      stats.map { case (c, s) => c -> s.copy(quantiles = qs.getOrElse(c, Nil)) }
+    }
 
   /** Stateless fill using fit-time stats (mean/min/max) or constants. */
   def fill(c: Column, strategy: FillStrategy, stats: => NumColStats): Column =

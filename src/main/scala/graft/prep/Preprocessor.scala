@@ -127,12 +127,7 @@ final class PrepModel(
         }
     }
 
-  private def rawEpoch(c: String): Column = {
-    val ts = datetimeFormats.get(c)
-      .map(f => DatetimeTransformer.parse(col(c), f))
-      .getOrElse(col(c))
-    DatetimeTransformer.toEpochSeconds(ts)
-  }
+  private def rawEpoch(c: String): Column = DatetimeTransformer.epoch(c, datetimeFormats.get(c))
 
   private def datetimeExpr(c: String): Column = {
     // Null interpolation after epoch conversion, rows ordered by the
@@ -257,9 +252,9 @@ final class PrepModel(
 /** Orchestrator (reference: preprocessor.py `Preprocessor`): fit infers
   * feature types, detects string datetimes, runs feature selection,
   * fits numerical stats + scalers + bounded category registries and the
-  * optional target encoder — a FIXED number of full-scan aggregation
-  * jobs regardless of column count, each collecting O(columns) driver
-  * state. No per-column jobs, no unbounded collects.
+  * optional target encoder — two full scans regardless of column count
+  * (plus the Sketch and label-encoder passes when configured), each
+  * collecting O(columns) driver state. No unbounded collects.
   */
 object Preprocessor {
 
@@ -293,6 +288,21 @@ object Preprocessor {
     feats.select((columnId +: ordered).map(org.apache.spark.sql.functions.col): _*)
   }
 
+  /** Fits the model. The job plan, fixed by the schema:
+    *   1. one shuffle-free probe per string column
+    *      ([[DatetimeTransformer.detectFormat]], a top-level limit);
+    *   2. one global stats aggregate over all features
+    *      ([[NumericalTransformer.scan]]; two jobs under AQE);
+    *   3. one value-count aggregate over the categorical columns
+    *      ([[CategoricalTransformer.countStats]]; three jobs under AQE,
+    *      none without categorical columns), which also builds the bloom
+    *      filters when `unseenLabels = "error"`;
+    *   4. only when configured: the Sketch bucket-count job
+    *      (`quantileFit = Sketch` with Quantile/KBins scaling) and the
+    *      label-encoder distinct (Classification target).
+    * Otherwise steps 2 and 3 are the only full scans; the model is a
+    * handful of doubles, the bounded keep sets and the blooms.
+    */
   def fit(df: DataFrame, config: PrepConfig = PrepConfig()): PrepModel = {
     require(config.catLabelsThreshold >= 0 && config.catLabelsThreshold <= 1,
       "Invalid value for cat_labels_threshold")
@@ -315,60 +325,55 @@ object Preprocessor {
     var datetime    = schema.fieldNames.toSeq.filter(c => types.get(c).contains(FeatureTypes.Datetime))
     val boolean     = schema.fieldNames.toSeq.filter(c => types.get(c).contains(FeatureTypes.Boolean_))
 
-    // String columns that parse as datetimes move over
-    // (datetime_transformer.py:57-80): driver-side 100-row probe each.
+    // 1. Probes: string columns that parse as datetimes move over
+    // (datetime_transformer.py:57-80) — one shuffle-free job each.
     val datetimeFormats = categorical.flatMap { c =>
       DatetimeTransformer.detectFormat(df, c).map(c -> _)
     }.toMap
     categorical = categorical.filterNot(datetimeFormats.contains)
     datetime = datetime ++ datetimeFormats.keys.toSeq.sorted
 
-    // Missing-share drop (one narrow agg over the feature columns).
-    val featureCols = numerical ++ categorical ++ datetime ++ boolean
-    val missingDropped: Map[String, String] =
-      if (featureCols.isEmpty) Map.empty
-      else {
-        val aggs = count(lit(1)).as("__n") +:
-          featureCols.map(c => count(col(c)).as(c))
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        val total = row.getAs[Long]("__n").toDouble
-        if (total == 0) Map.empty
-        else featureCols.flatMap { c =>
-          val nullShare = 1.0 - row.getAs[Long](c) / total
-          if (nullShare > config.missingValuesThreshold)
-            Some(c -> f"missing share > ${config.missingValuesThreshold}")
-          else None
-        }.toMap
-      }
-    numerical   = numerical.filterNot(missingDropped.contains)
-    categorical = categorical.filterNot(missingDropped.contains)
-    datetime    = datetime.filterNot(missingDropped.contains)
-    val booleanKept = boolean.filterNot(missingDropped.contains)
-
-    // ONE stats pass over numerical + datetime-epoch columns (also
-    // feeds the selector's single-value check — no second aggregation).
+    // 2. ONE global aggregate: row count, per-feature non-null counts
+    // (missing-share drop), stats of every numerical and datetime-epoch
+    // column (scaling + the selector's single-value check) and the
+    // regression target's range. Stats of columns dropped below are
+    // computed and discarded: each aggregate reads one column only.
     val quantileProbs = config.scaling match {
       case Scaling.Quantile(n, _) => (0 until n).map(i => i.toDouble / (n - 1))
       case Scaling.KBins(n)       => (1 until n).map(i => i.toDouble / n)
       case _                      => Nil
     }
-    val epochified = df.select(
-      numerical.map(col) ++
-        datetime.map { c =>
-          val ts = datetimeFormats.get(c).map(f => DatetimeTransformer.parse(col(c), f))
-            .getOrElse(col(c))
-          DatetimeTransformer.toEpochSeconds(ts).as(c)
-        }: _*)
-    val allStatCols = numerical ++ datetime
-    val numStats =
-      if (allStatCols.isEmpty) Map.empty[String, NumColStats]
-      else NumericalTransformer.fit(epochified, allStatCols, quantileProbs, config.quantileFit)
+    val featureCols = numerical ++ categorical ++ datetime ++ boolean
+    val statInputs = numerical.map(c => c -> col(c)) ++
+      datetime.map(c => c -> DatetimeTransformer.epoch(c, datetimeFormats.get(c)))
+    val regressionTarget = config.targetColumn.filter(_ => config.mlTask.contains(MlTask.Regression))
+    val scan = NumericalTransformer.scan(df, featureCols, statInputs, quantileProbs,
+      config.quantileFit, regressionTarget.toSeq.flatMap(t =>
+        Seq(min(col(t)).cast(DoubleType), max(col(t)).cast(DoubleType))))
+    val total = scan.total.toDouble
+    val missingDropped: Map[String, String] =
+      if (total == 0) Map.empty
+      else featureCols.flatMap { c =>
+        val nullShare = 1.0 - scan.nonNull(c) / total
+        if (nullShare > config.missingValuesThreshold)
+          Some(c -> f"missing share > ${config.missingValuesThreshold}")
+        else None
+      }.toMap
+    numerical   = numerical.filterNot(missingDropped.contains)
+    categorical = categorical.filterNot(missingDropped.contains)
+    datetime    = datetime.filterNot(missingDropped.contains)
+    val booleanKept = boolean.filterNot(missingDropped.contains)
+    val keptInputs = statInputs.filterNot { case (c, _) => missingDropped.contains(c) }
+    val numStats = NumericalTransformer.sketched(df,
+      keptInputs.map { case (c, _) => c -> scan.stats(c) }.toMap, keptInputs,
+      quantileProbs, config.quantileFit)
 
-    // Feature selection: single-value + dominant drops, rare-label models.
-    val selection = FeatureSelector.fit(df, numerical, categorical,
-      config.catLabelsThreshold, config.maxCategories,
-      knownNumStats = if (numerical.isEmpty) None else Some(numStats),
-      buildBloom = config.unseenLabels == "error")
+    // 3. ONE value-count aggregate for the categorical columns, then
+    // the single-value, dominant and rare-label decisions.
+    val selection = FeatureSelector.select(numerical, numStats, categorical,
+      CategoricalTransformer.countStats(df, categorical, total, config.catLabelsThreshold,
+        buildBloom = config.unseenLabels == "error"),
+      total, config.maxCategories)
     numerical   = numerical.filterNot(selection.dropped.contains)
     categorical = categorical.filterNot(selection.dropped.contains)
     val statCols = numerical ++ datetime
@@ -393,9 +398,8 @@ object Preprocessor {
     val (targetClasses, targetRange) = (config.mlTask, config.targetColumn) match {
       case (Some(MlTask.Classification), Some(t)) =>
         (Some(CategoricalTransformer.fitLabelEncoder(df, t)), None)
-      case (Some(MlTask.Regression), Some(t)) =>
-        val r = df.agg(min(col(t)).cast(DoubleType), max(col(t)).cast(DoubleType)).head()
-        (None, Some((r.getDouble(0), r.getDouble(1))))
+      case (Some(MlTask.Regression), Some(_)) =>
+        (None, Some((scan.extra.getDouble(0), scan.extra.getDouble(1))))
       case _ => (None, None)
     }
 

@@ -14,15 +14,17 @@ object ColumnBridge {
 
   /** Bloom filter aggregate over xxhash64(value) — the same internal
     * pair Spark's runtime row-level filters use, so build and probe
-    * hash identically.
+    * hash identically. Null values are skipped, so a conditional
+    * `when(keep, value)` input filters inside the aggregate; a group
+    * with no non-null value yields null.
     */
   def bloomFilterAgg(value: Column, estimatedItems: Long, numBits: Long): Column = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.functions.xxhash64
+    import org.apache.spark.sql.functions.{when, xxhash64}
     column(new BloomFilterAggregate(
-      expression(xxhash64(value)), Literal(estimatedItems), Literal(numBits))
-      .toAggregateExpression())
+      expression(when(value.isNotNull, xxhash64(value))), Literal(estimatedItems),
+      Literal(numBits)).toAggregateExpression())
   }
 
   /** Bridge to `private[sql]` Dataset.ofRows — the standard

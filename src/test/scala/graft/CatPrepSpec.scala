@@ -65,6 +65,15 @@ class CatPrepSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("unseen label")))
   }
 
+  test("bloom: only real labels are inserted; a column without one has no bloom") {
+    val df = Seq(("a", ""), (null, " "), ("b", null)).toDF("x", "blank")
+    val m = CategoricalTransformer.fit(df, Seq("x", "blank"), threshold = 0.0, buildBloom = true)
+    assert(m("blank").bloom.isEmpty)
+    val probe = Seq("a", "b", "zz").toDF("v").select(org.apache.spark.sql.graft.ColumnBridge
+      .bloomMightContain(m("x").bloom.get, col("v"))).as[Boolean].collect()
+    assert(probe.toSeq == Seq(true, true, false))
+  }
+
   test("oneHotStrict: brand-new label raises even when rare labels shrink to other") {
     // 50a/49b/1c at 2%: c is rare -> hasRare, categories [a,b,other]
     val vals = Seq.fill(50)("a") ++ Seq.fill(49)("b") ++ Seq("c")

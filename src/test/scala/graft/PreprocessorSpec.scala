@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.graft.JobCounter
 import graft.prep._
 
 class PreprocessorSpec extends SparkSpec {
@@ -195,5 +197,51 @@ class PreprocessorSpec extends SparkSpec {
     val out = m.transform(df).orderBy("sk", "t").collect()
     assert(out(1).getDouble(2) == 2.0)  // interpolated
     assert(out(3).isNullAt(2))          // leading null stays null
+  }
+
+  /** Two partitions of 200 rows: the first holds >= 100 non-null values
+    * of every string column, so each probe takes one job.
+    */
+  private def budgetFixture(extraNum: Int, extraCat: Int): DataFrame = {
+    val id = col("id")
+    val extras =
+      (1 to extraNum).map(i => (id * (i + 1) % 17).cast("double").as(s"n$i")) ++
+        (1 to extraCat).map(i => concat(lit(s"k$i-"), (id % (i + 2)).cast("string")).as(s"k$i"))
+    spark.range(0, 400, 1, 2).select(Seq(
+      id,
+      when(id % 9 === 0, lit(null)).otherwise(id * 0.5).as("v"),
+      when(id % 11 === 0, lit(null)).otherwise(concat(lit("c"), (id % 5).cast("string"))).as("c"),
+      date_format(date_add(lit("2021-01-01").cast("date"), id.cast("int")), "yyyy-MM-dd").as("d"),
+      timestamp_seconds(lit(1600000000L) + id * 60).as("t"),
+      (id % 2 === 0).as("b"),
+    ) ++ extras: _*)
+  }
+
+  private def fitJobs(df: DataFrame): Int =
+    JobCounter(spark.sparkContext)(Preprocessor.fit(df, PrepConfig(excludedCols = Seq("id"))))._2
+
+  test("fit job budget: one probe per string column, one stats and one value-count aggregate") {
+    // 2 probes (c, d) + 2 for the global aggregate + 3 for the value counts
+    val base = fitJobs(budgetFixture(0, 0))
+    assert(base == 7)
+    // more numerical columns ride in the same global aggregate
+    assert(fitJobs(budgetFixture(3, 0)) == base)
+    // each extra string column adds its probe job only
+    assert(fitJobs(budgetFixture(3, 3)) == base + 3)
+  }
+
+  test("datetime probe: first sampleRows values decide, one job, all-null is None") {
+    // one partition: 100 parseable values, then unparseable ones
+    val id = col("id")
+    val df = spark.range(0, 160, 1, 1).select(
+      when(id < 100, date_format(date_add(lit("2020-02-01").cast("date"), id.cast("int")),
+        "yyyy-MM-dd")).otherwise(lit("not a date")).as("s"))
+    val (fmt, jobs) = JobCounter(spark.sparkContext)(DatetimeTransformer.detectFormat(df, "s"))
+    assert(fmt.contains("yyyy-MM-dd"))
+    assert(jobs == 1)
+    // a sample that reaches the unparseable tail is not a datetime column
+    assert(DatetimeTransformer.detectFormat(df, "s", sampleRows = 101).isEmpty)
+    val allNull = spark.range(0, 50, 1, 2).select(lit(null).cast("string").as("s"))
+    assert(DatetimeTransformer.detectFormat(allNull, "s").isEmpty)
   }
 }
