@@ -159,7 +159,7 @@ object TsQueries {
     s"sqrt(($re) * ($re) + ($im) * ($im))"
   }
   private def fftAbsSql(k: Int): String = s"round(${fftAbsRawSql(k)}, 6)"
-  // AR(1) OLS moments (mirror TsFeatures.ar1Slope/ar1Intercept)
+  // AR(1) OLS moments (mirror TsFeatures.ar1Fit)
   private val ar1SxSql = "sum(prev::DECIMAL(18,6))::DOUBLE"
   private val ar1SySql =
     "sum((CASE WHEN prev IS NOT NULL THEN v END)::DECIMAL(18,6))::DOUBLE"
@@ -579,7 +579,7 @@ object TsQueries {
         FROM f0_$vc)"""
 
   /** Multi-sensor extraction (reference preprocessor.py:558-638
-    * extracts over the WHOLE frame): the full 37-calculator matrix for
+    * extracts over the WHOLE frame): the full 82-feature matrix for
     * every value column in ONE widened window+agg — same single
     * shuffle as one sensor. The oracle replays one enrichment CTE per
     * column (DuckDB has no such fusion) and joins the per-column

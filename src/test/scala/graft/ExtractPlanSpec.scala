@@ -1,6 +1,9 @@
 package graft
 
+import graft.operators.TsFeatures
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Exchange-count guards for the whole extract family. The single-
@@ -78,5 +81,42 @@ class ExtractPlanSpec extends SparkSpec {
             jobs.map { case (f, c) => s"$f=$c" }.mkString(", "))
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Expression nodes of every operator of the plan. */
+  private def expressionNodes(plan: LogicalPlan): Long =
+    plan.collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }
+      .map(_.toLong).sum
+
+  /** Projections between the plan's root and its (single) aggregate. */
+  private def projectsAboveAggregate(plan: LogicalPlan): Int = plan match {
+    case _: Aggregate      => 0
+    case Project(_, child) => 1 + projectsAboveAggregate(child)
+    case other             => fail(s"unexpected ${other.nodeName} above the aggregate")
+  }
+
+  test("extractMulti's analyzed plan stays inside its size budget") {
+    // driver-side analysis and optimization walk every expression node
+    // on every action, so the node count is the build cost's measure.
+    // Budgets measured on the per-stage-projection plan (4,764 and
+    // 14,068 nodes; the per-withColumn plan it replaced had 13,848 and
+    // 47,653): one value column is the benchmark's shape, three is
+    // ts_features_multi's.
+    val e = Tables.events(spark, sf).select(col("user_id"), col("ts"),
+      col("value").as("va"), (col("value") * lit(0.5) + lit(3.25)).as("vb"),
+      abs(col("value")).as("vc"))
+    def analyzed(valueCols: Seq[String]) =
+      TsFeatures.extractMulti(e, "user_id", Seq("ts"), valueCols).queryExecution.analyzed
+    val (one, three) = (analyzed(Seq("va")), analyzed(Seq("va", "vb", "vc")))
+    val budgets = Seq((one, 1, 4900L), (three, 3, 14500L))
+    for ((plan, n, budget) <- budgets)
+      assert(expressionNodes(plan) <= budget,
+        s"$n value column(s): ${expressionNodes(plan)} analyzed expression nodes, budget $budget")
+    // the closed forms and the derived recursion cover all value
+    // columns in the same selects: adding columns widens them, never
+    // deepens the plan
+    assert(projectsAboveAggregate(one) == 3 && projectsAboveAggregate(three) == 3,
+      s"projections above the aggregate: ${projectsAboveAggregate(one)} for one value " +
+        s"column, ${projectsAboveAggregate(three)} for three (expected 3 for both)")
   }
 }

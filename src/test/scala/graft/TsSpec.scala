@@ -521,4 +521,60 @@ class TsSpec extends SparkSpec {
       .orderBy("t").collect().map(_.getDouble(3))
     assert(math.abs(neg(1) - (0.3 * -20 + 0.7 * -10.0)) <= 2e-6)
   }
+
+  // the extract family's internal columns live under the reserved `__`
+  // prefix, so input columns named like common internals must just work
+  private def namesFixture = {
+    import spark.implicits._
+    Seq(("A", 1L, 1.0), ("A", 2L, 2.0), ("A", 3L, 4.0), ("A", 4L, 8.0), ("A", 5L, 3.0),
+      ("B", 1L, 5.0), ("B", 2L, 5.0), ("B", 3L, -1.5)).toDF("sk", "t", "v")
+  }
+
+  test("extract accepts series keys and order columns named idx, rn or ord") {
+    def cells(f: org.apache.spark.sql.DataFrame) =
+      f.orderBy(f.columns.head).collect().toSeq.map(_.toSeq.tail)
+    val base = cells(TsFeatures.extract(namesFixture, "sk", Seq("t"), "v"))
+    // every name once as the series key and once as the order column
+    for ((key, order) <- Seq("rn" -> "idx", "ord" -> "rn", "idx" -> "ord")) {
+      val in = namesFixture.withColumnRenamed("sk", key).withColumnRenamed("t", order)
+      assert(cells(TsFeatures.extract(in, key, Seq(order), "v")) == base,
+        s"series key $key / order column $order changed the features")
+    }
+  }
+
+  test("extractMulti refuses a repeated value column, naming it") {
+    val e = intercept[IllegalArgumentException] {
+      TsFeatures.extractMulti(namesFixture, "sk", Seq("t"), Seq("v", "v"))
+    }
+    assert(e.getMessage.contains("value column `v` is listed more than once"))
+  }
+
+  test("extractWindowed refuses a series key or order column named bucket") {
+    import org.apache.spark.sql.functions.col
+    val df = namesFixture.withColumn("ts", col("t") * 1000L)
+    val asKey = intercept[IllegalArgumentException] {
+      TsFeatures.extractWindowed(df.withColumnRenamed("sk", "bucket"), "bucket", "ts",
+        Seq("t"), "v", 2000L)
+    }
+    assert(asKey.getMessage.contains("series key `bucket`"))
+    val asOrder = intercept[IllegalArgumentException] {
+      TsFeatures.extractWindowed(df.withColumnRenamed("t", "bucket"), "sk", "ts",
+        Seq("bucket"), "v", 2000L)
+    }
+    assert(asOrder.getMessage.contains("order column `bucket`"))
+  }
+
+  test("the extract family refuses input columns under the reserved __ prefix") {
+    val e = intercept[IllegalArgumentException] {
+      TsFeatures.extract(namesFixture.withColumnRenamed("t", "__t"), "sk", Seq("__t"), "v")
+    }
+    assert(e.getMessage.contains("column `__t`"))
+  }
+
+  test("extract refuses a series key that shares a feature's output name") {
+    val e = intercept[IllegalArgumentException] {
+      TsFeatures.extract(namesFixture.withColumnRenamed("sk", "n"), "n", Seq("t"), "v")
+    }
+    assert(e.getMessage.contains("output column `n` would appear twice"))
+  }
 }
