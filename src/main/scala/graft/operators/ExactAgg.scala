@@ -43,21 +43,15 @@ object ExactAgg {
     * int64 arithmetic end-to-end. Assumes |term|·n·1e6 fits int64.
     */
   def microAvg(e: Column): Column =
-    microQuotient(microSum(e), count(e))
-
-  /** The aggregate half of [[microAvg]]: the sum of the terms in integer
-    * microunits, for callers that evaluate [[microQuotient]] after the
-    * aggregate.
-    */
-  def microSum(e: Column): Column =
-    sum(round(e * lit(1e6), 0).cast("long"))
+    microQuotient(sum(round(e * lit(1e6), 0).cast("long")), count(e))
 
   /** [[microAvg]] as a WINDOW aggregate (e.g. the per-series mean that
     * feeds central moments) — same exact int64 arithmetic, evaluated
     * over `w` instead of a grouping.
     */
   def microAvgWindow(e: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    microQuotient(microSum(e).over(w), count(e).over(w))
+    microQuotient(sum(round(e * lit(1e6), 0).cast("long")).over(w),
+      count(e).over(w))
 
   /** Half-up s/n in pure int64 (shared by the grouped and windowed
     * micro means, and by any caller carrying a precomputed micro sum —
@@ -86,26 +80,15 @@ object ExactAgg {
     * n ≤ ~2.4e5 per series.)
     */
   def trendFit(v: Column, idx: Column): (Column, Column) = {
-    val (sy, sxy) = trendSums(v, idx)
-    trendClosedForm(count(v), sy, sxy)
-  }
-
-  /** The exact sums [[trendFit]] reads besides count(v): Σy and Σxy. */
-  def trendSums(v: Column, idx: Column): (Column, Column) =
-    (sum(v.cast("decimal(18,6)")).cast("double"),
-      sum((idx * v).cast("decimal(28,6)")).cast("double"))
-
-  /** [[trendFit]]'s (slope, intercept) from count(v) and its
-    * [[trendSums]] — also valid over the named outputs of an aggregate
-    * that emitted them.
-    */
-  def trendClosedForm(cnt: Column, sy: Column, sxy: Column): (Column, Column) = {
-    val n = cnt.cast("double")
+    val n = count(v).cast("double")
+    val cnt = count(v)
     val sx = ((cnt * (cnt - 1) - pmod(cnt * (cnt - 1), lit(2L))) / 2)
     val sx2 = {
       val p = cnt * (cnt - 1) * (cnt * 2 - 1)
       (p - pmod(p, lit(6L))) / 6
     }
+    val sy = sum(v.cast("decimal(18,6)")).cast("double")
+    val sxy = sum((idx * v).cast("decimal(28,6)")).cast("double")
     val slope = try_divide(n * sxy - sx * sy, n * sx2 - sx * sx)
     val intercept = try_divide(sy - slope * sx, n)
     (slope, intercept)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -32,16 +32,16 @@ object GroupedApply {
     require(keyCols.nonEmpty, "grouped apply needs at least one key column")
     val spark = df.sparkSession
     val inSchema = df.schema
-    val keyIdx = keyCols.map(inSchema.fieldIndex)
     val sortIdx = sortCols.map(inSchema.fieldIndex)
     val keySchema = StructType(keyCols.map(c => inSchema(inSchema.fieldIndex(c))))
     val keyEnc: Encoder[Row] = Encoders.row(keySchema)
     val rowEnc: Encoder[Row] = Encoders.row(inSchema)
     val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val ds: Dataset[Row] = df.as(rowEnc)
-    // groupByKey shuffles once on the key; sortBy inside the group is a
-    // per-executor sort of one group's rows (bounded by group size)
-    ds.groupByKey(r => Row.fromSeq(keyIdx.map(r.get).toIndexedSeq))(keyEnc)
+    // grouping by the key columns shuffles once on them, with no
+    // appended key column to serialize (as groupByKey would need); the
+    // sort inside the group is a per-executor sort of one group's rows
+    // (bounded by group size)
+    df.groupBy(keyCols.map(col): _*).as[Row, Row](keyEnc, rowEnc)
       .flatMapSortedGroups(sortIdx.map(i => col(inSchema(i).name)): _*) {
         (key, it) => fn(key, it)
       }(outEnc)

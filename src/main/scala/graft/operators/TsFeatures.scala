@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   * order-dependent features (changes, autocorrelation, trend) first
   * apply a window partitioned BY THE SAME KEY, so the subsequent
   * groupBy reuses the exchange — one shuffle total, never a global
-  * sort. Std/var are population (ddof=0) to match tsfresh/numpy.
+  * sort. The full feature matrix ([[extract]] and its multi-column and
+  * windowed forms) is one sorted per-series pass after that single
+  * shuffle instead. Std/var are population (ddof=0) to match
+  * tsfresh/numpy.
   */
 object TsFeatures {
 
@@ -122,49 +125,37 @@ object TsFeatures {
     )
   }
 
-  /** The full feature matrix in ONE shuffle (reference:
+  /** The full tsfresh feature matrix, one row per series (reference:
     * preprocessor.py:558-638 `extract_ts_features` / tsfresh
-    * `extract_features`): window-enrich (lags/lead, series stats, row
-    * index, above/below-mean run lengths) on the series key, then a
-    * single groupBy on the SAME key computes every feature — all
-    * windows share one partitioning, so the groupBy reuses the
-    * window's hash exchange and the whole matrix — 82 features per
-    * value column, 71 from the aggregate and 11 derived after it —
-    * costs ONE shuffle.
+    * `extract_features`): 82 features of the value column, by
+    * tsfresh's feature_calculators definitions — the distribution and
+    * change statistics, quantiles, autocorrelations to lag 4, trend and
+    * AR fits, run lengths, peaks, crossings, entropies, Benford, the
+    * k = 0..8 magnitude spectrum and the spectral and Yule-Walker
+    * features derived from it (the full list is `ExtractKernel.Features`).
     *
-    * Calculators follow tsfresh feature_calculators: the round-1 set
-    * plus quantiles, abs max, cid_ce, number_peaks(1),
-    * longest_strike_above/below_mean (run lengths via rn minus the last
-    * non-qualifying rn — no extra partition key, no second shuffle),
-    * energy_ratio chunk 0 of 10, first_location_of_maximum,
-    * last_location_of_minimum, ratio_beyond_r_sigma(1),
-    * mean_second_derivative_central, and the nonlinearity, spectral,
-    * entropy and autoregressive tiers listed in [[featureAggs]] and
-    * [[withDerived]].
+    * Plan: ONE hash shuffle on the series key; each series' rows arrive
+    * sorted by `orderCols` and one sorted per-series pass
+    * ([[GroupedApply]] running `ExtractKernel`) computes every feature
+    * over primitive arrays. The value column is read as a double.
     *
-    * `pin`: pin the enrichment window stage's parallelism with an
-    * explicit keyed repartition (the matrixProfileProf §12m device).
-    * OPT-IN, because the right answer depends on the CONSUMER: a
-    * consumer that evaluates the full calculator battery (the
-    * relevance rows — their correlation collect needs every feature)
-    * wants the compute-dense window stage parallel; a consumer whose
-    * final action prunes the calculators (a bare count() keeps only
-    * the group keys) would pay the pinned exchange for a nearly-empty
-    * window stage — measured +0.5–0.9 s per extract-family row at
-    * sf0.1 when the pin was unconditional.
+    * Memory: one series' values live in one task — the same per-group
+    * footprint as the per-series value map Spark's `percentile` keeps —
+    * so series length, not table size, bounds it.
     */
   def extract(df: DataFrame, seriesKey: String, orderCols: Seq[String],
-              valueCol: String, pin: Boolean = false): DataFrame =
-    extractFrame(df, Seq(seriesKey), orderCols, Seq(valueCol), _ => identity, pin)
+              valueCol: String): DataFrame =
+    extractFrame(df, Seq(seriesKey), orderCols, Seq(valueCol), _ => identity)
 
   /** WINDOWED extraction: the full calculator matrix per (series,
     * tumbling time bucket) — "features over trailing windows", the
     * rolling-feature shape an online-ML pipeline materializes. The
     * bucket is integer nanosecond division (never a double divide on
     * 2^60-scale nanos); the composite (series, bucket) key rides the
-    * SAME one-Exchange enrichment+agg plan as [[extract]]. The output's
-    * `bucket` column is computed here, so no input column passed in may
-    * be named `bucket`.
+    * same one-shuffle sorted per-series pass as [[extract]], with the
+    * same per-(series, bucket) memory contract. The output's `bucket`
+    * column is computed here, so no input column passed in may be named
+    * `bucket`.
     */
   def extractWindowed(df: DataFrame, seriesKey: String, tsNanosCol: String,
                       orderCols: Seq[String], valueCol: String,
@@ -179,509 +170,67 @@ object TsFeatures {
 
   /** Multi-column extraction (the reference/tsfresh shape: features
     * for EVERY value column of the frame, reference
-    * preprocessor.py:558-638 extracts over the whole frame): ONE
-    * widened window enrichment + ONE groupBy computes all features for
-    * all value columns, `<col>_`-prefixed. All window specs share the
-    * series-key partitioning, and the groupBy reuses the same exchange
-    * — so an N-sensor frame costs exactly the same single shuffle as
-    * one sensor, not N shuffles + a join chain. Calculators are
-    * literally shared with the singly-columned (oracle-checked)
-    * [[extract]] path via [[featureAggs]].
+    * preprocessor.py:558-638 extracts over the whole frame), each
+    * `<col>_`-prefixed. The value columns ride the same one-shuffle
+    * sorted per-series pass as [[extract]] — an N-sensor frame costs
+    * the single shuffle of one sensor, not N shuffles + a join chain —
+    * and each series holds all N columns' values in its task.
     */
   def extractMulti(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                    valueCols: Seq[String]): DataFrame =
     extractFrame(df, Seq(seriesKey), orderCols, valueCols, i => n => s"${valueCols(i)}_$n")
 
-  /** Reserved name of an internal per-value-column column: the `__`
-    * prefix (refused on input columns) plus the value column's
-    * position, so neither a user column nor a repeated name can
-    * collide with it.
-    */
-  private def internal(i: Int, name: String): String = s"__${i}_$name"
-
-  /** The plan shared by the whole extract family, built in a constant
-    * number of projections whatever the number of value columns: the
-    * three enrichment selects ([[enrichedFrame]]), ONE groupBy emitting
-    * only primitive aggregates, one select evaluating every
-    * [[featureAggs]] closed form, and the [[withDerived]] selects.
-    * `out(i)` maps a feature name to value column i's output name.
+  /** The plan shared by the whole extract family: the used columns under
+    * reserved names, one [[GroupedApply]] that emits the series keys plus
+    * ONE array of every value column's features (counts and flags as
+    * doubles, so the output encoder stays narrow), and one select that
+    * names and types each feature. Output order: the keys, every value
+    * column's first features, then every value column's
+    * `ExtractKernel.Late` last ones. `out(i)` maps a feature name to value
+    * column i's output name.
     */
   private def extractFrame(df: DataFrame, seriesKeys: Seq[String], orderCols: Seq[String],
-                           valueCols: Seq[String], out: Int => String => String,
-                           pin: Boolean = false): DataFrame = {
+                           valueCols: Seq[String], out: Int => String => String): DataFrame = {
+    import org.apache.spark.sql.types._
     require(valueCols.nonEmpty, "no value columns to extract")
     for (c <- seriesKeys ++ orderCols ++ valueCols)
       require(!c.startsWith("__"), s"column `$c`: the `__` prefix is reserved for internal columns")
     val repeated = valueCols.diff(valueCols.distinct)
     require(repeated.isEmpty, s"value column `${repeated.head}` is listed more than once")
-    val cols = valueCols.indices.map(i => featureAggs(i, out(i)))
-    val names = seriesKeys ++ cols.flatMap(_._2.map(_._1)) ++
-      valueCols.indices.flatMap(i => DerivedNames.map(out(i)))
+    val features = ExtractKernel.Features
+    val width = features.size
+    val early = width - ExtractKernel.Late
+    val slots = Seq(0 until early, early until width).flatMap(js =>
+      valueCols.indices.flatMap(i => js.map(j => (i, j))))
+    val names = seriesKeys ++ slots.map { case (i, j) => out(i)(features(j)._1) }
     val clashes = names.diff(names.distinct)
     require(clashes.isEmpty,
       s"output column `${clashes.head}` would appear twice: " +
         "a series key collides with a feature name")
-    val aggs = cols.flatMap(_._1)
-    val closed = enrichedFrame(df, seriesKeys, orderCols, valueCols, pin)
-      .groupBy(seriesKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      .select(seriesKeys.map(col) ++ cols.flatMap(_._2.map { case (n, c) => c.as(n) }): _*)
-    withDerived(closed, valueCols.indices.map(out))
-  }
-
-  /** Window-enrichment stage shared by the extract family, as three
-    * selects over the input:
-    *  1. per value column i the lags/lead and the per-series stats
-    *     `__i_{v,prev..prev4,nxt,mu,sd,mx,mn,cnt,sabs,cql,cqh,bd}`, plus
-    *     the shared `__ord`/`__rn`/`__idx`;
-    *  2. the |v|-descending ranks `__i_arn`;
-    *  3. the windows over stage-1 columns in series order (the run
-    *     lengths `__i_alen`/`__i_blen`, the running mass `__i_cabs`)
-    *     and the per-row histogram buckets `__i_bin` (binned entropy)
-    *     and `__i_pid` (ordinal pattern), so the aggregate counts
-    *     buckets instead of re-deriving them inside every conditional
-    *     sum.
-    * The ranks get their own select because Spark orders the window
-    * operators of one select by a hash of their specs: kept apart, the
-    * series-order windows of stage 3 always run last, so the aggregate
-    * consumes rows in series order and its floating-point sums are
-    * bit-stable for any number of value columns. Every window spec
-    * partitions by the series key, so Spark plans ONE exchange no
-    * matter how many value columns ride through.
-    */
-  private def enrichedFrame(df0: DataFrame, seriesKeys: Seq[String], orderCols: Seq[String],
-                            valueCols: Seq[String], pin: Boolean): DataFrame = {
-    val keys = seriesKeys.map(col)
-    val order = orderCols.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(order: _*)
-    val wAll = Window.partitionBy(keys: _*)
-    val back = w.rowsBetween(Window.unboundedPreceding, 0)
-    // (r17 A/B note: an UNCONDITIONAL parallelism pin here — the
-    // matrixProfileProf/pacfDurbin §12m device — was measured SLOWER
-    // across the benched extract rows (ts_features_extract
-    // 0.62→1.49 s, _multi 2.75→3.81, _windowed 0.89→1.18 at sf0.1):
-    // their count() action PRUNES the calculator battery down to the
-    // group keys, so those plans' window stages are nearly empty and
-    // the pinned exchange is pure overhead. Consumers that evaluate
-    // every calculator (the relevance collects) opt in via `pin` —
-    // see extract's doc.)
-    val df = if (pin) {
-      val nShuffle = df0.sparkSession.conf.get("spark.sql.shuffle.partitions",
-        df0.sparkSession.sparkContext.defaultParallelism.toString).toInt
-      df0.repartition(nShuffle, keys: _*)
-    } else df0
-    val perCol1 = valueCols.zipWithIndex.flatMap { case (vc, i) =>
-      val v = col(vc)
-      def as(c: Column, n: String) = c.as(internal(i, n))
-      Seq(
-        as(v, "v"),
-        as(lag(v, 1).over(w), "prev"),
-        as(lag(v, 2).over(w), "prev2"),
-        as(lag(v, 3).over(w), "prev3"),
-        as(lag(v, 4).over(w), "prev4"),
-        as(lead(v, 1).over(w), "nxt"),
-        as(avg(v).over(wAll), "mu"),
-        as(stddev_pop(v).over(wAll), "sd"),
-        as(max(v).over(wAll), "mx"),
-        as(min(v).over(wAll), "mn"),
-        as(count(v).over(wAll), "cnt"),
-        as(sum(abs(v)).over(wAll), "sabs"),
-        // per-series corridor bounds for change_quantiles(0.2, 0.8) —
-        // same unordered partition, so still no extra Exchange.
-        // ROUNDED to 6 dp: engines interpolate quantiles with
-        // different formulas (lo + (hi-lo)·f vs lo·(1-f) + hi·f) whose
-        // results differ in the low bits exactly when lo == hi — i.e.
-        // when a DATA value sits on the quantile — which is where the
-        // corridor membership test v <= bound flips (caught at sf0.1);
-        // rounding both engines' bounds lands them on the identical
-        // double before any comparison
-        as(round(percentile(v, lit(0.2)).over(wAll), 6), "cql"),
-        as(round(percentile(v, lit(0.8)).over(wAll), 6), "cqh"),
-        // first significant digit (null for 0/null values) — feeds
-        // benford_corr; a plain narrow expression, no window
-        as(when(abs(v) > 0, floor(abs(v) / pow(lit(10.0), floor(log10(abs(v)))))), "bd"))
+    val ordered = orderCols.indices.map(j => s"__o$j")
+    val in = df.select(seriesKeys.map(col) ++
+      orderCols.zip(ordered).map { case (c, o) => col(c).as(o) } ++
+      valueCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v$i") }: _*)
+    val nKeys = seriesKeys.size
+    val outSchema = StructType(in.schema.fields.take(nKeys) :+
+      StructField("__f", ArrayType(DoubleType)))
+    val series = GroupedApply(in, seriesKeys, ordered, outSchema) { (key, it) =>
+      val rows = it.toArray
+      val last = rows.length - 1
+      def order(r: Int) = ordered.indices.map(j => rows(r).get(nKeys + j))
+      var lastTie = last
+      while (lastTie > 0 && order(lastTie - 1) == order(last)) lastTie -= 1
+      val feats = valueCols.indices.flatMap { i =>
+        val c = nKeys + ordered.size + i
+        ExtractKernel(rows.map(r => if (r.isNullAt(c)) 0.0 else r.getDouble(c)),
+          rows.map(!_.isNullAt(c)), lastTie)
+      }
+      Iterator.single(Row.fromSeq(key.toSeq :+ feats))
     }
-    // order columns ride along so the later stages' windows can still
-    // sort by them; the last select drops them
-    val stage1 = df.select((seriesKeys ++ orderCols).distinct.map(col) ++ Seq(
-      struct(order: _*).as("__ord"),
-      row_number().over(w).as("__rn"),
-      (row_number().over(w) - 1).cast("double").as("__idx")) ++ perCol1: _*)
-    // per-column |v|-descending rank (for mean_n_absolute_max): SAME
-    // partitioning, different sort order — Spark adds a Sort inside the
-    // partition, never a second Exchange
-    val stage2 = stage1.select(col("*") +: valueCols.indices.map { i =>
-      val wAbs = Window.partitionBy(keys: _*)
-        .orderBy(abs(col(internal(i, "v"))).desc +: order: _*)
-      row_number().over(wAbs).as(internal(i, "arn"))
+    series.select(seriesKeys.map(col) ++ slots.zip(names.drop(nKeys)).map { case ((i, j), name) =>
+      val f = col("__f")(i * width + j)
+      (if (features(j)._2 == DoubleType) f else f.cast(features(j)._2)).as(name)
     }: _*)
-    val perCol3 = valueCols.indices.flatMap { i =>
-      def in(n: String) = col(internal(i, n))
-      def as(c: Column, n: String) = c.as(internal(i, n))
-      val (v, prev, prev2, mu, mn, mx) =
-        (in("v"), in("prev"), in("prev2"), in("mu"), in("mn"), in("mx"))
-      (Enriched :+ "arn").map(in) ++ Seq(
-        // run length ending at each row: rn minus the last rn that
-        // BROKE the run (same window partition+order as the lags)
-        as(col("__rn") - coalesce(last(when(!(v > mu), col("__rn")),
-          ignoreNulls = true).over(back), lit(0)), "alen"),
-        as(col("__rn") - coalesce(last(when(!(v < mu), col("__rn")),
-          ignoreNulls = true).over(back), lit(0)), "blen"),
-        // running |v| mass for index_mass_quantile — same frame
-        as(sum(abs(v)).over(back), "cabs"),
-        // tsfresh binned_entropy(10): the equal-width bin of [min, max];
-        // a constant series (min == max) lands every row in bin 0
-        as(when(mx > mn, least(floor((v - mn) / ((mx - mn) / 10)), lit(9)))
-          .otherwise(lit(0)), "bin"),
-        // tsfresh permutation_entropy (dim 3, tau 1): each consecutive
-        // triple (prev2, prev, v) classifies into an ordering pattern by
-        // three <= comparisons (ties folded deterministically — the
-        // same comparisons replay in SQL). Bit combos that violate
-        // transitivity never occur; their zero counts contribute nothing.
-        as(when(prev2.isNotNull,
-          when(prev2 <= prev, 4).otherwise(0) +
-            when(prev <= v, 2).otherwise(0) +
-            when(prev2 <= v, 1).otherwise(0)), "pid"))
-    }
-    stage2.select(keys ++ Seq(col("__ord"), col("__idx")) ++ perCol3: _*)
-  }
-
-  /** Stage-1 enrichment columns the aggregate reads. */
-  private val Enriched = Seq("v", "prev", "prev2", "prev3", "prev4", "nxt",
-    "mu", "sd", "mx", "mn", "cnt", "sabs", "cql", "cqh", "bd")
-
-  /** The aggregate outputs of one value column: each primitive
-    * aggregate registered once, under a reserved name, in first-use
-    * order; `apply` returns the column the closed forms read after the
-    * aggregate.
-    */
-  private final class Primitives(i: Int) {
-    private val named = scala.collection.mutable.LinkedHashMap.empty[String, Column]
-    def apply(name: String, agg: => Column): Column = {
-      val id = internal(i, name)
-      named.getOrElseUpdate(id, agg.as(id))
-      col(id)
-    }
-    def aggregates: Seq[Column] = named.values.toSeq
-  }
-
-  /** The 71 aggregate-level calculators over value column i of the
-    * enriched frame, split in two: the PRIMITIVE aggregates (sums,
-    * counts, extrema, percentiles, decimal moment sums — returned
-    * first, to run in the one groupBy) and, per output feature, its
-    * closed form over those primitives' named outputs (returned second,
-    * in output order, evaluated once in the select after the
-    * aggregate). `out` maps the canonical feature name to the output
-    * column name (identity for [[extract]], `<col>_`-prefix for
-    * [[extractMulti]]). The split is exact: every closed form performs
-    * the same operations in the same order as it would inside the
-    * aggregate, on bit-identical inputs.
-    */
-  private def featureAggs(i: Int, out: String => String): (Seq[Column], Seq[(String, Column)]) = {
-    def in(n: String) = col(internal(i, n))
-    val a = new Primitives(i)
-    val (v, prev, prev2, mu, cnt) = (in("v"), in("prev"), in("prev2"), in("mu"), in("cnt"))
-    val idx = col("__idx")
-    // engine-portable exact arithmetic (sf0.1 lessons — see ExactAgg):
-    // micro means for term averages whose true value can sit exactly on
-    // a rounding midpoint; the int64 quotient runs after the aggregate
-    def microAvg(tag: String, e: Column): Column =
-      ExactAgg.microQuotient(a(s"${tag}_ms", ExactAgg.microSum(e)), a(s"${tag}_mc", count(e)))
-    val n = a("n", count(v))
-    val (mn, mx) = (a("min", min(v)), a("max", max(v)))
-    val std = a("std", stddev_pop(v))
-    val median = a("median", percentile(v, lit(0.5)))
-    val sumV = a("sum", sum(v))
-    // central moments around the windowed mu — see dist() for why
-    val d = v - mu
-    val c2 = a("m2", avg(d * d))
-    // sample autocorrelations at lags 1..4 (tsfresh autocorrelation)
-    val rows = a("rows", count(lit(1)))
-    val varPop = a("var_pop", var_pop(v))
-    def ac(k: Int): Column = try_divide(
-      a(s"ac${k}_s", sum((v - mu) * (in(if (k == 1) "prev" else s"prev$k") - mu))),
-      (rows - k) * varPop)
-    // fixed-k Goertzel DFT term (tsfresh fft_coefficient abs): two
-    // trig-weighted sums per k — still one per-row expression, no FFT
-    def fftAbs(k: Int): Column = {
-      val arg = lit(2 * math.Pi * k) * idx / cnt
-      val re = a(s"re$k", sum(v * cos(arg)))
-      val im = a(s"im$k", sum(v * sin(arg)))
-      sqrt(re * re + im * im)
-    }
-    // tsfresh index_mass_quantile(q): relative index where the running
-    // |v| mass first reaches q of the total; (idx+1)/cnt is monotone in
-    // idx so min() picks the first qualifying row
-    def imq(q: Double): Column =
-      a(s"imq${math.round(q * 100)}",
-        min(when(in("cabs") >= lit(q) * in("sabs"), (idx + 1) / cnt)))
-    // closed-form fit from exact components (ExactAgg.trendFit)
-    val (trendSlope, trendIntercept) = {
-      val (sy, sxy) = ExactAgg.trendSums(v, idx)
-      ExactAgg.trendClosedForm(n, a("trend_sy", sy), a("trend_sxy", sxy))
-    }
-    // tsfresh permutation_entropy over the `pid` pattern histogram
-    val permEntropy3 = histogramEntropy(
-      (0 to 7).map(k => a(s"pid$k", sum(when(in("pid") === k, 1L).otherwise(0L)))),
-      a("pn", count(prev2)))
-    // tsfresh benford_correlation: Pearson r between the observed
-    // first-significant-digit frequencies and Benford's law, via the
-    // 9-point shortcut r = (9·Σp·b − 1) / sqrt((9·Σp² − 1)·(9·Σb² − 1))
-    // (Σp = Σb = 1). The Benford constants are embedded as literals so
-    // the SQL oracle holds bit-identical doubles.
-    val benfordCorr = {
-      val cs = (1 to 9).map(k => a(s"bd$k", sum(when(in("bd") === k, 1L).otherwise(0L))))
-      val nD = a("nbd", count(in("bd")))
-      val p = cs.map(_.cast("double") / nD)
-      val spb = p.zip(TsFeatures.BenfordP).map { case (pc, b) => pc * lit(b) }
-        .reduce(_ + _)
-      val sp2 = p.map(pc => pc * pc).reduce(_ + _)
-      try_divide(lit(9.0) * spb - 1,
-        sqrt((lit(9.0) * sp2 - 1) * lit(TsFeatures.BenfordDenom)))
-    }
-    // AR(1) fit (tsfresh ar_coefficient k=1) — OLS of v on prev over
-    // the lag pairs, every moment an exact decimal sum so both engines
-    // hold bit-identical inputs to the closed form
-    val (ar1Coeff, ar1Intercept) = ar1Fit(
-      a("ar1_n", count(prev).cast("double")),
-      a("ar1_sx", sum(prev.cast("decimal(18,6)")).cast("double")),
-      a("ar1_sy", sum(when(prev.isNotNull, v).cast("decimal(18,6)")).cast("double")),
-      a("ar1_sxy", sum((prev * v).cast("decimal(28,6)")).cast("double")),
-      a("ar1_sx2", sum((prev * prev).cast("decimal(28,6)")).cast("double")))
-    val features = Seq(
-      "n" -> n,
-      "mean_v" -> microAvg("mean", v),
-      "std_v" -> std,
-      "min_v" -> mn,
-      "max_v" -> mx,
-      "sum_v" -> sumV,
-      "median_v" -> median,
-      // exact decimal(28,8) sum (terms of <=4dp inputs are 8dp-exact;
-      // cast margin 5e-9 >> double error) rounded ONCE half-up at 6dp:
-      // a plain double sum's low bits differ by engine/partition order
-      // and at sf1 the exact sum can sit ON a 6dp midpoint (sums of
-      // i^2*1e-8 perturbation residues) - the r15 sf1 abs_energy class
-      "abs_energy" -> round(a("energy_dec", sum((v * v).cast("decimal(28,8)"))), 6)
-        .cast("double"),
-      "mean_abs_change" -> microAvg("abs_change", abs(v - prev)),
-      // count(v - prev) == n - 1, so the micro mean IS sum/(n-1)
-      "mean_change" -> microAvg("change", v - prev),
-      "autocorr_lag1" -> ac(1),
-      "trend_slope" -> trendSlope,
-      "trend_intercept" -> trendIntercept,
-      "skewness" -> try_divide(a("m3", avg(d * d * d)), pow(c2, 1.5)),
-      "kurtosis" -> (try_divide(a("m4", avg(d * d * d * d)), c2 * c2) - lit(3)),
-      "count_above_mean" -> a("above", sum(when(v > mu, 1L).otherwise(0L))),
-      "count_below_mean" -> a("below", sum(when(v < mu, 1L).otherwise(0L))),
-      "first_v" -> a("first", min_by(v, col("__ord"))),
-      "last_v" -> a("last", max_by(v, col("__ord"))),
-      "range_v" -> (mx - mn),
-      "q25" -> a("q25", percentile(v, lit(0.25))),
-      "q75" -> a("q75", percentile(v, lit(0.75))),
-      "abs_max" -> a("abs_max", max(abs(v))),
-      "cid_ce" -> sqrt(a("cid_s", sum((v - prev) * (v - prev)))),
-      "n_peaks" -> a("peaks", sum(when(v > prev && v > in("nxt"), 1L).otherwise(0L))),
-      "strike_above" -> coalesce(a("alen_max", max(when(v > mu, in("alen")))), lit(0)),
-      "strike_below" -> coalesce(a("blen_max", max(when(v < mu, in("blen")))), lit(0)),
-      "energy_ratio_c0" -> try_divide(
-        a("energy_head", sum(when(idx * 10 < cnt, v * v).otherwise(lit(0.0)))),
-        a("energy", sum(v * v))),
-      "first_loc_max" -> try_divide(a("first_max", min(when(v === in("mx"), idx))), n),
-      "last_loc_min" -> try_divide(a("last_min", max(when(v === in("mn"), idx))) + 1, n),
-      "ratio_beyond_1sigma" -> try_divide(
-        a("beyond", sum(when(abs(v - mu) > in("sd"), 1L).otherwise(0L))), n),
-      "mean_2nd_derivative" -> microAvg("d2", (v - lit(2) * prev + prev2) / 2),
-      // tier 3: nonlinearity / dynamics calculators over the same lags
-      "c3" -> microAvg("c3", v * prev * prev2),
-      "time_reversal_asym" -> microAvg("tra", v * v * prev - prev * prev2 * prev2),
-      "n_crossings_mean" ->
-        a("cross_mean", sum(when((v > mu) =!= (prev > mu), 1L).otherwise(0L))),
-      "autocorr_lag2" -> ac(2),
-      "binned_entropy" -> histogramEntropy(
-        (0 until 10).map(b => a(s"bin$b", sum(when(in("bin") === b, 1L).otherwise(0L)))), n),
-      // tier 4: spectral / partial-correlation / mass-location
-      // calculators; pacf_2 is the Durbin-Levinson step over lags 1/2
-      "pacf_2" -> try_divide(ac(2) - ac(1) * ac(1), lit(1) - ac(1) * ac(1)),
-      "fft_abs_c1" -> fftAbs(1),
-      "fft_abs_c2" -> fftAbs(2),
-      "imq_25" -> imq(0.25),
-      "imq_50" -> imq(0.5),
-      "imq_75" -> imq(0.75),
-      // tier 5: ordinal-pattern entropy + shape/indicator calculators
-      // (tsfresh permutation_entropy, root_mean_square, variance,
-      // has_duplicate_max/min, large_standard_deviation r=0.25,
-      // symmetry_looking r=0.05)
-      "perm_entropy_3" -> permEntropy3,
-      "rms_v" -> sqrt(a("sq_avg", avg(v * v))),
-      // population variance as the micro mean of (v-mu)² — var_pop's
-      // internal M2 accumulation differs between engines in the low
-      // bits (caught at sf0.1); d is engine-identical because the
-      // windowed mu is
-      "variance_v" -> microAvg("dev2", d * d),
-      "has_dup_max" ->
-        (a("n_max", sum(when(v === in("mx"), 1L).otherwise(0L))) > 1).cast("int"),
-      "has_dup_min" ->
-        (a("n_min", sum(when(v === in("mn"), 1L).otherwise(0L))) > 1).cast("int"),
-      "large_std" -> (std > lit(0.25) * (mx - mn)).cast("int"),
-      "symmetry_look" ->
-        (abs(a("avg", avg(v)) - median) < lit(0.05) * (mx - mn)).cast("int"),
-      "benford_corr" -> benfordCorr,
-      // tsfresh mean_n_absolute_max (n=3): mean of the 3 largest |v|
-      // via the |v|-desc rank column — series shorter than 3 yield
-      // null (tsfresh NaN)
-      "mean_3_abs_max" -> when(n >= 3,
-        a("top3", sum(when(in("arn") <= 3, abs(v)).otherwise(lit(0.0)))) / 3),
-      // tier 6: tsfresh change_quantiles(ql=0.2, qh=0.8, isabs=True,
-      // f_agg="mean") — mean |Δ| over consecutive pairs whose BOTH
-      // endpoints sit inside the per-series [q20, q80] corridor
-      // (window-enriched bounds); no qualifying pair → 0 like tsfresh
-      "change_q_20_80" -> coalesce(microAvg("cq", when(
-        prev.isNotNull &&
-          v >= in("cql") && v <= in("cqh") &&
-          prev >= in("cql") && prev <= in("cqh"),
-        abs(v - prev))), lit(0.0)),
-      // the truncated k=0..8 magnitude spectrum itself (tsfresh
-      // fft_coefficient abs for each k; c0 = |Σv|) — these also feed
-      // the derived spectral moments/entropy in [[withDerived]]
-      "fft_abs_c0" -> abs(sumV),
-      "fft_abs_c3" -> fftAbs(3),
-      "fft_abs_c4" -> fftAbs(4),
-      "fft_abs_c5" -> fftAbs(5),
-      "fft_abs_c6" -> fftAbs(6),
-      "fft_abs_c7" -> fftAbs(7),
-      "fft_abs_c8" -> fftAbs(8),
-      // tier 7: cheap one-pass calculators (tsfresh
-      // absolute_sum_of_changes, variation_coefficient, quantile 0.1 /
-      // 0.9, first_location_of_minimum, last_location_of_maximum,
-      // number_crossing_m at m=0). The exact-decimal |Δ| sum and the
-      // micro-mean denominator keep both engines bit-identical where a
-      // rounding tie could otherwise flip the 6-dp output.
-      "abs_sum_changes" -> a("abs_changes_dec", ExactAgg.decSum(abs(v - prev))),
-      "variation_coeff" -> try_divide(std, microAvg("mean", v)),
-      "q10" -> a("q10", percentile(v, lit(0.1))),
-      "q90" -> a("q90", percentile(v, lit(0.9))),
-      "first_loc_min" -> try_divide(a("first_min", min(when(v === in("mn"), idx))), n),
-      "last_loc_max" -> try_divide(a("last_max", max(when(v === in("mx"), idx))) + 1, n),
-      "n_crossings_0" -> a("cross_0", sum(when((v > 0) =!= (prev > 0), 1L).otherwise(0L))),
-      // tier 8: AR(1) fit
-      "ar1_coeff" -> ar1Coeff,
-      "ar1_intercept" -> ar1Intercept,
-      // tier 9: the autocorrelation ladder to lag 4 (feeds the
-      // agg_autocorrelation moments and the Durbin-Levinson AR(4)
-      // coefficients computed in [[withDerived]])
-      "autocorr_lag3" -> ac(3),
-      "autocorr_lag4" -> ac(4),
-    )
-    (a.aggregates, features.map { case (name, c) => out(name) -> c })
-  }
-
-  /** Output order of the [[withDerived]] features of one value column. */
-  private val DerivedNames = Seq("agg_autocorr_mean", "agg_autocorr_var",
-    "ar4_phi1", "ar4_phi2", "ar4_phi3", "ar4_phi4", "welch_psd_c1", "welch_psd_c2",
-    "fft_agg_centroid", "fft_agg_variance", "fourier_entropy")
-
-  /** Post-aggregation derived calculators — pure projections over the
-    * ROUNDED lag-1..4 autocorrelations and |F_k| (rounding first makes
-    * the inputs bit-identical across engines, so the closed forms below
-    * are deterministic): tsfresh agg_autocorrelation mean/var over the
-    * lag-1..4 ladder, spkt_welch_density, fft_aggregated
-    * centroid/variance, fourier_entropy, and the Yule-Walker AR(4)
-    * coefficients via the Durbin-Levinson recursion (tsfresh
-    * ar_coefficient k≤4; φ_{4,4} is also the lag-4 partial
-    * autocorrelation).
-    *
-    * This is the last part of the extract plan's split: the groupBy
-    * emits only primitive aggregates, one select evaluates every
-    * [[featureAggs]] closed form from their named outputs, and the two
-    * selects here cover ALL value columns together. The first names the
-    * Durbin-Levinson levels 2-3 (`__i_a22`, `__i_a21`, `__i_a33`) and
-    * the spectrum mass (`__i_mass`); the second reads them to finish
-    * level 4 and the spectral moments, drops the intermediates and
-    * fixes the output order: keys, every column's aggregate-level
-    * features, then every column's derived features. Naming the
-    * levels keeps the expression tree linear in the recursion depth —
-    * re-inlining each level into the next grows it exponentially — and
-    * the projection count does not grow with the number of value
-    * columns.
-    */
-  private def withDerived(closed: DataFrame, outs: Seq[String => String]): DataFrame = {
-    val closedCols = closed.columns.toSeq
-    def rounded(out: String => String)(n: String) = round(col(out(n)), 6)
-    def spectrum(out: String => String) = (0 to 8).map(k => rounded(out)(s"fft_abs_c$k"))
-    val named = closed.select(col("*") +: outs.zipWithIndex.flatMap { case (out, i) =>
-      val r = rounded(out) _
-      val (r1, r2, r3) = (r("autocorr_lag1"), r("autocorr_lag2"), r("autocorr_lag3"))
-      // Durbin-Levinson levels 2 and 3 (a11 = r1)
-      val a22 = try_divide(r2 - r1 * r1, lit(1.0) - r1 * r1)
-      val a21 = r1 - a22 * r1
-      Seq(
-        a22.as(internal(i, "a22")),
-        a21.as(internal(i, "a21")),
-        try_divide(r3 - (a21 * r2 + a22 * r1), lit(1.0) - (a21 * r1 + a22 * r2))
-          .as(internal(i, "a33")),
-        // tsfresh fft_aggregated / fourier_entropy run over the ROUNDED
-        // k=0..8 magnitude spectrum (documented truncation)
-        spectrum(out).reduce(_ + _).as(internal(i, "mass")))
-    }: _*)
-    val derived = outs.zipWithIndex.flatMap { case (out, i) =>
-      def m(n: String) = col(internal(i, n))
-      val r = rounded(out) _
-      val (r1, r2, r3, r4) =
-        (r("autocorr_lag1"), r("autocorr_lag2"), r("autocorr_lag3"), r("autocorr_lag4"))
-      // agg_autocorrelation mean/var in EXACT integer micro-units: the
-      // mean of four 6-dp values is grid-locked to 2.5e-7 (and the var
-      // to 6.25e-14), so a plain double mean lands exactly on 6-dp
-      // rounding midpoints where Spark (shortest-decimal HALF_UP) and a
-      // binary-scaling engine disagree — the SURVEY §10 tie class.
-      // m_i = r_i·1e6 are exact integer-valued doubles; half-up of s/4
-      // is floor((2s+4)/8)-style integer arithmetic, identical in SQL.
-      def micro(c: Column) = round(c * 1e6)
-      val (m1, m2, m3, m4) = (micro(r1), micro(r2), micro(r3), micro(r4))
-      val sM = m1 + m2 + m3 + m4
-      val acMean = (when(sM >= 0, floor((sM + 2) / 4))
-        .otherwise(-floor((-sM + 2) / 4))) / lit(1e6)
-      // var·1e12 = (4·Σm² − s²)/16; half-up at 6 dp = q/(16e6) rounded.
-      // qV ≥ 0 always (power-mean: 4·Σm² ≥ (Σm)² over 4 terms), so the
-      // non-negative half-up form suffices; null r's propagate via floor
-      val qV = lit(4) * (m1 * m1 + m2 * m2 + m3 * m3 + m4 * m4) - sM * sM
-      val acVar = floor((qV * 2 + lit(16000000.0)) / lit(32000000.0)) / lit(1e6)
-      // Durbin-Levinson level 4 from the named level-3 coefficients
-      val (a21, a22, a33) = (m("a21"), m("a22"), m("a33"))
-      val a31 = a21 - a33 * a22
-      val a32 = a22 - a33 * a21
-      val a44 = try_divide(r4 - (a31 * r3 + a32 * r2 + a33 * r1),
-        lit(1.0) - (a31 * r1 + a32 * r2 + a33 * r3))
-      // tsfresh spkt_welch_density at coeff k: single-segment boxcar
-      // Welch (the degenerate nperseg=n case) — PSD |F_k|²/n. Derived
-      // from the ROUNDED |F_k| so both engines square the identical
-      // double: the raw (re²+im²) form amplifies the order-dependent
-      // trig-sum low bits past the 6-dp boundary (seen at sf0.1).
-      val wp1 = r("fft_abs_c1") * r("fft_abs_c1") / col(out("n"))
-      val wp2 = r("fft_abs_c2") * r("fft_abs_c2") / col(out("n"))
-      val fk = spectrum(out)
-      val mass = m("mass")
-      val fm1 = (1 to 8).map(k => fk(k) * lit(k.toDouble)).reduce(_ + _)
-      val fm2 = (1 to 8).map(k => fk(k) * lit((k * k).toDouble)).reduce(_ + _)
-      val centroid = try_divide(fm1, mass)
-      val variance = try_divide(fm2, mass) - centroid * centroid
-      val entropy = fk.map { f =>
-        val p = f / mass
-        when(f > 0, -p * log(p)).otherwise(lit(0.0))
-      }.reduce(_ + _)
-      Seq(acMean, acVar, a31 - a44 * a33, a32 - a44 * a32, a33 - a44 * a31, a44,
-        wp1, wp2, centroid, variance, entropy)
-        .zip(DerivedNames).map { case (c, n) => c.as(out(n)) }
-    }
-    named.select(closedCols.map(col) ++ derived: _*)
-  }
-
-  /** AR(1) (φ, c) from the lag-pair moment sums: φ is the OLS slope of
-    * v on its lag and c = (Σy − φ·Σx)/n — the same engine-portability
-    * treatment as [[ExactAgg.trendFit]].
-    */
-  private def ar1Fit(n: Column, sx: Column, sy: Column, sxy: Column,
-                     sx2: Column): (Column, Column) = {
-    val slope = try_divide(n * sxy - sx * sy, n * sx2 - sx * sx)
-    (slope, try_divide(sy - slope * sx, n))
   }
 
   /** Benford first-digit probabilities log10(1 + 1/d), d = 1..9, and
@@ -693,16 +242,6 @@ object TsFeatures {
     (1 to 9).map(d => math.log10(1.0 + 1.0 / d))
   private[graft] val BenfordDenom: Double =
     9.0 * BenfordP.map(b => b * b).sum - 1.0
-
-  /** -Σ p·ln(p) over a histogram's bucket counts, p = count / n —
-    * tsfresh binned_entropy and permutation_entropy, evaluated after the
-    * aggregate from the named counts. Empty buckets contribute nothing.
-    */
-  private def histogramEntropy(counts: Seq[Column], n: Column): Column =
-    counts.map { c =>
-      val p = c.cast("double") / n
-      when(c > 0, -p * log(p)).otherwise(lit(0.0))
-    }.reduce(_ + _)
 
   /** Two-sided p-value for the Pearson-correlation significance test,
     * via the normal approximation of the t statistic

@@ -274,11 +274,8 @@ object Preprocessor {
                         labelCol: String = "y", alpha: Double = 0.05): DataFrame = {
     // per-series matrix: tiny rows, expensive plan — materialize once
     // for the relevance pass AND the final projection
-    // pin=true: both consumers (the relevance collect and the kept
-    // projection) evaluate the full calculator battery — no
-    // count-pruning, so the window stage is compute-dense here
     val feats = graft.operators.TsFeatures
-      .extract(df, columnId, Seq(timeCol), valueCol, pin = true)
+      .extract(df, columnId, Seq(timeCol), valueCol)
       .localCheckpoint(eager = false)
     val rel = graft.operators.TsFeatures
       .featureRelevance(feats, labels, columnId, labelCol, alpha)

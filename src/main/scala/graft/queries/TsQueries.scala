@@ -318,8 +318,8 @@ object TsQueries {
   /** Post-aggregation derived calculators over the ROUNDED lag-1..4
     * autocorrelation aliases (`prefix` = the per-sensor alias prefix):
     * agg_autocorrelation mean/var and the Durbin-Levinson AR(4)
-    * coefficients — the identical closed forms TsFeatures.withDerived
-    * builds as Column projections, so both engines start from the same
+    * coefficients — the identical closed forms the extract kernel
+    * (`ExtractKernel`) evaluates, so both engines start from the same
     * 6-dp-rounded r values and run the same double arithmetic.
     */
   private def derivedSql(prefix: String): Seq[(String, String)] = {
@@ -336,7 +336,7 @@ object TsQueries {
     val a41 = s"($a31 - $a44 * $a33)"
     val a42 = s"($a32 - $a44 * $a32)"
     val a43 = s"($a33 - $a44 * $a31)"
-    // exact integer-micro mean/var (see TsFeatures.withDerived: the
+    // exact integer-micro mean/var (see ExtractKernel: the
     // 2.5e-7-grid mean sits exactly on 6-dp rounding midpoints)
     def m(k: Int) = s"round(${r(k)} * 1e6)"
     val sM = s"(${m(1)} + ${m(2)} + ${m(3)} + ${m(4)})"
@@ -347,7 +347,7 @@ object TsQueries {
       s"${m(3)} * ${m(3)} + ${m(4)} * ${m(4)}) - $sM * $sM)"
     val acVar = s"(floor(($qV * 2 + 16000000.0) / 32000000.0) / 1e6)"
     // spectral family over the rounded k=0..8 |F_k| aliases — the
-    // identical left-associated chains TsFeatures.withDerived builds
+    // identical left-associated chains ExtractKernel evaluates
     def fa(k: Int) = s"${prefix}fft_abs_c$k"
     val fftMass = (0 to 8).map(fa).mkString(" + ")
     val fftM1 = (1 to 8).map(k => s"${fa(k)} * ${k.toDouble}").mkString(" + ")
@@ -452,10 +452,9 @@ object TsQueries {
 
   private val enrichedCte = enrichedCteFor("events", "user_id")
 
-  private def roundedExtract(s: org.apache.spark.sql.SparkSession, dir: String,
-                             pin: Boolean = false) = {
+  private def roundedExtract(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val e = Tables.events(s, dir).select(col("user_id"), col("ts"), col("value"))
-    val f = TsFeatures.extract(e, "user_id", Seq("ts"), "value", pin)
+    val f = TsFeatures.extract(e, "user_id", Seq("ts"), "value")
     // + 0.0 normalizes IEEE signed zero: at sf1 a 3-point window's
     // autocorrelation can be an exact -0.0 on one engine and +0.0 on
     // the other — float == calls them equal, the hash does not (r15)
@@ -580,8 +579,8 @@ object TsQueries {
 
   /** Multi-sensor extraction (reference preprocessor.py:558-638
     * extracts over the WHOLE frame): the full 82-feature matrix for
-    * every value column in ONE widened window+agg — same single
-    * shuffle as one sensor. The oracle replays one enrichment CTE per
+    * every value column in the one sorted per-series pass — same
+    * single shuffle as one sensor. The oracle replays one enrichment CTE per
     * column (DuckDB has no such fusion) and joins the per-column
     * matrices; degenerate series divide 0/0 → NULL on both engines
     * (Spark try_divide; DuckDB division by zero is NULL).
@@ -631,10 +630,7 @@ object TsQueries {
       // derived post-agg calculators (agg_autocorr/ar4) are arithmetic
       // combinations of autocorr_lag1..4 and would only add collinear
       // rows to the correlation matrix
-      // pin=true: the relevance collect evaluates EVERY calculator (no
-      // count-pruning), so the enrichment window stage is genuinely
-      // compute-dense here — see TsFeatures.extract's doc
-      val baseFeats = roundedExtract(s, dir, pin = true)
+      val baseFeats = roundedExtract(s, dir)
         .select(col("user_id") +: featSql.map { case (n, _) => col(n) }: _*)
       val rel = TsFeatures.featureRelevance(
         baseFeats, labels, "user_id", "y", alpha = 0.05)

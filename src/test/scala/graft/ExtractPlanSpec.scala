@@ -1,8 +1,9 @@
 package graft
 
 import graft.operators.TsFeatures
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -50,7 +51,8 @@ class ExtractPlanSpec extends SparkSpec {
       // Measured at HEAD; a unit of slack would mask exactly the
       // one-extra-shuffle regression this spec exists to catch.
       val budgets = Seq(
-        // feature localCheckpoint (2: window enrich + agg) + one
+        // feature localCheckpoint (2: the extract's one exchange, in
+        // AQE's final and initial plan) + one
         // join+unpivot+groupBy correlation pass (4: label agg, SMJ
         // both sides, per-feature agg)
         ("ts_features_relevant", 4, 6),
@@ -88,35 +90,50 @@ class ExtractPlanSpec extends SparkSpec {
     plan.collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }
       .map(_.toLong).sum
 
-  /** Projections between the plan's root and its (single) aggregate. */
-  private def projectsAboveAggregate(plan: LogicalPlan): Int = plan match {
-    case _: Aggregate      => 0
-    case Project(_, child) => 1 + projectsAboveAggregate(child)
-    case other             => fail(s"unexpected ${other.nodeName} above the aggregate")
-  }
+  /** Physical operator names of a frame's executed plan, through AQE. */
+  private def operators(df: org.apache.spark.sql.DataFrame): Set[String] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p.nodeName }
+      .toSet
 
   test("extractMulti's analyzed plan stays inside its size budget") {
     // driver-side analysis and optimization walk every expression node
     // on every action, so the node count is the build cost's measure.
-    // Budgets measured on the per-stage-projection plan (4,764 and
-    // 14,068 nodes; the per-withColumn plan it replaced had 13,848 and
-    // 47,653): one value column is the benchmark's shape, three is
-    // ts_features_multi's.
+    // Budgets measured on the sorted per-series pass (457 and 1,153
+    // nodes; the window + aggregate plan it replaced had
+    // 4,764 and 14,068): one value column is the benchmark's shape,
+    // three is ts_features_multi's.
     val e = Tables.events(spark, sf).select(col("user_id"), col("ts"),
       col("value").as("va"), (col("value") * lit(0.5) + lit(3.25)).as("vb"),
       abs(col("value")).as("vc"))
     def analyzed(valueCols: Seq[String]) =
       TsFeatures.extractMulti(e, "user_id", Seq("ts"), valueCols).queryExecution.analyzed
     val (one, three) = (analyzed(Seq("va")), analyzed(Seq("va", "vb", "vc")))
-    val budgets = Seq((one, 1, 4900L), (three, 3, 14500L))
+    val budgets = Seq((one, 1, 457L), (three, 3, 1153L))
     for ((plan, n, budget) <- budgets)
       assert(expressionNodes(plan) <= budget,
         s"$n value column(s): ${expressionNodes(plan)} analyzed expression nodes, budget $budget")
-    // the closed forms and the derived recursion cover all value
-    // columns in the same selects: adding columns widens them, never
-    // deepens the plan
-    assert(projectsAboveAggregate(one) == 3 && projectsAboveAggregate(three) == 3,
-      s"projections above the aggregate: ${projectsAboveAggregate(one)} for one value " +
-        s"column, ${projectsAboveAggregate(three)} for three (expected 3 for both)")
+    // every value column adds only its own feature slots: the plan
+    // grows less than linearly in the number of value columns
+    assert(expressionNodes(three) < 3 * expressionNodes(one),
+      s"three value columns: ${expressionNodes(three)} nodes, one: ${expressionNodes(one)}")
+  }
+
+  test("the extract family runs no window or aggregate operator") {
+    // the features come from one sorted per-series pass: a Window or an
+    // aggregate in the executed plan means the window + aggregate plan
+    // (and its per-task code generation) is back
+    val e = Tables.events(spark, sf).select(col("user_id"), col("ts"),
+      col("value").as("va"), (col("value") * lit(0.5) + lit(3.25)).as("vb"),
+      abs(col("value")).as("vc"))
+    val frames = Seq(
+      "extract" -> TsFeatures.extract(e, "user_id", Seq("ts"), "va"),
+      "extractMulti(1)" -> TsFeatures.extractMulti(e, "user_id", Seq("ts"), Seq("va")),
+      "extractMulti(3)" -> TsFeatures.extractMulti(e, "user_id", Seq("ts"), Seq("va", "vb", "vc")),
+      "extractWindowed" -> TsFeatures.extractWindowed(e, "user_id", "ts", Seq("ts"), "va",
+        604800000000000L))
+    for ((name, df) <- frames) {
+      val found = operators(df).intersect(Set("Window", "ObjectHashAggregate", "SortAggregate"))
+      assert(found.isEmpty, s"$name plans ${found.mkString(", ")}:\n${df.queryExecution.executedPlan}")
+    }
   }
 }

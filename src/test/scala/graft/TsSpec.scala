@@ -577,4 +577,26 @@ class TsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("output column `n` would appear twice"))
   }
+  test("an all-zero and an all-null series get null features instead of failing the extract") {
+    import spark.implicits._
+    // Benford's digit frequencies divide by the count of non-zero values
+    // and binned entropy by the count of non-null ones: both are 0 here
+    val in = Seq(("zeros", 1L, Some(0.0)), ("zeros", 2L, Some(0.0)), ("zeros", 3L, Some(0.0)),
+      ("nulls", 1L, None), ("nulls", 2L, None),
+      ("ok", 1L, Some(1.0)), ("ok", 2L, Some(4.0)), ("ok", 3L, Some(2.0)))
+      .toDF("sk", "t", "v").withColumn("w", org.apache.spark.sql.functions.col("v") * 2)
+    def bySeries(f: org.apache.spark.sql.DataFrame) = f.collect().map(r => r.getString(0) -> r).toMap
+    val single = bySeries(TsFeatures.extract(in, "sk", Seq("t"), "v"))
+    val multi = bySeries(TsFeatures.extractMulti(in, "sk", Seq("t"), Seq("v", "w")))
+    for ((rows, prefix) <- Seq(single -> "", multi -> "v_", multi -> "w_")) {
+      def f(series: String, name: String): Any = rows(series).getAs[Any](prefix + name)
+      assert(rows.keySet == Set("zeros", "nulls", "ok"))
+      assert(f("zeros", "n") == 3L && f("zeros", "mean_v") == 0.0 && f("zeros", "binned_entropy") == 0.0)
+      assert(f("zeros", "benford_corr") == null)
+      assert(f("nulls", "n") == 0L && f("nulls", "count_above_mean") == 0L)
+      for (name <- Seq("mean_v", "binned_entropy", "benford_corr", "welch_psd_c1", "fft_abs_c1"))
+        assert(f("nulls", name) == null, s"$prefix$name of the all-null series")
+      assert(f("ok", "benford_corr") != null && f("ok", "binned_entropy") != null)
+    }
+  }
 }
