@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** As-of join: each left row picks the most recent right row (by
@@ -41,11 +40,9 @@ object AsofJoin {
     // final tiebreaker so right rows SHARING (key, ts) resolve
     // deterministically (greatest payload wins — last() in sort order)
     // instead of by partition layout
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col("__ts"), col("__src"), col("__r"))
-      .rowsBetween(Window.unboundedPreceding, 0)
+    val w = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r")))
     lTagged.unionByName(rTagged, allowMissingColumns = true)
-      .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w))
+      .withColumn("__match", w.lastAtOrBefore(col("__r")))
       .where(col("__src") === 1)
       .select(
         col(keyCol) +: col("__ts").as(tsCol) +:
@@ -56,9 +53,10 @@ object AsofJoin {
   /** NEAREST as-of (pandas merge_asof direction="nearest"): each left
     * row picks whichever of its backward/forward matches is closer in
     * `tsCol`; exact ties resolve BACKWARD (deterministic, replayable).
-    * One union, ONE hash shuffle, two in-partition sorts (the
-    * backward and forward windows share the partition key, so Spark
-    * plans a second Sort, never a second Exchange). Distances compare
+    * One union, ONE hash shuffle, three in-partition sorts (the
+    * backward window, the forward window and its O(n) mirror share the
+    * partition key, so Spark plans more Sorts, never a second
+    * Exchange). Distances compare
     * in the timestamp's integer domain — no double round-off.
     *
     * Equal-timestamp right rows are visible to the BACKWARD scan only;
@@ -79,15 +77,11 @@ object AsofJoin {
       struct(rightCols.map(col): _*).as("__r"))
     val hit = when(col("__src") === 0,
       struct(col("__ts").as("t"), col("__r").as("p")))
-    val wB = Window.partitionBy(col(keyCol))
-      .orderBy(col("__ts"), col("__src"), col("__r"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wF = Window.partitionBy(col(keyCol))
-      .orderBy(col("__ts"), col("__src"), col("__r").desc)
-      .rowsBetween(0, Window.unboundedFollowing)
+    val wB = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r")))
+    val wF = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r").desc))
     lTagged.unionByName(rTagged, allowMissingColumns = true)
-      .withColumn("__b", last(hit, ignoreNulls = true).over(wB))
-      .withColumn("__f", first(hit, ignoreNulls = true).over(wF))
+      .withColumn("__b", wB.lastAtOrBefore(hit))
+      .withColumn("__f", wF.firstAtOrAfter(hit))
       .where(col("__src") === 1)
       .withColumn("__n",
         when(col("__f").isNull, col("__b"))
@@ -102,10 +96,11 @@ object AsofJoin {
   }
 
   /** Forward as-of: each left row picks the EARLIEST right row at or
-    * after its timestamp — the mirrored union+window (first non-null
-    * over the FOLLOWING frame; left rows sort before right rows at
-    * equal ts so "at or after" stays inclusive). Same single-shuffle
-    * cost shape as [[asof]].
+    * after its timestamp — the first non-null payload at or after the
+    * row ([[SeriesWindow.firstAtOrAfter]], an O(n) mirrored frame; left
+    * rows sort before right rows at equal ts so "at or after" stays
+    * inclusive). Same single-shuffle cost shape as [[asof]], one more
+    * in-partition sort.
     */
   def asofForward(
       left: DataFrame, right: DataFrame,
@@ -122,11 +117,9 @@ object AsofJoin {
     // __r DESCENDING so ties on (key, ts) resolve to the GREATEST
     // payload here too (first() in sort order) — same deterministic
     // pick as the backward direction
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col("__ts"), col("__src"), col("__r").desc)
-      .rowsBetween(0, Window.unboundedFollowing)
+    val w = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r").desc))
     lTagged.unionByName(rTagged, allowMissingColumns = true)
-      .withColumn("__match", first(col("__r"), ignoreNulls = true).over(w))
+      .withColumn("__match", w.firstAtOrAfter(col("__r")))
       .where(col("__src") === 0)
       .select(
         col(keyCol) +: col("__ts").as(tsCol) +:

@@ -1,8 +1,8 @@
 package graft.prep
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import graft.operators.SeriesWindow
 
 /** Per-column statistics fitted in one pass. `quantiles(k)` holds the
   * exact k/(n+1)-quantile boundaries when kbins/quantile-grid scaling
@@ -191,35 +191,48 @@ object NumericalTransformer {
   /** Series window: ALWAYS partitioned by a series key — a per-series
     * sort after one hash shuffle; never a global single-partition sort.
     */
-  def seriesWindow(partition: Seq[Column], order: Seq[Column]): WindowSpec =
-    Window.partitionBy(partition: _*).orderBy(order: _*)
+  def seriesWindow(partition: Seq[Column], order: Seq[Column]): SeriesWindow =
+    SeriesWindow(partition, order)
+
+  /** The order-dependent fills by their configuration name. */
+  val OrderedFills: Map[String, (Column, SeriesWindow) => Column] = Map(
+    "forward" -> forwardFill, "backward" -> backwardFill, "interpolate" -> interpolate)
 
   /** Last non-null value at or before the current row (polars
-    * fill_null(strategy="forward")).
+    * fill_null(strategy="forward")): one O(n) preceding frame. `c`
+    * itself when `w` sorts by `c` ascending (identity rule,
+    * [[SeriesWindow.ascendingBy]]): no window at all.
     */
-  def forwardFill(c: Column, w: WindowSpec): Column =
-    last(c, ignoreNulls = true).over(w.rowsBetween(Window.unboundedPreceding, 0))
+  def forwardFill(c: Column, w: SeriesWindow): Column =
+    if (w.ascendingBy(c)) c else w.lastAtOrBefore(c)
 
-  /** First non-null value at or after the current row (strategy="backward"). */
-  def backwardFill(c: Column, w: WindowSpec): Column =
-    first(c, ignoreNulls = true).over(w.rowsBetween(0, Window.unboundedFollowing))
+  /** First non-null value at or after the current row
+    * (strategy="backward"): the O(n) mirrored frame of
+    * [[SeriesWindow.firstAtOrAfter]].
+    */
+  def backwardFill(c: Column, w: SeriesWindow): Column = w.firstAtOrAfter(c)
 
   /** Linear interpolation by row position within the series (polars
     * `.interpolate()`): nulls between two known points are filled
-    * linearly; leading/trailing nulls stay null. Four window
-    * expressions over one shared (partition, order) — a single
-    * shuffle+sort per series partition.
+    * linearly; leading/trailing nulls stay null. The previous known
+    * point comes from the ascending window, the next one from its
+    * mirror, and both meet in the mirrored pass
+    * ([[SeriesWindow.inMirroredPass]]): one shuffle, two sorts per
+    * series partition, O(n). `c` itself when `w` sorts by `c`
+    * ascending (identity rule, [[SeriesWindow.ascendingBy]]): no window
+    * at all.
     */
-  def interpolate(c: Column, w: WindowSpec): Column = {
-    val back  = w.rowsBetween(Window.unboundedPreceding, 0)
-    val fwd   = w.rowsBetween(0, Window.unboundedFollowing)
-    val rn    = row_number().over(w)
-    val rnOf  = when(c.isNotNull, rn)
-    val prevV = last(c, ignoreNulls = true).over(back)
-    val prevI = last(rnOf, ignoreNulls = true).over(back)
-    val nextV = first(c, ignoreNulls = true).over(fwd)
-    val nextI = first(rnOf, ignoreNulls = true).over(fwd)
-    val interp = prevV + (nextV - prevV) * (rn - prevI) / (nextI - prevI)
-    coalesce(c, interp)
-  }
+  def interpolate(c: Column, w: SeriesWindow): Column =
+    if (w.ascendingBy(c)) c
+    else {
+      val pos   = row_number().over(w.spec)
+      val rnOf  = when(c.isNotNull, pos)
+      val asc   = w.inMirroredPass(struct(pos.as("rn"),
+        w.lastAtOrBefore(c).as("prevV"), w.lastAtOrBefore(rnOf).as("prevI")))
+      val (rn, prevV, prevI) = (asc("rn"), asc("prevV"), asc("prevI"))
+      val nextV = w.firstAtOrAfter(c)
+      val nextI = w.firstAtOrAfter(rnOf)
+      val interp = prevV + (nextV - prevV) * (rn - prevI) / (nextI - prevI)
+      coalesce(c, interp)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.prep
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,9 +27,11 @@ object MlTask {
   * `Preprocessor.__init__` parameters).
   *
   * `seriesKey`/`timeId` drive the order-dependent fill strategies
-  * (forward/backward/interpolate): the window is ALWAYS partitioned by
-  * `seriesKey` — one hash shuffle, per-series sort — never a global
-  * single-partition sort (SURVEY §4).
+  * (forward/backward/interpolate, [[NumericalTransformer.OrderedFills]]):
+  * `orderedFill` needs `timeId` to order each series, and `fit` rejects
+  * it without one. The window should be partitioned by `seriesKey` —
+  * one hash shuffle, per-series sort — never a global single-partition
+  * sort (SURVEY §4).
   */
 final case class PrepConfig(
     catLabelsThreshold: Double = 0.02,
@@ -45,7 +46,7 @@ final case class PrepConfig(
     missingValuesThreshold: Double = 0.999,
     scaling: Scaling = Scaling.None_,
     numFillNull: FillStrategy = FillStrategy.Mean,
-    orderedFill: Option[String] = None, // "forward" | "backward" | "interpolate"
+    orderedFill: Option[String] = None, // "forward" | "backward" | "interpolate"; needs timeId
     mlTask: Option[MlTask] = None,
     targetColumn: Option[String] = None,
     maxCategories: Int = 1024,
@@ -64,8 +65,13 @@ final case class PrepConfig(
 /** The fitted preprocessing model: a handful of driver-side doubles,
   * bounded category registries, and per-column scalers. `transform`
   * and `inverseTransform` are each ONE `select` of pure column
-  * expressions — narrow, whole-stage-codegen, zero shuffle (except the
-  * per-series window when an ordered fill was requested).
+  * expressions — narrow, whole-stage-codegen, zero shuffle — except
+  * that `transform` takes ONE per-series window (one hash shuffle on
+  * `seriesKey`, O(n) sorted scans) when an ordered fill is configured
+  * or there are two or more datetime features. A single datetime
+  * feature is interpolated in its own order, which changes no value,
+  * so it takes no window. `inverseTransform` never windows; over a
+  * transform output it inherits that output's plan.
   */
 final class PrepModel(
     val config: PrepConfig,
@@ -104,15 +110,8 @@ final class PrepModel(
   private def fillExpr(cleaned: Column, c: String): Column =
     config.orderedFill match {
       case Some(kind) =>
-        val w = NumericalTransformer.seriesWindow(
-          config.seriesKey.toSeq.map(col),
-          config.timeId.toSeq.map(col))
-        kind match {
-          case "forward"     => NumericalTransformer.forwardFill(cleaned, w)
-          case "backward"    => NumericalTransformer.backwardFill(cleaned, w)
-          case "interpolate" => NumericalTransformer.interpolate(cleaned, w)
-          case other         => sys.error(s"unknown ordered fill: $other")
-        }
+        NumericalTransformer.OrderedFills(kind)(cleaned, NumericalTransformer.seriesWindow(
+          config.seriesKey.toSeq.map(col), config.timeId.toSeq.map(col)))
       case None =>
         (config.numFillNull, config.scaling) match {
           // reference sentinel behavior for fill="none"
@@ -133,9 +132,11 @@ final class PrepModel(
     // Null interpolation after epoch conversion, rows ordered by the
     // FIRST datetime feature (reference: datetime_transformer.py:99-101
     // sorts by datetime_features[0], then `.interpolate()` each column).
-    // The window partitions by seriesKey when configured — REQUIRED at
-    // scale; without one this is a single global sorted partition,
-    // matching the reference's single-node semantics.
+    // The first feature interpolated in its own order is itself (the
+    // identity rule), so only the second and later ones take a window.
+    // It partitions by seriesKey when configured — REQUIRED at scale;
+    // without one it is a single global sorted partition, matching the
+    // reference's single-node semantics.
     val epoch = rawEpoch(c)
     val w = NumericalTransformer.seriesWindow(
       config.seriesKey.toSeq.map(col),
@@ -311,6 +312,13 @@ object Preprocessor {
       "The target column is not present in the dataset"))
     config.excludedCols.foreach(c => require(df.columns.contains(c),
       s"The excluded column $c is not present in the dataset"))
+    config.orderedFill.foreach { kind =>
+      require(NumericalTransformer.OrderedFills.contains(kind),
+        s"Invalid value for orderedFill: $kind (expected one of " +
+          NumericalTransformer.OrderedFills.keys.toSeq.sorted.mkString(", ") + ")")
+      require(config.timeId.exists(df.columns.contains),
+        s"orderedFill = $kind needs a timeId column of the dataset to order the rows by")
+    }
 
     val schema = df.schema
     // target column is excluded from feature processing (preprocessor.py:168-169)

@@ -83,8 +83,7 @@ object PyBridge {
       case "zero"             => (FillStrategy.Zero, None)
       case "one"              => (FillStrategy.One, None)
       // order-dependent strategies ride the per-series window
-      case "forward" | "backward" | "interpolate" =>
-        (FillStrategy.None_, Some(s))
+      case k if NumericalTransformer.OrderedFills.contains(k) => (FillStrategy.None_, Some(k))
       case num =>
         val v = try num.toDouble catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(

@@ -876,8 +876,10 @@ object RelationalQueries {
 
   /** Ordered per-user journey extraction (the first 10 events as a
     * ">"-joined path string — the sequence feature funnels train on):
-    * collect_list over the ts-ordered window is deterministic because
-    * (user, ts) is corpus-unique; one hash Exchange on the user.
+    * collected in descending row number up to the first event (a frame
+    * anchored at the partition start) and reversed, which is the
+    * ts-ordered list; deterministic because (user, ts) is
+    * corpus-unique; one hash Exchange on the user.
     */
   val qUserJourney: Q = Q(
     "q_user_journey",
@@ -888,9 +890,9 @@ object RelationalQueries {
         .select(col("user_id"), col("ts"), col("event_type"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= 10)
-        .withColumn("journey", concat_ws(">",
-          collect_list(col("event_type")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))))
+        .withColumn("journey", concat_ws(">", reverse(
+          collect_list(col("event_type")).over(Window.partitionBy(col("user_id"))
+            .orderBy(col("rn").desc).rowsBetween(Window.unboundedPreceding, Window.currentRow)))))
         .where(col("rn") === 1)
         .select(col("user_id"), col("journey"))
     },

@@ -668,8 +668,7 @@ object StatsQueries {
       // (§1.2 fewer actions; identical long/double arithmetic)
       val w = Window.orderBy(col("x"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.orderBy(col("x"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAll = Window.partitionBy() // whole-table totals need no order
       val nl = col("l1") + col("l0")
       val nr = col("r1") + col("r0")
       val gl = nl.cast("double") -
@@ -1516,8 +1515,7 @@ object StatsQueries {
       // (§1.2 fewer actions; same exact rank arithmetic, oracle green)
       val w = Window.orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAll = Window.partitionBy() // whole-table totals need no order
       val r = roll
         .withColumn("cum", sum(col("c")).over(w))
         .withColumn("n", sum(col("c")).over(wAll))
@@ -1948,8 +1946,7 @@ object StatsQueries {
       // scalar actions (§1.2 fewer actions; same rank arithmetic)
       val w = Window.orderBy(col("rm"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.orderBy(col("rm"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAll = Window.partitionBy() // whole-table totals need no order
       val cal = ev.where(col("b") >= 6 && col("b") < 8)
         .join(means, Seq("event_type"))
         .select(rm.as("rm"))
@@ -2015,8 +2012,7 @@ object StatsQueries {
       // identical clamped-rank integer arithmetic)
       val w = Window.orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAll = Window.partitionBy() // whole-table totals need no order
       val lo = expr("n div 10")
       val hi = col("n") - lo
       val take = greatest(
@@ -2135,8 +2131,7 @@ object StatsQueries {
           col("user_id") === col("c_custkey"))
         .groupBy(col("segment"))
         .agg(count(lit(1)).as("n"), sum(col("y")).as("k"))
-      val w = Window.partitionBy()
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val w = Window.partitionBy() // unordered: the frame is every row
       val rate = col("k").cast("double") / col("n")
       g.select(col("segment"), col("n"), col("k"),
         round(rate, 6).as("rate"),
@@ -2690,8 +2685,7 @@ object StatsQueries {
       // two scalar actions (§1.2 fewer actions; same rank arithmetic)
       val w = Window.orderBy(col("s"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.orderBy(col("s"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAll = Window.partitionBy() // whole-table totals need no order
       val r = pairs.groupBy(col("s")).agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(w))
         .withColumn("m", sum(col("c")).over(wAll))
@@ -2943,8 +2937,7 @@ object StatsQueries {
       // fewer actions; identical prefix-sum gain arithmetic)
       val w = Window.orderBy(col("d"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAll = Window.partitionBy() // whole-table totals need no order
       val gain = (col("sl").cast("double") * col("sl") / col("nl") +
         (col("st") - col("sl")).cast("double") * (col("st") - col("sl")) /
           (col("n") - col("nl")) -

@@ -1825,8 +1825,7 @@ object TextQueries {
       // same rank arithmetic)
       val wDesc = Window.orderBy(col("lw").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAllD = Window.orderBy(col("lw").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val wAllD = Window.partitionBy() // the whole-table total needs no order
       val sel = docW.groupBy(col("lw")).agg(count(lit(1)).as("c"))
         .withColumn("cum", sum(col("c")).over(wDesc))
         .withColumn("n", sum(col("c")).over(wAllD))

@@ -199,6 +199,33 @@ class PreprocessorSpec extends SparkSpec {
     assert(out(3).isNullAt(2))          // leading null stays null
   }
 
+  private def orderedFillFixture = Seq(
+    ("s1", 3L, Some(3.0)), ("s1", 1L, None), ("s1", 2L, Some(2.0)), ("s2", 1L, None),
+  ).toDF("sk", "t", "v")
+
+  private def rejected(config: PrepConfig): String =
+    intercept[IllegalArgumentException](Preprocessor.fit(orderedFillFixture, config)).getMessage
+
+  test("fit rejects an unknown ordered fill") {
+    val msg = rejected(PrepConfig(excludedCols = Seq("sk", "t"), seriesKey = Some("sk"),
+      timeId = Some("t"), orderedFill = Some("bogus")))
+    assert(msg.contains("orderedFill") && msg.contains("bogus"), msg)
+  }
+
+  test("fit rejects interpolation without a timeId") {
+    val msg = rejected(PrepConfig(excludedCols = Seq("sk", "t"), seriesKey = Some("sk"),
+      orderedFill = Some("interpolate")))
+    assert(msg.contains("timeId"), msg)
+  }
+
+  test("fit rejects forward and backward fills without a timeId column") {
+    for (kind <- Seq("forward", "backward"); timeId <- Seq(None, Some("missing"))) {
+      val msg = rejected(PrepConfig(excludedCols = Seq("sk", "t"), seriesKey = Some("sk"),
+        timeId = timeId, orderedFill = Some(kind)))
+      assert(msg.contains("timeId"), s"$kind, timeId $timeId: $msg")
+    }
+  }
+
   /** Two partitions of 200 rows: the first holds >= 100 non-null values
     * of every string column, so each probe takes one job.
     */
