@@ -52,7 +52,8 @@ def graft_builder(classpath=None):
             .config("spark.driver.extraClassPath", cp)
             .config("spark.executor.extraClassPath", cp)
             .config("spark.sql.extensions", GRAFT_EXTENSIONS_CLASS)
-            # the engine-wide session defaults (graft.Verify parity)
+            # the engine-wide session defaults (Scala source of truth:
+            # graft.GraftSession)
             .config("spark.sql.session.timeZone", "UTC")
             .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
 

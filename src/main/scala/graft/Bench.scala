@@ -3,25 +3,36 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reg = SparkEntry.queries ++ SparkEntry.benchQueries
     // warm the session (scan machinery, codegen, JIT — and the
     // Structured Streaming stack, its first start costs ~2s) so no
     // timed query is charged for JVM startup
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    try SparkEntry.queries("stream_window")(spark, "/root/testdata/sf0.001").count()
-    catch { case _: Throwable => () }
+    def warm(s: SparkSession): Unit = {
+      try SparkEntry.entry(s).count() catch { case _: Throwable => () }
+      try SparkEntry.queries("stream_window")(s, "/root/testdata/sf0.001").count()
+      catch { case _: Throwable => () }
+    }
     // min of two runs per query: JIT/GC noise in the shared JVM swings
-    // single measurements by ~25%. Per-query GC-time deltas (across
-    // both runs) are recorded so a slow outlier can be attributed to
-    // collector pressure instead of guessed at (round-4 noise cluster).
+    // single measurements by ~25%. A failed run records an explicit -1
+    // marker, NEVER its time-to-exception: r7 silently turned 27 broken
+    // queries into 0.05-0.16s "timings" that read as improvements and
+    // corrupted the round-over-round map.
+    def minOf2(s: SparkSession, name: String, tag: String): Double = {
+      val times = (1 to 2).map { _ =>
+        val t0 = System.nanoTime()
+        try { reg(name)(s, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $tag$name FAILED: ${e.getMessage}")
+          -1.0
+        }
+      }
+      if (times.exists(_ < 0)) -1.0 else times.min
+    }
+    val spark = GraftSession.getOrCreate()
+    warm(spark)
+    // Per-query GC-time deltas (across both runs) are recorded so a
+    // slow outlier can be attributed to collector pressure instead of
+    // guessed at (round-4 noise cluster).
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -29,23 +40,10 @@ object Bench {
     // rows (the round bench never sets it, so the full map is unaffected)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // A failed run records an explicit -1 marker, NEVER its
-    // time-to-exception: r7 silently turned 27 broken queries into
-    // 0.05-0.16s "timings" that read as improvements and corrupted the
-    // round-over-round map.
-    val results = (SparkEntry.queries ++ SparkEntry.benchQueries)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = reg.keys.filter(n => only.forall(_.contains(n)))
+      .toSeq.sorted.map { name =>
       val gc0 = gcMillis()
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1.0
-        }
-      }
-      val t = if (times.exists(_ < 0)) -1.0 else times.min
+      val t = minOf2(spark, name, "")
       (name, t, (gcMillis() - gc0) / 1e3)
     }
     // Re-run the worst-N rows in a FRESH session, recorded SEPARATELY:
@@ -86,29 +84,9 @@ object Bench {
     val reruns: Map[String, Double] = if (worst.isEmpty) Map.empty else {
       spark.sparkContext.setLogLevel("OFF")
       spark.stop()
-      val s2 = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s2.sparkContext.setLogLevel("WARN")
-      try SparkEntry.entry(s2).count() catch { case _: Throwable => () }
-      try SparkEntry.queries("stream_window")(s2, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-      val reg = SparkEntry.queries ++ SparkEntry.benchQueries
-      worst.map { name =>
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          try { reg(name)(s2, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] rerun $name FAILED: ${e.getMessage}")
-            -1.0
-          }
-        }
-        name -> (if (times.exists(_ < 0)) -1.0 else times.min)
-      }.toMap
+      val s2 = GraftSession.getOrCreate()
+      warm(s2)
+      worst.map(name => name -> minOf2(s2, name, "rerun ")).toMap
     }
     val rerunsJson = reruns.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + BigDecimal(v)

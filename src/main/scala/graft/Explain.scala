@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for registered queries to files — the
   * optimization-round evidence device (plans/r17/<query>_{before,after}
   * .txt): the judge checks plan claims (Exchange counts, join
@@ -22,15 +20,7 @@ object Explain {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val reg = SparkEntry.queries ++ SparkEntry.benchQueries
     names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Job-count profiler for a registered query — the audit device VERDICT
   * r13 asked for on the `weak`-graded rows: at small SF the suspicion
   * is that a row's wall time is O(jobs)·(fixed per-job floor), not
@@ -17,15 +15,7 @@ object Profile {
     require(args.nonEmpty, "usage: Profile <query>[,query2,...] [sfDir]")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val reg = SparkEntry.queries ++ SparkEntry.benchQueries
     // warm the session so run 1 is not charged for JVM startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

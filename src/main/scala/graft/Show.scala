@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print a registered query's (bounded) result — the builder's
   * look-at-the-output device for bench-only rows whose OUTPUT is the
   * measurement (recall reports, skew summaries, state reports): Bench
@@ -15,15 +13,7 @@ object Show {
     require(args.nonEmpty, "usage: Show <query> [sfDir]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val reg = SparkEntry.queries ++ SparkEntry.benchQueries
     val fn = reg.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query: $name"))

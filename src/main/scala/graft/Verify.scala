@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,42 +7,14 @@ object Verify {
     // optional trailing args restrict the dump to named queries (the
     // oracle json is still written in full — it is cheap)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val builder = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-      // RocksDB state store (SPARK_GRAFT_ROCKSDB=1): off-heap streaming
-      // state — the setting a long-running 100 TB streaming job uses
-      val s = (if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
-        builder.config("spark.sql.streaming.stateStore.providerClass",
+    // RocksDB state store (SPARK_GRAFT_ROCKSDB=1): off-heap streaming
+    // state — the setting a long-running 100 TB streaming job uses
+    val spark = GraftSession.getOrCreate(extra =
+      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1"))
+        Map("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else builder).getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+      else Map.empty)
     new java.io.File(outDir).mkdirs()
-    // --- long-sweep hygiene (SURVEY §12l: late heavy rows degraded up
-    // to 75x vs fresh sessions inside the single-JVM 380-query sweep) —
-    // two independently-toggleable mitigations so the cause can be
-    // isolated:
-    //  * SPARK_GRAFT_UNPERSIST (default 1): after every query, drop all
-    //    RDDs still pinned in the BlockManager. Queries localCheckpoint
-    //    liberally (loop inputs, graphs, beams) and nothing unpersists
-    //    them when the query's DataFrame goes out of scope until its
-    //    JVM-GC moment — 380 queries of leaked checkpoint blocks fill
-    //    storage memory and push the old gen into collection storms.
-    //    Safe at query boundaries: nothing references a prior query's
-    //    lineage.
-    //  * SPARK_GRAFT_RECYCLE=N (default 0 = off): stop and rebuild the
-    //    session every N queries — the blunt instrument if block leaks
-    //    are not the whole story (codegen cache, UI/state accretion).
-    val unpersistEach = !sys.env.get("SPARK_GRAFT_UNPERSIST").contains("0")
-    val recycleN = sys.env.getOrElse("SPARK_GRAFT_RECYCLE", "0").toInt
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -52,7 +23,6 @@ object Verify {
     // correctness file (24 rows disappeared with no loud signal)
     var failed = List.empty[String]
     var dumped = 0
-    var attempted = 0
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -72,17 +42,16 @@ object Verify {
         failed ::= name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      attempted += 1
-      if (unpersistEach)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      // recycle cadence keys on ATTEMPTS, not successes: a run of
-      // failures must not stall the recycle exactly when the JVM is
-      // most likely degraded (r15 advisory)
-      if (recycleN > 0 && attempted % recycleN == 0) {
-        spark.stop()
-        spark = newSession()
-      }
+      // long-sweep hygiene (SURVEY §12l: late heavy rows degraded up to
+      // 75x vs fresh sessions inside the single-JVM 380-query sweep):
+      // drop every RDD still pinned in the BlockManager. Queries
+      // localCheckpoint liberally (loop inputs, graphs, beams) and
+      // nothing unpersists them until the query's DataFrame is garbage
+      // collected — 380 queries of leaked checkpoint blocks fill storage
+      // memory and push the old gen into collection storms. Safe at
+      // query boundaries: nothing references a prior query's lineage.
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
     }
     println(s"[verify] dumped $dumped / failed ${failed.size}" +
       (if (failed.nonEmpty) failed.sorted.mkString(" [", ", ", "]") else ""))

@@ -19,6 +19,27 @@ import org.apache.spark.sql.functions._
   */
 object AsofJoin {
 
+  /** Both sides as one frame: the key, `__ts`, `__src` (`leftSrc` on
+    * left rows, the other of 0/1 on right rows, so the caller picks
+    * which side sorts first at equal ts) and the payload structs `__l`
+    * and `__r`. Null-key right rows are dropped: a null key matches
+    * nothing, as in [[graft.plans.AsofExec]] and the oracle's
+    * equi-join, while the window would put every null key in one
+    * partition and hand null-key left rows a null-key right payload.
+    */
+  private def tagged(
+      left: DataFrame, right: DataFrame,
+      keyCol: String, tsCol: String,
+      leftCols: Seq[String], rightCols: Seq[String], leftSrc: Int): DataFrame = {
+    val l = left.select(
+      col(keyCol), col(tsCol).as("__ts"), lit(leftSrc).as("__src"),
+      struct(leftCols.map(col): _*).as("__l"))
+    val r = right.where(col(keyCol).isNotNull).select(
+      col(keyCol), col(tsCol).as("__ts"), lit(1 - leftSrc).as("__src"),
+      struct(rightCols.map(col): _*).as("__r"))
+    l.unionByName(r, allowMissingColumns = true)
+  }
+
   /** @param leftCols  left columns to carry through
     * @param rightCols right payload columns, emitted with `prefix`
     *                  (null when no right row precedes the left row)
@@ -29,19 +50,13 @@ object AsofJoin {
       leftCols: Seq[String], rightCols: Seq[String],
       prefix: String = "asof_"): DataFrame = {
 
-    val lTagged = left.select(
-      col(keyCol), col(tsCol).as("__ts"), lit(1).as("__src"),
-      struct(leftCols.map(col): _*).as("__l"))
-    val rTagged = right.select(
-      col(keyCol), col(tsCol).as("__ts"), lit(0).as("__src"),
-      struct(rightCols.map(col): _*).as("__r"))
     // right rows (__src=0) sort before left rows at equal ts -> the
     // "at or before" semantics are inclusive; the payload struct is the
     // final tiebreaker so right rows SHARING (key, ts) resolve
     // deterministically (greatest payload wins — last() in sort order)
     // instead of by partition layout
     val w = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r")))
-    lTagged.unionByName(rTagged, allowMissingColumns = true)
+    tagged(left, right, keyCol, tsCol, leftCols, rightCols, leftSrc = 1)
       .withColumn("__match", w.lastAtOrBefore(col("__r")))
       .where(col("__src") === 1)
       .select(
@@ -69,17 +84,11 @@ object AsofJoin {
       leftCols: Seq[String], rightCols: Seq[String],
       prefix: String = "asof_"): DataFrame = {
 
-    val lTagged = left.select(
-      col(keyCol), col(tsCol).as("__ts"), lit(1).as("__src"),
-      struct(leftCols.map(col): _*).as("__l"))
-    val rTagged = right.select(
-      col(keyCol), col(tsCol).as("__ts"), lit(0).as("__src"),
-      struct(rightCols.map(col): _*).as("__r"))
     val hit = when(col("__src") === 0,
       struct(col("__ts").as("t"), col("__r").as("p")))
     val wB = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r")))
     val wF = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r").desc))
-    lTagged.unionByName(rTagged, allowMissingColumns = true)
+    tagged(left, right, keyCol, tsCol, leftCols, rightCols, leftSrc = 1)
       .withColumn("__b", wB.lastAtOrBefore(hit))
       .withColumn("__f", wF.firstAtOrAfter(hit))
       .where(col("__src") === 1)
@@ -108,17 +117,11 @@ object AsofJoin {
       leftCols: Seq[String], rightCols: Seq[String],
       prefix: String = "asof_"): DataFrame = {
 
-    val lTagged = left.select(
-      col(keyCol), col(tsCol).as("__ts"), lit(0).as("__src"),
-      struct(leftCols.map(col): _*).as("__l"))
-    val rTagged = right.select(
-      col(keyCol), col(tsCol).as("__ts"), lit(1).as("__src"),
-      struct(rightCols.map(col): _*).as("__r"))
     // __r DESCENDING so ties on (key, ts) resolve to the GREATEST
     // payload here too (first() in sort order) — same deterministic
     // pick as the backward direction
     val w = SeriesWindow(Seq(col(keyCol)), Seq(col("__ts"), col("__src"), col("__r").desc))
-    lTagged.unionByName(rTagged, allowMissingColumns = true)
+    tagged(left, right, keyCol, tsCol, leftCols, rightCols, leftSrc = 0)
       .withColumn("__match", w.firstAtOrAfter(col("__r")))
       .where(col("__src") === 0)
       .select(

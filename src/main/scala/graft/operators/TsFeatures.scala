@@ -423,10 +423,7 @@ object TsFeatures {
                              binaryCols: Seq[String], labelCol: String,
                              alpha: Double = 0.05): DataFrame = {
     val y = col(labelCol).cast("long")
-    val long = features.select(y.as("__y"),
-      explode(array((realCols ++ binaryCols).map(c =>
-        struct(lit(c).as("f"), col(c).cast("double").as("x"))): _*)).as("__e"))
-      .select(col("__y"), col("__e.f").as("__f"), col("__e.x").as("__x"))
+    val long = unpivot(features, y, realCols ++ binaryCols)
       // null feature values / labels drop the row (same filter in the
       // oracle): Spark ranks NULL first, SQL last — unfiltered nulls
       // would shift every cumulative rank
@@ -480,16 +477,30 @@ object TsFeatures {
 
   /** Benjamini–Hochberg: keep the k* smallest p-values where
     * k* = max{i : p_(i) ≤ i·alpha/m} (ties ranked by (p, name)), with
-    * the reference's keep-all fallback when nothing survives.
+    * the reference's keep-all fallback when nothing survives. Features
+    * in `untested` have no p-value: never kept by the test, kept by the
+    * fallback.
     */
-  private def bhKeep(ps: Seq[(String, Double)], alpha: Double): Set[String] = {
+  private def bhKeep(ps: Seq[(String, Double)], alpha: Double,
+                     untested: Seq[String] = Nil): Set[String] = {
     val sorted = ps.sortBy { case (c, p) => (p, c) }
     val m = sorted.size
     val kStar = sorted.zipWithIndex
       .collect { case ((_, p), i) if p <= (i + 1) * alpha / m => i + 1 }
       .lastOption.getOrElse(0)
-    if (kStar == 0) ps.map(_._1).toSet else sorted.take(kStar).map(_._1).toSet
+    if (kStar == 0) (ps.map(_._1) ++ untested).toSet
+    else sorted.take(kStar).map(_._1).toSet
   }
+
+  /** The feature matrix in long form, one row per (input row, feature):
+    * `__y` (the label), `__f` (the feature name) and `__x` (its value as
+    * a double).
+    */
+  private def unpivot(df: DataFrame, label: Column, featCols: Seq[String]): DataFrame =
+    df.select(label.as("__y"),
+      explode(array(featCols.map(c =>
+        struct(lit(c).as("f"), col(c).cast("double").as("x"))): _*)).as("__e"))
+      .select(col("__y"), col("__e.f").as("__f"), col("__e.x").as("__x"))
 
   /** Strict inversions of `a` (pairs i<j with a(i) > a(j)) by
     * mergesort — O(n log n), mutates `a` to sorted order.
@@ -591,10 +602,7 @@ object TsFeatures {
                           labelCol: String, alpha: Double = 0.05): DataFrame = {
     import org.apache.spark.sql.types._
     val y = col(labelCol).cast("double")
-    val long = features.select(y.as("__y"),
-      explode(array(realCols.map(c =>
-        struct(lit(c).as("f"), col(c).cast("double").as("x"))): _*)).as("__e"))
-      .select(col("__e.f").as("__f"), col("__e.x").as("__x"), col("__y"))
+    val long = unpivot(features, y, realCols)
       // defined null semantics (the oracle filters identically): a
       // null feature value or label drops the PAIR source row — the
       // alternative (NPE in getDouble) killed the job on any
@@ -606,7 +614,7 @@ object TsFeatures {
       StructField("p", DoubleType, nullable = false)))
     val stats = GroupedApply(long, Seq("__f"), Seq("__x", "__y"), outSchema) {
       (key, it) =>
-        val pairs = it.map(r => (r.getDouble(1), r.getDouble(2))).toArray
+        val pairs = it.map(r => (r.getDouble(2), r.getDouble(0))).toArray
         val (tau, p) = kendallTauP(pairs)
         Iterator.single(Row(key.getString(0), tau.map(Double.box).orNull, p))
     }.collect()
@@ -638,18 +646,15 @@ object TsFeatures {
                             labelCol: String, classes: Seq[String],
                             alpha: Double = 0.05): DataFrame = {
     require(classes.size <= 3, "chi2TailP closed forms cover df <= 2")
-    val long = features.select(col(labelCol).cast("string").as("__c"),
-      explode(array(realCols.map(c =>
-        struct(lit(c).as("f"), col(c).cast("double").as("x"))): _*)).as("__e"))
-      .select(col("__c"), col("__e.f").as("__f"), col("__e.x").as("__x"))
+    val long = unpivot(features, col(labelCol).cast("string"), realCols)
       // rows outside the class list (incl. null labels) and null
       // feature values are excluded BEFORE ranking — otherwise they
       // shift every cumulative rank while being invisible to the
       // H statistic, and Spark ranks NULL x first where SQL ranks it
       // last (the oracle filters identically)
-      .where(col("__x").isNotNull && col("__c").isin(classes: _*))
+      .where(col("__x").isNotNull && col("__y").isin(classes: _*))
     val aggs = count(lit(1)).as("nx") +: classes.map(c =>
-      sum(when(col("__c") === c, 1L).otherwise(0L)).as(s"m_$c"))
+      sum(when(col("__y") === c, 1L).otherwise(0L)).as(s"m_$c"))
     val byVal = long.groupBy(col("__f"), col("__x")).agg(aggs.head, aggs.tail: _*)
     val w = Window.partitionBy(col("__f")).orderBy(col("__x"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -708,10 +713,7 @@ object TsFeatures {
     // (~2 s on a 150-row frame); the long form compiles once and its
     // cost tracks rows, not feature count.
     val y = col(labelCol).cast("double")
-    val long = joined.select(y.as("__y"),
-      explode(array(featCols.map(c =>
-        struct(lit(c).as("f"), col(c).cast("double").as("x"))): _*)).as("__e"))
-      .select(col("__y"), col("__e.f").as("__f"), col("__e.x").as("__x"))
+    val long = unpivot(joined, y, featCols)
     val rRows = long.groupBy(col("__f")).agg(
       try_divide(covar_samp(col("__x"), col("__y")),
         stddev_samp(col("__x")) * stddev_samp(col("__y")))
@@ -728,15 +730,8 @@ object TsFeatures {
     val rs: Seq[(String, Option[Double])] =
       featCols.map(c => c -> rMap.getOrElse(c, None))
     val withP = rs.map { case (c, r) => (c, r, r.map(corrPValue(_, n))) }
-    val defined = withP.collect { case (c, _, Some(p)) => (c, p) }
-      .sortBy { case (c, p) => (p, c) }
-    val m = defined.size
-    val kStar = defined.zipWithIndex
-      .collect { case ((_, p), i) if p <= (i + 1) * alpha / m => i + 1 }
-      .lastOption.getOrElse(0)
-    val keptNames: Set[String] =
-      if (kStar == 0) withP.map(_._1).toSet // fallback: keep ALL features
-      else defined.take(kStar).map(_._1).toSet
+    val keptNames = bhKeep(withP.collect { case (c, _, Some(p)) => (c, p) }, alpha,
+      untested = withP.collect { case (c, _, None) => c })
     val spark = features.sparkSession
     import spark.implicits._
     withP.map { case (c, r, p) => (c, r, p, keptNames.contains(c)) }

@@ -112,18 +112,20 @@ class AsofExecSpec extends SparkSpec {
       (Option.empty[Long], 200L, "n2")).toDF("k", "t", "lbl")
     val right = Seq((Option(1L), 50L, 5.0), (Option.empty[Long], 50L, 9.0))
       .toDF("k", "t", "v")
-    def run(fwd: Boolean) = {
-      val df = if (fwd)
-        AsofExec.asofForward(left, right.withColumn("t", col("t") + 100),
-          "k", "t", Seq("lbl"), Seq("v"))
-      else AsofExec.asof(left, right, "k", "t", Seq("lbl"), Seq("v"))
+    val later = right.withColumn("t", col("t") + 100)
+    def run(df: org.apache.spark.sql.DataFrame) =
       df.select(col("lbl"), col("asof_v")).collect()
         .map(r => (r.getString(0), if (r.isNullAt(1)) -1.0 else r.getDouble(1)))
         .toSet
-    }
     // null-keyed left rows must get null payload even though a
-    // null-keyed right row at a matching ts exists on the right side
-    assert(run(fwd = false) === Set(("a", 5.0), ("n1", -1.0), ("n2", -1.0)))
-    assert(run(fwd = true) === Set(("a", 5.0), ("n1", -1.0), ("n2", -1.0)))
+    // null-keyed right row at a matching ts exists on the right side —
+    // natively and in the composed union+window forms
+    for ((form, df) <- Seq(
+      "native backward" -> AsofExec.asof(left, right, "k", "t", Seq("lbl"), Seq("v")),
+      "native forward" -> AsofExec.asofForward(left, later, "k", "t", Seq("lbl"), Seq("v")),
+      "composed backward" -> AsofJoin.asof(left, right, "k", "t", Seq("lbl"), Seq("v")),
+      "composed forward" -> AsofJoin.asofForward(left, later, "k", "t", Seq("lbl"), Seq("v")),
+      "composed nearest" -> AsofJoin.asofNearest(left, right, "k", "t", Seq("lbl"), Seq("v"))))
+      assert(run(df) === Set(("a", 5.0), ("n1", -1.0), ("n2", -1.0)), form)
   }
 }

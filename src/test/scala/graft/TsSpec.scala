@@ -499,6 +499,22 @@ class TsSpec extends SparkSpec {
     assert(!rel("x_noise")._3)             // BH rejects the noise feature
   }
 
+  test("Pearson relevance keeps a feature without a p-value only in the keep-all fallback") {
+    import spark.implicits._
+    // 12 series, y = s: `sig` tracks y, `noise` does not (r ≈ 0.02) and
+    // `flat` is constant, so its correlation and p-value are undefined
+    val feats = (1 to 12).map(s => (s.toLong, s + (s % 3) * 0.1, ((s * 7) % 5).toDouble, 1.0))
+      .toDF("uid", "sig", "noise", "flat")
+    val labels = (1 to 12).map(s => (s.toLong, s.toDouble)).toDF("uid", "y")
+    def kept(f: org.apache.spark.sql.DataFrame) =
+      TsFeatures.featureRelevance(f, labels, "uid", "y")
+        .collect().map(r => r.getString(0) -> r.getBoolean(3)).toMap
+    assert(kept(feats) === Map("sig" -> true, "noise" -> false, "flat" -> false))
+    // without `sig` nothing survives BH: every feature is kept, the
+    // untestable one too
+    assert(kept(feats.drop("sig")) === Map("noise" -> true, "flat" -> true))
+  }
+
   test("ewma micro fold tracks the float EWMA and pandas init semantics") {
     import spark.implicits._
     val df = Seq((1L, 1L, 10.0), (1L, 2L, 20.0), (1L, 3L, 15.0), (2L, 1L, 5.5))
