@@ -1,6 +1,7 @@
 package graft.prep
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Fitted state for one categorical column.
@@ -64,10 +65,11 @@ object CategoricalTransformer {
       .groupBy("feature", "value").agg(count(lit(1)).as("cnt"))
   }
 
-  /** Fit rare-label models for all columns. Job plan: one row count
-    * (two jobs under AQE), then ONE [[countStats]] aggregate (three jobs
-    * under AQE; the bloom filters ride in it when `buildBloom`). Only
-    * labels at share >= threshold are ever collected.
+  /** Fit rare-label models for all columns. Job plan: ONE
+    * [[countStats]] aggregate (three jobs under AQE; the bloom filters
+    * ride in it when `buildBloom`) and no row-count job: the aggregate
+    * counts the rows itself. Only labels at share >= threshold are ever
+    * collected.
     */
   def fit(
       df: DataFrame,
@@ -80,8 +82,7 @@ object CategoricalTransformer {
   ): Map[String, CatColModel] =
     if (cols.isEmpty) Map.empty
     else {
-      val stats = countStats(df, cols, df.count().toDouble, threshold,
-        buildBloom, bloomItems, bloomBits)
+      val stats = countStats(df, cols, threshold, buildBloom, bloomItems, bloomBits)
       cols.map(c => c -> model(c, stats.get(c), maxCategories)).toMap
     }
 
@@ -96,13 +97,17 @@ object CategoricalTransformer {
   /** ONE per-feature aggregate over [[valueCounts]] for all `cols` (two
     * shuffles, one collect, no cache): every [[CatStats]] field, the
     * keep set as a filtered `collect_list` and the bloom filter as a
-    * filtered aggregate. `total` is the fit's row count, passed in as a
-    * literal. Columns with no rows are absent from the result.
+    * filtered aggregate. A label is rare when its count is below
+    * `threshold` × the row count. The row count is computed in the same
+    * pass, as the per-feature window sum of the (feature, value) counts:
+    * every input row adds one entry per feature. Unlike a partial
+    * aggregate, that window shuffles all of a feature's count rows,
+    * O(distinct labels) of them, into the feature's final task. Columns
+    * with no rows are absent from the result.
     */
   private[prep] def countStats(
       df: DataFrame,
       cols: Seq[String],
-      total: Double,
       threshold: Double,
       buildBloom: Boolean = false,
       bloomItems: Long = 1000000L,
@@ -111,7 +116,8 @@ object CategoricalTransformer {
     if (cols.isEmpty) Map.empty
     else {
       val value = col("value")
-      val rare = col("cnt") < lit(threshold) * lit(total)
+      val total = sum(col("cnt")).over(Window.partitionBy("feature")).cast("double")
+      val rare = col("cnt") < lit(threshold) * col("total")
       val isNone = value.isNull || value === "" || value === " "
       val aggs = Seq(
         count(lit(1)),
@@ -121,7 +127,8 @@ object CategoricalTransformer {
         collect_list(when(!rare, value)),
       ) ++ (if (!buildBloom) Nil else Seq(org.apache.spark.sql.graft.ColumnBridge
         .bloomFilterAgg(when(!isNone, value), bloomItems, bloomBits)))
-      valueCounts(df, cols).groupBy("feature").agg(aggs.head, aggs.tail: _*).collect()
+      valueCounts(df, cols).withColumn("total", total)
+        .groupBy("feature").agg(aggs.head, aggs.tail: _*).collect()
         .map { r =>
           r.getString(0) -> CatStats(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
             r.getSeq[String](5).filter(v => v.nonEmpty && v != " ").sorted,

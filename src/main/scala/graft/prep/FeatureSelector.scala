@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *      [[CategoricalTransformer.shrink]]).
   *
   * Scale design: decisions come from two aggregates and nothing
-  * unbounded is collected. Standalone `fit` runs one global aggregate
-  * (row count + numerical min/max, [[NumericalTransformer.scan]]: two
-  * jobs) and one value-count aggregate for all categorical columns
+  * unbounded is collected. Standalone `fit` submits both at the same
+  * time: one global aggregate (row count + numerical min/max,
+  * [[NumericalTransformer.scan]]: two jobs) and, on a second driver
+  * thread, one value-count aggregate for all categorical columns
   * ([[CategoricalTransformer.countStats]]: three jobs, the bloom
   * filters riding along when asked for). `Preprocessor.fit` feeds
   * [[select]] from its own two passes instead.
@@ -36,11 +37,11 @@ object FeatureSelector {
       maxCategories: Int = 1024,
       buildBloom: Boolean = false,
   ): SelectionModel = {
-    val scan = NumericalTransformer.scan(df, Nil, numericalCols.map(c => c -> col(c)))
-    val total = scan.total.toDouble
-    select(numericalCols, scan.stats, categoricalCols,
-      CategoricalTransformer.countStats(df, categoricalCols, total, catLabelsThreshold, buildBloom),
-      total, maxCategories)
+    val (scan, catStats) = Concurrently.both(df.sparkSession)(
+      NumericalTransformer.scan(df, Nil, numericalCols.map(c => c -> col(c))),
+      CategoricalTransformer.countStats(df, categoricalCols, catLabelsThreshold, buildBloom))
+    select(numericalCols, scan.stats, categoricalCols, catStats, scan.total.toDouble,
+      maxCategories)
   }
 
   /** The drop decisions and the kept categorical columns' models from

@@ -253,9 +253,10 @@ final class PrepModel(
 /** Orchestrator (reference: preprocessor.py `Preprocessor`): fit infers
   * feature types, detects string datetimes, runs feature selection,
   * fits numerical stats + scalers + bounded category registries and the
-  * optional target encoder — two full scans regardless of column count
-  * (plus the Sketch and label-encoder passes when configured), each
-  * collecting O(columns) driver state. No unbounded collects.
+  * optional target encoder — two full scans regardless of column count,
+  * run at the same time (plus the Sketch and label-encoder passes when
+  * configured), each collecting O(columns) driver state. No unbounded
+  * collects.
   */
 object Preprocessor {
 
@@ -286,20 +287,24 @@ object Preprocessor {
     feats.select((columnId +: ordered).map(org.apache.spark.sql.functions.col): _*)
   }
 
-  /** Fits the model. The job plan, fixed by the schema:
-    *   1. one shuffle-free probe per string column
-    *      ([[DatetimeTransformer.detectFormat]], a top-level limit);
-    *   2. one global stats aggregate over all features
-    *      ([[NumericalTransformer.scan]]; two jobs under AQE);
-    *   3. one value-count aggregate over the categorical columns
-    *      ([[CategoricalTransformer.countStats]]; three jobs under AQE,
-    *      none without categorical columns), which also builds the bloom
-    *      filters when `unseenLabels = "error"`;
-    *   4. only when configured: the Sketch bucket-count job
-    *      (`quantileFit = Sketch` with Quantile/KBins scaling) and the
-    *      label-encoder distinct (Classification target).
-    * Otherwise steps 2 and 3 are the only full scans; the model is a
-    * handful of doubles, the bounded keep sets and the blooms.
+  /** Fits the model. The job plan, fixed by the schema, is two rounds:
+    *   1. one shuffle-free probe for all string columns
+    *      ([[DatetimeTransformer.detectFormats]], a top-level limit; no
+    *      job without string columns);
+    *   2. two aggregates submitted at the same time, neither reading
+    *      the other's result:
+    *      - on the caller's thread, one global stats aggregate over all
+    *        features ([[NumericalTransformer.scan]]; two jobs under AQE);
+    *      - on a second driver thread, one value-count aggregate over
+    *        the categorical columns, before the missing-share drop
+    *        ([[CategoricalTransformer.countStats]]; three jobs under AQE,
+    *        none without categorical columns), which also builds the
+    *        bloom filters when `unseenLabels = "error"`.
+    *   Only when configured, after them: the Sketch bucket-count job
+    *   (`quantileFit = Sketch` with Quantile/KBins scaling) and the
+    *   label-encoder distinct (Classification target).
+    * Otherwise the two aggregates are the only full scans; the model is
+    * a handful of doubles, the bounded keep sets and the blooms.
     */
   def fit(df: DataFrame, config: PrepConfig = PrepConfig()): PrepModel = {
     require(config.catLabelsThreshold >= 0 && config.catLabelsThreshold <= 1,
@@ -330,19 +335,19 @@ object Preprocessor {
     var datetime    = schema.fieldNames.toSeq.filter(c => types.get(c).contains(FeatureTypes.Datetime))
     val boolean     = schema.fieldNames.toSeq.filter(c => types.get(c).contains(FeatureTypes.Boolean_))
 
-    // 1. Probes: string columns that parse as datetimes move over
-    // (datetime_transformer.py:57-80) — one shuffle-free job each.
-    val datetimeFormats = categorical.flatMap { c =>
-      DatetimeTransformer.detectFormat(df, c).map(c -> _)
-    }.toMap
+    // 1. The probe: string columns that parse as datetimes move over
+    // (datetime_transformer.py:57-80).
+    val datetimeFormats = DatetimeTransformer.detectFormats(df, categorical)
     categorical = categorical.filterNot(datetimeFormats.contains)
     datetime = datetime ++ datetimeFormats.keys.toSeq.sorted
 
     // 2. ONE global aggregate: row count, per-feature non-null counts
     // (missing-share drop), stats of every numerical and datetime-epoch
     // column (scaling + the selector's single-value check) and the
-    // regression target's range. Stats of columns dropped below are
-    // computed and discarded: each aggregate reads one column only.
+    // regression target's range. At the same time, ONE value-count
+    // aggregate for the categorical columns. Stats and counts of columns
+    // dropped below are computed and discarded: each aggregate reads one
+    // column only.
     val quantileProbs = config.scaling match {
       case Scaling.Quantile(n, _) => (0 until n).map(i => i.toDouble / (n - 1))
       case Scaling.KBins(n)       => (1 until n).map(i => i.toDouble / n)
@@ -352,9 +357,12 @@ object Preprocessor {
     val statInputs = numerical.map(c => c -> col(c)) ++
       datetime.map(c => c -> DatetimeTransformer.epoch(c, datetimeFormats.get(c)))
     val regressionTarget = config.targetColumn.filter(_ => config.mlTask.contains(MlTask.Regression))
-    val scan = NumericalTransformer.scan(df, featureCols, statInputs, quantileProbs,
-      config.quantileFit, regressionTarget.toSeq.flatMap(t =>
-        Seq(min(col(t)).cast(DoubleType), max(col(t)).cast(DoubleType))))
+    val (scan, catStats) = Concurrently.both(df.sparkSession)(
+      NumericalTransformer.scan(df, featureCols, statInputs, quantileProbs,
+        config.quantileFit, regressionTarget.toSeq.flatMap(t =>
+          Seq(min(col(t)).cast(DoubleType), max(col(t)).cast(DoubleType)))),
+      CategoricalTransformer.countStats(df, categorical, config.catLabelsThreshold,
+        buildBloom = config.unseenLabels == "error"))
     val total = scan.total.toDouble
     val missingDropped: Map[String, String] =
       if (total == 0) Map.empty
@@ -373,11 +381,8 @@ object Preprocessor {
       keptInputs.map { case (c, _) => c -> scan.stats(c) }.toMap, keptInputs,
       quantileProbs, config.quantileFit)
 
-    // 3. ONE value-count aggregate for the categorical columns, then
-    // the single-value, dominant and rare-label decisions.
-    val selection = FeatureSelector.select(numerical, numStats, categorical,
-      CategoricalTransformer.countStats(df, categorical, total, config.catLabelsThreshold,
-        buildBloom = config.unseenLabels == "error"),
+    // 3. The single-value, dominant and rare-label decisions.
+    val selection = FeatureSelector.select(numerical, numStats, categorical, catStats,
       total, config.maxCategories)
     numerical   = numerical.filterNot(selection.dropped.contains)
     categorical = categorical.filterNot(selection.dropped.contains)

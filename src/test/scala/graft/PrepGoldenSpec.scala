@@ -191,14 +191,26 @@ class PrepGoldenSpec extends SparkSpec {
     ),
   )
 
+  private def check(session: SparkSession, name: String, cfg: PrepConfig, clue: String): Unit = {
+    val df = PrepGoldenFixtures.frame(session)
+    val m = Preprocessor.fit(df, cfg)
+    assert(m.config == cfg && m.schema == df.schema)
+    val got = PrepGoldenFixtures.render(m)
+    val want = expected(name)
+    got.zipAll(want, "<missing>", "<missing>").foreach { case (g, w) => assert(g == w, clue) }
+  }
+
   PrepGoldenFixtures.cases.foreach { case (name, cfg) =>
     test(s"golden model: $name") {
-      val df = PrepGoldenFixtures.frame(spark)
-      val m = Preprocessor.fit(df, cfg)
-      assert(m.config == cfg && m.schema == df.schema)
-      val got = PrepGoldenFixtures.render(m)
-      val want = expected(name)
-      got.zipAll(want, "<missing>", "<missing>").foreach { case (g, w) => assert(g == w) }
+      check(spark, name, cfg, name)
     }
   }
+
+  // The fit's aggregates run at the same time and count rows in-pass;
+  // neither may make the model depend on the shuffle layout.
+  for ((label, conf) <- SparkSpec.layouts)
+    test(s"golden models are the same with $label") {
+      val session = SparkSpec.sessionWith(conf)
+      for ((name, cfg) <- PrepGoldenFixtures.cases) check(session, name, cfg, s"$name under $label")
+    }
 }

@@ -11,11 +11,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 class PrepInvarianceSpec extends SparkSpec {
   import OrderedFillPlanSpec.{fit, frame}
 
-  private val settings = Seq(
-    "one shuffle partition" -> Map("spark.sql.shuffle.partitions" -> "1"),
-    "seven shuffle partitions" -> Map("spark.sql.shuffle.partitions" -> "7"),
-    "adaptive execution off" -> Map("spark.sql.adaptive.enabled" -> "false"))
-
   /** (label, drop d2?, ordered fill) */
   private val cases = Seq(
     ("forward fill", true, Some("forward")),
@@ -40,9 +35,8 @@ class PrepInvarianceSpec extends SparkSpec {
       }
       val model = fit(input(spark), fill)
       val want = encode(model.transform(input(spark)))
-      for ((setting, conf) <- settings) {
-        val session = spark.newSession()
-        conf.foreach { case (k, v) => session.conf.set(k, v) }
+      for ((setting, conf) <- SparkSpec.layouts) {
+        val session = SparkSpec.sessionWith(conf)
         val got = encode(model.transform(input(session)))
         val diffs = got.zip(want).filter { case (g, w) => g != w }
         assert(got.length == want.length && diffs.isEmpty,

@@ -226,8 +226,8 @@ class PreprocessorSpec extends SparkSpec {
     }
   }
 
-  /** Two partitions of 200 rows: the first holds >= 100 non-null values
-    * of every string column, so each probe takes one job.
+  /** Two partitions of 200 rows: the first holds the probe's first
+    * limit (2 × 100 rows), so the probe takes one job.
     */
   private def budgetFixture(extraNum: Int, extraCat: Int): DataFrame = {
     val id = col("id")
@@ -247,14 +247,15 @@ class PreprocessorSpec extends SparkSpec {
   private def fitJobs(df: DataFrame): Int =
     JobCounter(spark.sparkContext)(Preprocessor.fit(df, PrepConfig(excludedCols = Seq("id"))))._2
 
-  test("fit job budget: one probe per string column, one stats and one value-count aggregate") {
-    // 2 probes (c, d) + 2 for the global aggregate + 3 for the value counts
+  test("fit job budget: one probe, one stats and one value-count aggregate") {
+    // 1 probe (c, d) + 2 for the global aggregate + 3 for the value counts;
+    // exact, so value-count jobs that lost the caller's job group show
     val base = fitJobs(budgetFixture(0, 0))
-    assert(base == 7)
+    assert(base == 6)
     // more numerical columns ride in the same global aggregate
     assert(fitJobs(budgetFixture(3, 0)) == base)
-    // each extra string column adds its probe job only
-    assert(fitJobs(budgetFixture(3, 3)) == base + 3)
+    // more string columns ride in the same probe and value-count aggregate
+    assert(fitJobs(budgetFixture(3, 3)) == base)
   }
 
   test("datetime probe: first sampleRows values decide, one job, all-null is None") {
@@ -270,5 +271,72 @@ class PreprocessorSpec extends SparkSpec {
     assert(DatetimeTransformer.detectFormat(df, "s", sampleRows = 101).isEmpty)
     val allNull = spark.range(0, 50, 1, 2).select(lit(null).cast("string").as("s"))
     assert(DatetimeTransformer.detectFormat(allNull, "s").isEmpty)
+  }
+
+  test("datetime probe of many columns: each column's first sampleRows values decide") {
+    // 1200 rows over 3 partitions
+    //   - dense: 100 `yyyy-MM-dd` values, then unparseable ones;
+    //   - sparse: one value in 10 rows; 30 `yyyy-MM-dd`, then `yyyy-MM`, so
+    //     only its full 100-value sample, which lies past the first limit
+    //     of 200 rows, finds no format;
+    //   - empty: all null, absent from the result.
+    val id = col("id")
+    def day(fmt: String) = date_format(date_add(lit("2020-02-01").cast("date"), id.cast("int")), fmt)
+    val df = spark.range(0, 1200, 1, 3).select(
+      when(id < 100, day("yyyy-MM-dd")).otherwise(lit("not a date")).as("dense"),
+      when(id % 10 =!= 0, lit(null)).when(id < 300, day("yyyy-MM-dd"))
+        .otherwise(day("yyyy-MM")).as("sparse"),
+      lit(null).cast("string").as("empty"))
+    val cols = Seq("dense", "sparse", "empty")
+    // the per-column rule, stated independently: the first 100 non-null
+    // values in partition order, then the first format parsing them all
+    def perColumn(c: String): Option[String] = {
+      val sample = df.select(col(c)).na.drop().limit(100)
+      val ok = sample.agg(count(lit(1)), DatetimeTransformer.Formats.map(f =>
+        bool_and(try_to_timestamp(col(c), lit(f)).isNotNull)): _*).head()
+      if (ok.getLong(0) == 0) None
+      else DatetimeTransformer.Formats.indices.find(i => ok.getBoolean(i + 1))
+        .map(DatetimeTransformer.Formats)
+    }
+    val got = DatetimeTransformer.detectFormats(df, cols)
+    assert(got == cols.flatMap(c => perColumn(c).map(c -> _)).toMap)
+    assert(got == Map("dense" -> "yyyy-MM-dd"))
+    // a sample cut short sees only the sparse column's `yyyy-MM-dd` values
+    assert(DatetimeTransformer.detectFormats(df, cols, sampleRows = 30) ==
+      Map("dense" -> "yyyy-MM-dd", "sparse" -> "yyyy-MM-dd"))
+    assert(DatetimeTransformer.detectFormats(df, cols, sampleRows = 31) ==
+      Map("dense" -> "yyyy-MM-dd"))
+
+    val dense = spark.range(0, 400, 1, 2).select(
+      Seq("yyyy-MM-dd", "yyyy-MM", "dd/MM/yyyy").zipWithIndex.map { case (f, i) =>
+        day(f).as(s"s$i") }: _*)
+    val (formats, jobs) = JobCounter(spark.sparkContext)(
+      DatetimeTransformer.detectFormats(dense, dense.columns.toSeq))
+    assert(formats == Map("s0" -> "yyyy-MM-dd", "s1" -> "yyyy-MM", "s2" -> "dd/MM/yyyy"))
+    assert(jobs == 1)
+  }
+
+  test("a failing fit rethrows the action's own exception once no job is left running") {
+    val id = col("id")
+    val df = spark.range(0, 400, 1, 2).select(id, (id * 0.5).as("v"),
+      when(id === 333, raise_error(lit("boom in the fit")))
+        .otherwise(concat(lit("c"), (id % 5).cast("string"))).as("c"))
+    val sc = spark.sparkContext
+    def failure(fit: => Any): Throwable = {
+      val e = intercept[Throwable](fit)
+      JobCounter.drain(sc)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      e
+    }
+    // both aggregates read `c`; the value counts alone read it in the selector
+    for (e <- Seq(
+        failure(Preprocessor.fit(df, PrepConfig(excludedCols = Seq("id")))),
+        failure(FeatureSelector.fit(df, Seq("v"), Seq("c"), 0.02)))) {
+      e match {
+        case t: org.apache.spark.SparkThrowable => assert(t.getCondition == "USER_RAISED_EXCEPTION", e)
+        case _                                  => fail(s"not the raised Spark exception: $e")
+      }
+      assert(e.getMessage.contains("boom in the fit"), e)
+    }
   }
 }

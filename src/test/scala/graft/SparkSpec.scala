@@ -12,4 +12,19 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   val cores = 4
   lazy val session: SparkSession = GraftSession.getOrCreate(cores)
+
+  /** Settings that change how shuffles lay out rows; the invariance specs
+    * re-run their fixtures in a new session under each.
+    */
+  val layouts: Seq[(String, Map[String, String])] = Seq(
+    "one shuffle partition" -> Map("spark.sql.shuffle.partitions" -> "1"),
+    "seven shuffle partitions" -> Map("spark.sql.shuffle.partitions" -> "7"),
+    "adaptive execution off" -> Map("spark.sql.adaptive.enabled" -> "false"))
+
+  /** A new session of the shared context with `conf` set. */
+  def sessionWith(conf: Map[String, String]): SparkSession = {
+    val s = session.newSession()
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 }

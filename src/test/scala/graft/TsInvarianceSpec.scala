@@ -7,15 +7,9 @@ package graft
   */
 class TsInvarianceSpec extends SparkSpec {
 
-  private val settings = Seq(
-    "one shuffle partition" -> Map("spark.sql.shuffle.partitions" -> "1"),
-    "seven shuffle partitions" -> Map("spark.sql.shuffle.partitions" -> "7"),
-    "adaptive execution off" -> Map("spark.sql.adaptive.enabled" -> "false"))
-
-  for ((label, conf) <- settings)
+  for ((label, conf) <- SparkSpec.layouts)
     test(s"the extract family matches the golden cells with $label") {
-      val session = spark.newSession()
-      conf.foreach { case (k, v) => session.conf.set(k, v) }
+      val session = SparkSpec.sessionWith(conf)
       val golden = TsGoldenSpec.load()
       for ((name, df) <- TsGoldenSpec.frames(session)) {
         val (expCols, expRows) = golden(name)

@@ -28,4 +28,9 @@ object JobCounter {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Returns once the listener bus has delivered every posted event, so
+    * the status tracker is up to date.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
