@@ -3,21 +3,29 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** tsfresh-style per-series time-series features
   * (reference: preprocessor.py:558-638 `extract_ts_features`, which
   * delegates to tsfresh `extract_features`; definitions follow
   * tsfresh's feature_calculators).
   *
-  * Scale design: every feature set is ONE `groupBy(seriesKey)` — hash
-  * shuffle on the series key with map-side partial aggregation. The
-  * order-dependent features (changes, autocorrelation, trend) first
-  * apply a window partitioned BY THE SAME KEY, so the subsequent
-  * groupBy reuses the exchange — one shuffle total, never a global
-  * sort. The full feature matrix ([[extract]] and its multi-column and
-  * windowed forms) is one sorted per-series pass after that single
-  * shuffle instead. Std/var are population (ddof=0) to match
-  * tsfresh/numpy.
+  * Scale design: the order-free statistics ([[basic]]) are one
+  * `groupBy(seriesKey)` with map-side partial aggregation; the windowed
+  * ones ([[change]], [[trend]], [[dist]]) partition their window BY THE
+  * SAME KEY, so the groupBy reuses the exchange — one shuffle, never a
+  * global sort. The full feature matrix ([[extract]] and its
+  * multi-column and windowed forms) and every per-series calculator
+  * ([[sampleEntropy]], [[lempelZiv]], [[ewma]], [[holt]], [[adf]],
+  * [[adfAutolag]], [[pacf]], [[cwt]], [[numberCwtPeaks]],
+  * [[matrixProfile]], [[friedrich]]) run through one runner,
+  * [[perSeries]]: one hash shuffle on the series key, each series'
+  * rows sorted by the order columns, every value column read as a
+  * double. Its null contract is one rule: a null value is not a point
+  * of the series, so a calculator gives what it gives on the series
+  * with that row removed (extract's lag-based features see the null as
+  * a gap, as Spark's `lag` does), and a null series key is a series of
+  * its own. Std/var are population (ddof=0) to match tsfresh/numpy.
   */
 object TsFeatures {
 
@@ -134,14 +142,9 @@ object TsFeatures {
     * k = 0..8 magnitude spectrum and the spectral and Yule-Walker
     * features derived from it (the full list is `ExtractKernel.Features`).
     *
-    * Plan: ONE hash shuffle on the series key; each series' rows arrive
-    * sorted by `orderCols` and one sorted per-series pass
-    * ([[GroupedApply]] running `ExtractKernel`) computes every feature
-    * over primitive arrays. The value column is read as a double.
-    *
-    * Memory: one series' values live in one task — the same per-group
-    * footprint as the per-series value map Spark's `percentile` keeps —
-    * so series length, not table size, bounds it.
+    * Plan and memory: [[perSeries]], whose kernel is `ExtractKernel`
+    * over primitive arrays. A null value is not a point of the series,
+    * but the lag-based features see it as a gap, as Spark's `lag` does.
     */
   def extract(df: DataFrame, seriesKey: String, orderCols: Seq[String],
               valueCol: String): DataFrame =
@@ -180,57 +183,106 @@ object TsFeatures {
                    valueCols: Seq[String]): DataFrame =
     extractFrame(df, Seq(seriesKey), orderCols, valueCols, i => n => s"${valueCols(i)}_$n")
 
-  /** The plan shared by the whole extract family: the used columns under
-    * reserved names, one [[GroupedApply]] that emits the series keys plus
-    * ONE array of every value column's features (counts and flags as
-    * doubles, so the output encoder stays narrow), and one select that
-    * names and types each feature. Output order: the keys, every value
-    * column's first features, then every value column's
-    * `ExtractKernel.Late` last ones. `out(i)` maps a feature name to value
-    * column i's output name.
+  /** The plan shared by the whole extract family: [[perSeries]] emits
+    * the series keys plus ONE array of every value column's features
+    * (counts and flags as doubles, so the output encoder stays narrow),
+    * and one select names and types each feature. Output order: the
+    * keys, every value column's first features, then every value
+    * column's `ExtractKernel.Late` last ones. `out(i)` maps a feature
+    * name to value column i's output name.
     */
   private def extractFrame(df: DataFrame, seriesKeys: Seq[String], orderCols: Seq[String],
                            valueCols: Seq[String], out: Int => String => String): DataFrame = {
-    import org.apache.spark.sql.types._
     require(valueCols.nonEmpty, "no value columns to extract")
-    for (c <- seriesKeys ++ orderCols ++ valueCols)
-      require(!c.startsWith("__"), s"column `$c`: the `__` prefix is reserved for internal columns")
-    val repeated = valueCols.diff(valueCols.distinct)
-    require(repeated.isEmpty, s"value column `${repeated.head}` is listed more than once")
     val features = ExtractKernel.Features
     val width = features.size
     val early = width - ExtractKernel.Late
     val slots = Seq(0 until early, early until width).flatMap(js =>
       valueCols.indices.flatMap(i => js.map(j => (i, j))))
-    val names = seriesKeys ++ slots.map { case (i, j) => out(i)(features(j)._1) }
+    val series = perSeries(df, seriesKeys, orderCols, valueCols,
+      Seq(StructField("__f", ArrayType(DoubleType)))) { s =>
+      Iterator.single(Row(valueCols.indices.flatMap(i =>
+        ExtractKernel(s.values(i), s.has(i), s.lastTie))))
+    }
+    val names = slots.map { case (i, j) => out(i)(features(j)._1) }
+    requireUniqueOutput(seriesKeys ++ names)
+    series.select(seriesKeys.map(col) ++ slots.zip(names).map { case ((i, j), name) =>
+      val f = col("__f")(i * width + j)
+      (if (features(j)._2 == DoubleType) f else f.cast(features(j)._2)).as(name)
+    }: _*)
+  }
+
+  private def requireUniqueOutput(names: Seq[String]): Unit = {
     val clashes = names.diff(names.distinct)
     require(clashes.isEmpty,
       s"output column `${clashes.head}` would appear twice: " +
         "a series key collides with a feature name")
+  }
+
+  /** One series as [[perSeries]] hands it to a kernel: its rows in
+    * series order, value column i read as a double.
+    */
+  private final class Series(rows: Array[Row], nKeys: Int, nOrder: Int) {
+    private def at(i: Int) = nKeys + nOrder + i
+    /** Row r's order-column values. */
+    def order(r: Int): Seq[Any] = (0 until nOrder).map(j => rows(r).get(nKeys + j))
+    /** Value column i per row: the value where [[has]], else 0.0. */
+    def values(i: Int): Array[Double] = {
+      val c = at(i)
+      rows.map(r => if (r.isNullAt(c)) 0.0 else r.getDouble(c))
+    }
+    /** Whether each row's value in column i is non-null. */
+    def has(i: Int): Array[Boolean] = rows.map(!_.isNullAt(at(i)))
+    /** The rows of value column i's points (its non-null values), in order. */
+    def pointRows(i: Int): Array[Int] = rows.indices.filter(!rows(_).isNullAt(at(i))).toArray
+    /** Value column i's points, in order. */
+    def points(i: Int): Array[Double] = pointRows(i).map(rows(_).getDouble(at(i)))
+    /** The first row whose order values equal the last row's. */
+    lazy val lastTie: Int = {
+      val last = rows.length - 1
+      var t = last
+      while (t > 0 && order(t - 1) == order(last)) t -= 1
+      t
+    }
+  }
+
+  /** The one per-series runner behind the extract family and every
+    * per-series calculator. It selects the series keys, the order
+    * columns as `__o<j>` and the value columns as `__v<i>` cast to
+    * double, plans ONE [[GroupedApply]] — one hash shuffle on the keys,
+    * each series' rows sorted by the order columns — and calls `kernel`
+    * once per series. The kernel returns rows of its own `fields`; the
+    * runner prepends the keys, whose fields keep the input's
+    * nullability (a null key is one series).
+    *
+    * Input contract: no column under the reserved `__` prefix, no value
+    * column listed twice, and no series key named like an output field.
+    * A kernel reads [[Series.points]] — a null value is not a point —
+    * so every series key gets its output, and a series with no points
+    * yields what a zero-length series yields.
+    *
+    * Memory: one series' rows live in one task — the same per-group
+    * footprint as the per-series value map Spark's `percentile` keeps
+    * — so series length, not table size, bounds it.
+    */
+  private def perSeries(df: DataFrame, seriesKeys: Seq[String], orderCols: Seq[String],
+                        valueCols: Seq[String], fields: Seq[StructField])(
+      kernel: Series => Iterator[Row]): DataFrame = {
+    for (c <- seriesKeys ++ orderCols ++ valueCols)
+      require(!c.startsWith("__"), s"column `$c`: the `__` prefix is reserved for internal columns")
+    val repeated = valueCols.diff(valueCols.distinct)
+    require(repeated.isEmpty, s"value column `${repeated.head}` is listed more than once")
+    requireUniqueOutput(seriesKeys ++ fields.map(_.name))
     val ordered = orderCols.indices.map(j => s"__o$j")
     val in = df.select(seriesKeys.map(col) ++
       orderCols.zip(ordered).map { case (c, o) => col(c).as(o) } ++
       valueCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__v$i") }: _*)
     val nKeys = seriesKeys.size
-    val outSchema = StructType(in.schema.fields.take(nKeys) :+
-      StructField("__f", ArrayType(DoubleType)))
-    val series = GroupedApply(in, seriesKeys, ordered, outSchema) { (key, it) =>
-      val rows = it.toArray
-      val last = rows.length - 1
-      def order(r: Int) = ordered.indices.map(j => rows(r).get(nKeys + j))
-      var lastTie = last
-      while (lastTie > 0 && order(lastTie - 1) == order(last)) lastTie -= 1
-      val feats = valueCols.indices.flatMap { i =>
-        val c = nKeys + ordered.size + i
-        ExtractKernel(rows.map(r => if (r.isNullAt(c)) 0.0 else r.getDouble(c)),
-          rows.map(!_.isNullAt(c)), lastTie)
-      }
-      Iterator.single(Row.fromSeq(key.toSeq :+ feats))
+    val outSchema = StructType(in.schema.fields.take(nKeys) ++ fields)
+    GroupedApply(in, seriesKeys, ordered, outSchema) { (key, it) =>
+      val series = new Series(it.toArray, nKeys, ordered.size)
+      kernel(series).map(r => Row.fromSeq(key.toSeq ++ r.toSeq))
     }
-    series.select(seriesKeys.map(col) ++ slots.zip(names.drop(nKeys)).map { case ((i, j), name) =>
-      val f = col("__f")(i * width + j)
-      (if (features(j)._2 == DoubleType) f else f.cast(features(j)._2)).as(name)
-    }: _*)
   }
 
   /** Benford first-digit probabilities log10(1 + 1/d), d = 1..9, and
@@ -600,7 +652,6 @@ object TsFeatures {
     */
   def featureRelevanceTau(features: DataFrame, realCols: Seq[String],
                           labelCol: String, alpha: Double = 0.05): DataFrame = {
-    import org.apache.spark.sql.types._
     val y = col(labelCol).cast("double")
     val long = unpivot(features, y, realCols)
       // defined null semantics (the oracle filters identically): a
@@ -766,8 +817,7 @@ object TsFeatures {
     * counts ordered template pairs i≠j whose m-length windows sit
     * within Chebyshev distance r, and A the same for m+1. The pair
     * count is inherently O(n²) PER SERIES (tsfresh pays the same), so
-    * it runs as a [[GroupedApply]]: one hash shuffle on the series
-    * key, per-group sorted iterator, per-group O(n²) double loop —
+    * it runs through [[perSeries]] as a per-series O(n²) double loop —
     * never a cross-series product. At 100 TB the cost is bounded by
     * the LONGEST series, not the table; series beyond ~10⁵ points
     * should be windowed upstream (resample) first, which is how
@@ -783,15 +833,10 @@ object TsFeatures {
     */
   def sampleEntropy(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                     valueCol: String, rFactor: Double = 0.2): DataFrame = {
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("sample_entropy", DoubleType),
-      StructField("approx_entropy", DoubleType)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
+      StructField("approx_entropy", DoubleType))) { s =>
+      val xs = s.points(0)
       val n = xs.length
       val mean = xs.sum / n
       val r = rFactor * math.sqrt(xs.map(x => (x - mean) * (x - mean)).sum / n)
@@ -826,49 +871,45 @@ object TsFeatures {
         val phi3 = c3.map(c => math.log((c + 1).toDouble / n3)).sum / n3
         math.abs(phi2 - phi3)
       }
-      Iterator.single(org.apache.spark.sql.Row(key.get(0), sampEn, apEn))
+      Iterator.single(Row(sampEn, apEn))
     }
   }
 
   /** tsfresh lempel_ziv_complexity (bins=10): quantize the series to
     * `bins` equal-width symbols (searchsorted-left against the bin
     * upper edges, matching tsfresh), count LZ76 phrases over the
-    * symbol sequence, divide by length. The phrase scan is inherently
-    * SEQUENTIAL per series, so it runs as a [[GroupedApply]] (one
-    * shuffle on the key, per-group sorted iterator) and — unlike the
-    * other calculators — has no SQL-window oracle: coverage is
+    * symbol sequence, divide by length; a series with no points yields
+    * null. The phrase scan is inherently SEQUENTIAL per series, so it
+    * runs through [[perSeries]] and — unlike the other calculators —
+    * has no SQL-window oracle: coverage is
     * bench + spec (hand-checked phrases + a naive reimplementation).
     */
   def lempelZiv(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                 valueCol: String, bins: Int = 10): DataFrame = {
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
-      StructField("lz_complexity", DoubleType)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
-      val n = xs.length
-      val mn = xs.min
-      val mx = xs.max
-      // tsfresh: bins upper edges linspace(min,max,bins+1)[1:];
-      // symbol = searchsorted(edges, x, side="left")
-      val edges = (1 to bins).map(j => mn + (mx - mn) * j / bins)
-      val seq = xs.map { x =>
-        val i = edges.indexWhere(_ >= x)
-        if (i < 0) bins - 1 else i
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
+      StructField("lz_complexity", DoubleType))) { s =>
+      val xs = s.points(0)
+      if (xs.isEmpty) Iterator.single(Row(null)) else {
+        val n = xs.length
+        val mn = xs.min
+        val mx = xs.max
+        // tsfresh: bins upper edges linspace(min,max,bins+1)[1:];
+        // symbol = searchsorted(edges, x, side="left")
+        val edges = (1 to bins).map(j => mn + (mx - mn) * j / bins)
+        val seq = xs.map { x =>
+          val i = edges.indexWhere(_ >= x)
+          if (i < 0) bins - 1 else i
+        }
+        val seen = scala.collection.mutable.HashSet.empty[Seq[Int]]
+        var ind = 0
+        var inc = 1
+        while (ind + inc <= n) {
+          val sub = seq.slice(ind, ind + inc).toSeq
+          if (seen.contains(sub)) inc += 1
+          else { seen += sub; ind += inc; inc = 1 }
+        }
+        Iterator.single(Row(seen.size.toDouble / n))
       }
-      val seen = scala.collection.mutable.HashSet.empty[Seq[Int]]
-      var ind = 0
-      var inc = 1
-      while (ind + inc <= n) {
-        val sub = seq.slice(ind, ind + inc).toSeq
-        if (seen.contains(sub)) inc += 1
-        else { seen += sub; ind += inc; inc = 1 }
-      }
-      Iterator.single(org.apache.spark.sql.Row(
-        key.get(0), seen.size.toDouble / n))
     }
   }
 
@@ -913,28 +954,11 @@ object TsFeatures {
     x
   }
 
-  /** Augmented Dickey–Fuller tau statistic with a FIXED lag — the
-    * regression tsfresh's `augmented_dickey_fuller` attribute
-    * "teststat" delegates to (statsmodels `adfuller(x, maxlag=lag,
-    * autolag=None, regression='c')`), minus the AIC lag search: the
-    * per-series iterative refit the search needs has no one-pass
-    * shape, and the MacKinnon p-value surface is a numeric lookup
-    * table — both documented out of scope in SURVEY §3.
-    *
-    * Model: Δy_t = α + β·y_{t−1} + Σ_{i=1..lag} γ_i·Δy_{t−i} + ε,
-    * stat = β̂/se(β̂). One [[GroupedApply]] pass (single hash shuffle,
-    * per-series sorted fold — deterministic given the series), normal
-    * equations solved in-executor; per-series state is the values
-    * array, like every GroupedApply calculator. Like `ts_lempel_ziv`
-    * this ships bench+spec: a 3-regressor OLS oracle in SQL would ride
-    * order-dependent distributed double sums, exactly the class the
-    * repo's oracle protocol excludes.
-    */
   /** Exponentially weighted moving average per series (pandas
     * `ewm(alpha, adjust=False).mean()` analog): y_1 = x_1,
     * y_t = α·x_t + (1−α)·y_{t−1} — an inherently SEQUENTIAL per-series
-    * recursion, so it rides GroupedApply's one-shuffle sorted-group
-    * contract. Unlike the OLS/entropy folds, the recursion is a
+    * recursion, so it runs through [[perSeries]], one output row per
+    * point (a null-valued row gets none). Unlike the OLS/entropy folds, the recursion is a
     * deterministic chain, and both engines must land on the IDENTICAL
     * 6-dp output. A float fold cannot deliver that: with 6-dp inputs
     * the SECOND step y₂ = α·x₂ + (1−α)·x₁ is mathematically an exact
@@ -955,29 +979,16 @@ object TsFeatures {
            valueCol: String, alphaNum: Long = 3, den: Long = 10): DataFrame = {
     require(den > 0 && alphaNum > 0 && alphaNum <= den,
       s"ewma needs 0 < alphaNum <= den, got $alphaNum/$den")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val oIdx = in.schema.fieldIndex(orderCols.head)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
-      in.schema(oIdx), StructField("value", DoubleType),
-      StructField("ewma", DoubleType)))
     val betaNum = den - alphaNum
-    // the StreamOps/ExactAgg micro mirror: BigDecimal HALF_UP == SQL
-    // round(v*1e6)::BIGINT on the same double
-    def micro(v: Double): Long =
-      BigDecimal(v * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    def halfUpDiv(s: Long, d: Long): Long =
-      if (s >= 0) (s + d / 2) / d else -((-s + d / 2) / d)
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(df.schema(orderCols.head),
+      StructField("value", DoubleType), StructField("ewma", DoubleType))) { s =>
+      val xs = s.values(0)
       var ym = 0L
       var first = true
-      it.map { r =>
-        val x = r.getDouble(vIdx)
-        ym = if (first) { first = false; micro(x) }
-          else halfUpDiv(alphaNum * micro(x) + betaNum * ym, den)
-        org.apache.spark.sql.Row(key.get(0), r.get(oIdx), x, ym / 1e6)
+      s.pointRows(0).iterator.map { r =>
+        ym = if (first) { first = false; micro(xs(r)) }
+          else halfUpDiv(alphaNum * micro(xs(r)) + betaNum * ym, den)
+        Row(s.order(r).head, xs(r), ym / 1e6)
       }
     }
   }
@@ -992,8 +1003,8 @@ object TsFeatures {
     * land on identical 6-dp output in both engines, so the fold runs
     * in exact integer micro-units with rational α = alphaNum/den,
     * β = betaNum/den and half-up division at each step — replayed
-    * bit-exactly by a two-accumulator recursive CTE. Same
-    * one-shuffle GroupedApply contract; per-step quantization error
+    * bit-exactly by a two-accumulator recursive CTE ([[holtStep]]). Same
+    * [[perSeries]] plan and rows as [[ewma]]; per-step quantization error
     * ≤ 5e-7 and contracting, as in the ewma analysis.
     */
   def holt(df: DataFrame, seriesKey: String, orderCols: Seq[String],
@@ -1001,54 +1012,67 @@ object TsFeatures {
            den: Long = 10): DataFrame = {
     require(den > 0 && alphaNum > 0 && alphaNum <= den && betaNum > 0 && betaNum <= den,
       s"holt needs 0 < alphaNum,betaNum <= den, got $alphaNum,$betaNum/$den")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val oIdx = in.schema.fieldIndex(orderCols.head)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
-      in.schema(oIdx), StructField("value", DoubleType),
-      StructField("level", DoubleType), StructField("trend", DoubleType)))
-    def micro(v: Double): Long =
-      BigDecimal(v * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    def halfUpDiv(s: Long, d: Long): Long =
-      if (s >= 0) (s + d / 2) / d else -((-s + d / 2) / d)
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      var lm = 0L
-      var bm = 0L
-      var first = true
-      it.map { r =>
-        val x = r.getDouble(vIdx)
-        if (first) { first = false; lm = micro(x); bm = 0L }
-        else {
-          val lPrev = lm
-          lm = halfUpDiv(alphaNum * micro(x) + (den - alphaNum) * (lPrev + bm), den)
-          bm = halfUpDiv(betaNum * (lm - lPrev) + (den - betaNum) * bm, den)
-        }
-        org.apache.spark.sql.Row(key.get(0), r.get(oIdx), x, lm / 1e6, bm / 1e6)
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(df.schema(orderCols.head),
+      StructField("value", DoubleType),
+      StructField("level", DoubleType), StructField("trend", DoubleType))) { s =>
+      val xs = s.values(0)
+      var lb: (Long, Long) = null
+      s.pointRows(0).iterator.map { r =>
+        lb = if (lb == null) (micro(xs(r)), 0L)
+          else holtStep(lb, micro(xs(r)), alphaNum, betaNum, den)
+        Row(s.order(r).head, xs(r), lb._1 / 1e6, lb._2 / 1e6)
       }
     }
   }
 
+  /** The integer arithmetic the recursive-CTE oracles of [[ewma]] and
+    * [[holt]] replay: `micro` is SQL `round(v * 1e6)::BIGINT` on the
+    * same double (BigDecimal HALF_UP), `halfUpDiv` is `(s + d/2) // d`
+    * mirrored for a negative s.
+    */
+  private[graft] def micro(v: Double): Long =
+    BigDecimal(v * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  private[graft] def halfUpDiv(s: Long, d: Long): Long =
+    if (s >= 0) (s + d / 2) / d else -((-s + d / 2) / d)
+
+  /** One step of [[holt]]'s micro-unit recursion: the (level, trend)
+    * after observing `xm`, with α = alphaNum/den and β = betaNum/den.
+    * The batch operator and its stream twin both run it, so the two
+    * agree row for row.
+    */
+  private[graft] def holtStep(lb: (Long, Long), xm: Long, alphaNum: Long,
+                              betaNum: Long, den: Long): (Long, Long) = {
+    val (lPrev, bPrev) = lb
+    val lm = halfUpDiv(alphaNum * xm + (den - alphaNum) * (lPrev + bPrev), den)
+    (lm, halfUpDiv(betaNum * (lm - lPrev) + (den - betaNum) * bPrev, den))
+  }
+
+  /** Augmented Dickey–Fuller tau statistic with a FIXED lag — the
+    * regression tsfresh's `augmented_dickey_fuller` attribute
+    * "teststat" delegates to (statsmodels `adfuller(x, maxlag=lag,
+    * autolag=None, regression='c')`). [[adfAutolag]] adds the AIC lag
+    * search and [[adfDistributed]] the MacKinnon p-value.
+    *
+    * Model: Δy_t = α + β·y_{t−1} + Σ_{i=1..lag} γ_i·Δy_{t−i} + ε,
+    * stat = β̂/se(β̂). One [[perSeries]] fold (deterministic given the
+    * series), normal equations solved in-executor. Like `ts_lempel_ziv`
+    * this ships bench+spec: a 3-regressor OLS oracle in SQL would ride
+    * order-dependent distributed double sums, exactly the class the
+    * repo's oracle protocol excludes.
+    */
   def adf(df: DataFrame, seriesKey: String, orderCols: Seq[String],
           valueCol: String, lag: Int = 1): DataFrame = {
     require(lag >= 0, s"adf lag must be >= 0, got $lag")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
-      StructField("adf_stat", DoubleType),
-      StructField("adf_nobs", LongType)))
     val k = lag + 2
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val y = it.map(_.getDouble(vIdx)).toArray
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
+      StructField("adf_stat", DoubleType),
+      StructField("adf_nobs", LongType))) { s =>
+      val y = s.points(0)
       val n = y.length
       val nobs = n - 1 - lag
       def dy(t: Int): Double = y(t) - y(t - 1)
       if (nobs < k + 1) {
-        Iterator.single(org.apache.spark.sql.Row(
-          key.get(0), null, math.max(nobs, 0).toLong))
+        Iterator.single(Row(null, math.max(nobs, 0).toLong))
       } else {
         // regressor row for sample i (t = lag+1+i):
         // [y_{t−1}, Δy_{t−1}, …, Δy_{t−lag}, 1]; target Δy_t
@@ -1088,16 +1112,14 @@ object TsFeatures {
         }
         val se = math.sqrt(rss / (nobs - k) * inv0(0))
         val stat = beta(0) / se
-        Iterator.single(org.apache.spark.sql.Row(
-          key.get(0),
-          if (java.lang.Double.isFinite(stat)) stat else null,
+        Iterator.single(Row(if (java.lang.Double.isFinite(stat)) stat else null,
           nobs.toLong))
       }
     }
   }
 
   /** ADF with statsmodels `autolag="AIC"` for ARBITRARY maxLag — the
-    * per-series GroupedApply generalization of
+    * per-series [[perSeries]] generalization of
     * [[adfAutolagDistributed]]'s shared-text maxLag-1 path (VERDICT
     * r14 #8): every candidate lag 0..maxLag fits on the COMMON sample
     * t ≥ maxLag+1 (statsmodels' equal-nobs comparison), AIC =
@@ -1110,16 +1132,11 @@ object TsFeatures {
   def adfAutolag(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                  valueCol: String, maxLag: Int = 4): DataFrame = {
     require(maxLag >= 0, s"adfAutolag maxLag must be >= 0, got $maxLag")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("adf_stat", DoubleType),
       StructField("adf_lag", IntegerType),
-      StructField("adf_nobs", LongType)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val y = it.map(_.getDouble(vIdx)).toArray
+      StructField("adf_nobs", LongType))) { s =>
+      val y = s.points(0)
       val n = y.length
       def dy(t: Int): Double = y(t) - y(t - 1)
       // one OLS of Δy_t on [y_{t−1}, Δy_{t−1..t−lag}, 1] over samples
@@ -1178,16 +1195,14 @@ object TsFeatures {
         }
       }
       if (candidates.isEmpty)
-        Iterator.single(org.apache.spark.sql.Row(key.get(0), null, null, null))
+        Iterator.single(Row(null, null, null))
       else {
         val lag = candidates.min._2
         fit(lag, lag + 1) match {
           case Some((_, tau, nobs)) if java.lang.Double.isFinite(tau) =>
-            Iterator.single(org.apache.spark.sql.Row(
-              key.get(0), tau, lag, nobs.toLong))
+            Iterator.single(Row(tau, lag, nobs.toLong))
           case _ =>
-            Iterator.single(org.apache.spark.sql.Row(
-              key.get(0), null, lag, null))
+            Iterator.single(Row(null, lag, null))
         }
       }
     }
@@ -1487,8 +1502,8 @@ object TsFeatures {
     * documented "beyond lag 4" skip. statsmodels `pacf(x, method="ld",
     * nlags)`: biased sample autocorrelations r_k feed the
     * Durbin–Levinson recursion; pacf(k) = φ_{kk}. The acf pass and the
-    * O(nlags²) recursion are sequential per series → [[GroupedApply]]
-    * (one hash shuffle, sorted groups). Lags with fewer than 2 usable
+    * O(nlags²) recursion are sequential per series → [[perSeries]].
+    * Lags with fewer than 2 usable
     * points (n ≤ lag + 1) or a zero-variance series yield null, like
     * tsfresh's NaN. Bench + spec (ADF precedent: an SQL oracle would
     * ride order-dependent distributed double sums); the spec pins
@@ -1497,15 +1512,10 @@ object TsFeatures {
   def pacf(df: DataFrame, seriesKey: String, orderCols: Seq[String],
            valueCol: String, nlags: Int = 10): DataFrame = {
     require(nlags >= 1, s"pacf needs nlags >= 1, got $nlags")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("lag", IntegerType, nullable = false),
-      StructField("pacf", DoubleType)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
+      StructField("pacf", DoubleType))) { s =>
+      val xs = s.points(0)
       val n = xs.length
       val mean = xs.sum / n
       val c0 = xs.map(x => (x - mean) * (x - mean)).sum / n
@@ -1522,7 +1532,7 @@ object TsFeatures {
       }
       val phiPrev = new Array[Double](kMax + 1)
       val phiCur = new Array[Double](kMax + 1)
-      val out = Array.newBuilder[org.apache.spark.sql.Row]
+      val out = Array.newBuilder[Row]
       k = 1
       while (k <= nlags) {
         val v: Any =
@@ -1547,7 +1557,7 @@ object TsFeatures {
             System.arraycopy(phiCur, 1, phiPrev, 1, k)
             if (java.lang.Double.isFinite(pk)) pk else null
           }
-        out += org.apache.spark.sql.Row(key.get(0), k, v)
+        out += Row(k, v)
         k += 1
       }
       out.result().iterator
@@ -1560,7 +1570,7 @@ object TsFeatures {
     * min(10·w, n) points — scipy `signal.cwt(x, ricker, widths)`
     * semantics — and the first `nCoeffs` coefficients are emitted per
     * (width, index). The convolution is sequential per series →
-    * [[GroupedApply]]. Bench + spec (naive-reimplementation pin +
+    * [[perSeries]]. Bench + spec (naive-reimplementation pin +
     * an impulse-response identity: cwt of a unit impulse replays the
     * wavelet itself).
     */
@@ -1568,21 +1578,16 @@ object TsFeatures {
           valueCol: String, widths: Seq[Int] = Seq(2, 5, 10, 20),
           nCoeffs: Int = 15): DataFrame = {
     require(widths.nonEmpty && widths.forall(_ > 0), "cwt widths must be positive")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("width", IntegerType, nullable = false),
       StructField("idx", IntegerType, nullable = false),
-      StructField("coeff", DoubleType)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
+      StructField("coeff", DoubleType))) { s =>
+      val xs = s.points(0)
       val n = xs.length
       widths.iterator.flatMap { w =>
         val row = cwtRow(xs, w)
         (0 until math.min(nCoeffs, n)).iterator.map { t =>
-          org.apache.spark.sql.Row(key.get(0), w, t, row(t))
+          Row(w, t, row(t))
         }
       }
     }
@@ -2276,23 +2281,16 @@ object TsFeatures {
     * smallest-width point| over the 10th percentile of the width-1
     * row in a ⌈L/20⌉ window) — the scipy `_identify_ridge_lines` /
     * `_filter_ridge_lines` pipeline replayed step for step.
-    * Sequential per series → [[GroupedApply]]; bench + spec
+    * Sequential per series → [[perSeries]]; bench + spec
     * (bump-counting semantics + determinism; the underlying CWT rows
     * are already pinned against a naive convolution replay).
     */
   def numberCwtPeaks(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                      valueCol: String, n: Int = 5): DataFrame = {
     require(n >= 1, s"numberCwtPeaks needs n >= 1, got $n")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
-      StructField("n_peaks", LongType, nullable = false)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
-      Iterator.single(org.apache.spark.sql.Row(
-        key.get(0), findPeaksCwt(xs, n).length.toLong))
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
+      StructField("n_peaks", LongType, nullable = false))) { s =>
+      Iterator.single(Row(findPeaksCwt(s.points(0), n).length.toLong))
     }
   }
 
@@ -2407,30 +2405,24 @@ object TsFeatures {
     * ⌈m/2⌉, the SCAMP/STUMPY convention), summarized per series as
     * min/max/mean/median/p25/p75. O(n²·m) per series — the same
     * inherent cost tsfresh pays via the matrixprofile lib — so it
-    * rides [[GroupedApply]]: cost bounded by the longest series, never
-    * cross-series. Series too short for two non-overlapping windows
-    * (n < m + ⌈m/2⌉ + 1) or zero-variance windows yield nulls.
+    * runs through [[perSeries]]: cost bounded by the longest series,
+    * never cross-series. Series too short for two non-overlapping
+    * windows (n < m + ⌈m/2⌉ + 1) or zero-variance windows yield nulls.
     * Bench + spec (brute-force pin on hand-checked fixtures).
     */
   def matrixProfile(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                     valueCol: String, window: Int = 4): DataFrame = {
     require(window >= 2, s"matrixProfile window must be >= 2, got $window")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
+    val excl = (window + 1) / 2
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("mp_min", DoubleType), StructField("mp_max", DoubleType),
       StructField("mp_mean", DoubleType), StructField("mp_median", DoubleType),
-      StructField("mp_p25", DoubleType), StructField("mp_p75", DoubleType)))
-    val excl = (window + 1) / 2
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
+      StructField("mp_p25", DoubleType), StructField("mp_p75", DoubleType))) { s =>
+      val xs = s.points(0)
       val n = xs.length
       val nw = n - window + 1
       if (nw < excl + 2) {
-        Iterator.single(org.apache.spark.sql.Row(
-          key.get(0), null, null, null, null, null, null))
+        Iterator.single(Row(null, null, null, null, null, null))
       } else {
         // per-window mean/std for z-normalization
         val mu = new Array[Double](nw)
@@ -2474,8 +2466,7 @@ object TsFeatures {
         }
         val finite = prof.filter(java.lang.Double.isFinite)
         if (finite.isEmpty) {
-          Iterator.single(org.apache.spark.sql.Row(
-            key.get(0), null, null, null, null, null, null))
+          Iterator.single(Row(null, null, null, null, null, null))
         } else {
           val sorted = finite.sorted
           // linear-interpolated percentile (numpy default)
@@ -2485,8 +2476,7 @@ object TsFeatures {
             val hi = math.min(lo + 1, sorted.length - 1)
             sorted(lo) + (h - lo) * (sorted(hi) - sorted(lo))
           }
-          Iterator.single(org.apache.spark.sql.Row(key.get(0),
-            sorted.head, sorted.last, finite.sum / finite.length,
+          Iterator.single(Row(sorted.head, sorted.last, finite.sum / finite.length,
             pct(0.5), pct(0.25), pct(0.75)))
         }
       }
@@ -2508,20 +2498,14 @@ object TsFeatures {
   def friedrich(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                 valueCol: String, bins: Int = 30): DataFrame = {
     require(bins >= 4, s"friedrich needs >= 4 bins, got $bins")
-    import org.apache.spark.sql.types._
-    val in = df.select((col(seriesKey) +: orderCols.map(col)) :+ col(valueCol): _*)
-    val vIdx = in.schema.fieldIndex(valueCol)
-    val keyField = in.schema(in.schema.fieldIndex(seriesKey))
-    val outSchema = StructType(Seq(keyField.copy(nullable = false),
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("coeff_3", DoubleType), StructField("coeff_2", DoubleType),
       StructField("coeff_1", DoubleType), StructField("coeff_0", DoubleType),
-      StructField("max_fixed_point", DoubleType)))
-    GroupedApply(in, Seq(seriesKey), orderCols, outSchema) { (key, it) =>
-      val xs = it.map(_.getDouble(vIdx)).toArray
+      StructField("max_fixed_point", DoubleType))) { s =>
+      val xs = s.points(0)
       val n = xs.length
       if (n < 2) {
-        Iterator.single(org.apache.spark.sql.Row(
-          key.get(0), null, null, null, null, null))
+        Iterator.single(Row(null, null, null, null, null))
       } else {
         val sig = xs.dropRight(1)
         val delta = Array.tabulate(n - 1)(t => xs(t + 1) - xs(t))
@@ -2553,8 +2537,7 @@ object TsFeatures {
           .map(b => (sumX(b) / cnt(b), sumD(b) / cnt(b)))
         val distinctX = pts.map(_._1).distinct.size
         if (distinctX < 4) {
-          Iterator.single(org.apache.spark.sql.Row(
-            key.get(0), null, null, null, null, null))
+          Iterator.single(Row(null, null, null, null, null))
         } else {
           // cubic polyfit via 4x4 normal equations (basis 1, x, x², x³)
           val xtx = Array.ofDim[Double](4, 4)
@@ -2571,12 +2554,10 @@ object TsFeatures {
           }
           val beta = solveLinear(xtx, xty) // ascending degree
           if (beta.exists(v => !java.lang.Double.isFinite(v))) {
-            Iterator.single(org.apache.spark.sql.Row(
-              key.get(0), null, null, null, null, null))
+            Iterator.single(Row(null, null, null, null, null))
           } else {
             val maxFp = cubicMaxRealPart(beta(3), beta(2), beta(1), beta(0))
-            Iterator.single(org.apache.spark.sql.Row(key.get(0),
-              beta(3), beta(2), beta(1), beta(0),
+            Iterator.single(Row(beta(3), beta(2), beta(1), beta(0),
               if (maxFp.isDefined && java.lang.Double.isFinite(maxFp.get))
                 maxFp.get else null))
           }

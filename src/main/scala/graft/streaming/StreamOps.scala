@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.TsFeatures
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
@@ -1071,10 +1072,11 @@ object StreamOps {
 
   /** Streaming twin of [[graft.operators.TsFeatures.holt]]: the
     * (level, trend) integer micro-unit pair carried across
-    * micro-batches per key — identical half-up recursion, so the
-    * drained stream equals the batch frame row for row and shares its
-    * recursive-CTE oracle. O(2 longs) state per key; in-order-source
-    * contract as documented on every stream twin here.
+    * micro-batches per key — the batch operator's own step
+    * (`TsFeatures.holtStep`), so the drained stream equals the batch
+    * frame row for row and shares its recursive-CTE oracle. O(2 longs)
+    * state per key; in-order-source contract as documented on every
+    * stream twin here.
     */
   def holtSmooth(events: DataFrame, alphaNum: Long = 3, betaNum: Long = 1,
                  den: Long = 10): Dataset[HoltRow] = {
@@ -1085,10 +1087,6 @@ object StreamOps {
       col("ts").cast("long").as("ts_ns"),
       eventIdOr0(events),
       col("value").cast("double").as("value")).as[ZEvent]
-    def micro(v: Double): Long =
-      BigDecimal(v * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    def halfUpDiv(s: Long, d: Long): Long =
-      if (s >= 0) (s + d / 2) / d else -((-s + d / 2) / d)
     ds.groupByKey(_.user_id)
       .flatMapGroupsWithState[HoltState, HoltRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -1096,14 +1094,11 @@ object StreamOps {
           val evs = it.toSeq.sortBy(e => (e.ts_ns, e.event_id))
           var st = state.getOption.getOrElse(HoltState(0L, 0L, started = false))
           val out = evs.map { e =>
-            if (!st.started) st = HoltState(micro(e.value), 0L, started = true)
-            else {
-              val lPrev = st.lm
-              val lm = halfUpDiv(alphaNum * micro(e.value) +
-                (den - alphaNum) * (lPrev + st.bm), den)
-              val bm = halfUpDiv(betaNum * (lm - lPrev) + (den - betaNum) * st.bm, den)
-              st = HoltState(lm, bm, started = true)
-            }
+            val xm = TsFeatures.micro(e.value)
+            val (lm, bm) =
+              if (!st.started) (xm, 0L)
+              else TsFeatures.holtStep((st.lm, st.bm), xm, alphaNum, betaNum, den)
+            st = HoltState(lm, bm, started = true)
             HoltRow(uid, e.ts_ns, e.value, st.lm / 1e6, st.bm / 1e6)
           }
           state.update(st)

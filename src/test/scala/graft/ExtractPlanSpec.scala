@@ -36,6 +36,27 @@ class ExtractPlanSpec extends SparkSpec {
     }
   }
 
+  test("every per-series calculator plans exactly one shuffle") {
+    val e = Tables.events(spark, sf).select(col("user_id"), col("ts"), col("value"))
+    val (k, o, v) = ("user_id", Seq("ts"), "value")
+    val calculators = Seq(
+      "sampleEntropy" -> TsFeatures.sampleEntropy(e, k, o, v),
+      "lempelZiv" -> TsFeatures.lempelZiv(e, k, o, v),
+      "ewma" -> TsFeatures.ewma(e, k, o, v),
+      "holt" -> TsFeatures.holt(e, k, o, v),
+      "adf" -> TsFeatures.adf(e, k, o, v),
+      "adfAutolag" -> TsFeatures.adfAutolag(e, k, o, v),
+      "pacf" -> TsFeatures.pacf(e, k, o, v),
+      "cwt" -> TsFeatures.cwt(e, k, o, v),
+      "numberCwtPeaks" -> TsFeatures.numberCwtPeaks(e, k, o, v),
+      "matrixProfile" -> TsFeatures.matrixProfile(e, k, o, v),
+      "friedrich" -> TsFeatures.friedrich(e, k, o, v))
+    for ((name, df) <- calculators) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(hashExchanges(plan) == 1, s"$name must cost exactly one shuffle, got:\n$plan")
+    }
+  }
+
   test("relevance batteries stay inside their pinned shuffle budgets") {
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
     val listener = new QueryExecutionListener {
