@@ -88,6 +88,28 @@ def test_preprocessor_rejects_bad_args(spark, sf_dir):
         Preprocessor(df, cat_labels_threshold=1.5)
     with pytest.raises(IllegalArgumentException, match="scaling"):
         Preprocessor(df, scaling="bogus")
+    with pytest.raises(IllegalArgumentException, match="num_fill_null"):
+        Preprocessor(df, num_fill_null="bogus")
+
+
+def test_preprocessor_forward_fill_roundtrip(spark):
+    from graft import Preprocessor
+
+    rows = [("s1", 1, None), ("s1", 2, 1.0), ("s1", 3, None), ("s1", 4, 4.0),
+            ("s2", 1, 2.0), ("s2", 2, None), ("s2", 3, 3.0)]
+    df = spark.createDataFrame(rows, "sk string, t long, v double")
+    prep = Preprocessor(df, excluded_col=["sk", "t"], time_id="t",
+                        series_key="sk", scaling="standardize",
+                        num_fill_null="forward")
+    back = {(r["sk"], r["t"]): r["v"]
+            for r in prep.inverse_transform(prep.transform(df)).collect()}
+    # each series' leading null stays null, every other null takes the
+    # last value before it, and the known values restore
+    want = {("s1", 1): None, ("s1", 2): 1.0, ("s1", 3): 1.0, ("s1", 4): 4.0,
+            ("s2", 1): 2.0, ("s2", 2): 2.0, ("s2", 3): 3.0}
+    assert back.keys() == want.keys()
+    for k, w in want.items():
+        assert back[k] == (None if w is None else pytest.approx(w, abs=1e-6)), k
 
 
 def test_extract_ts_features(spark, sf_dir):

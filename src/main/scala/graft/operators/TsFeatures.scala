@@ -789,10 +789,6 @@ object TsFeatures {
       .toDF("feature", "corr", "p_value", "kept")
   }
 
-  /** Tumbling-window resample: bucket by `widthNanos` over a
-    * nanosecond-epoch timestamp column, aggregate per (series, bucket).
-    * One shuffle on the composite key.
-    */
   /** Sliding-window resample via Spark's native `window()` (width /
     * slide): one shuffle on (series, window); each event lands in
     * width/slide windows. Same exact-decimal sum/mean stabilization as
@@ -2619,6 +2615,10 @@ object TsFeatures {
     expr(s"(cast($tsNanosCol as long) div $widthNanos) + " +
       s"(case when cast($tsNanosCol as long) % $widthNanos < 0 then -1 else 0 end)")
 
+  /** Tumbling-window resample: bucket by `widthNanos` over a
+    * nanosecond-epoch timestamp column, aggregate per (series, bucket).
+    * One shuffle on the composite key.
+    */
   def resample(df: DataFrame, seriesKey: String, tsNanosCol: String,
                valueCol: String, widthNanos: Long): DataFrame = {
     val bucket = floorDivBucket(tsNanosCol, widthNanos).as("bucket")

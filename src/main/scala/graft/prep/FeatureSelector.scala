@@ -22,9 +22,7 @@ import org.apache.spark.sql.functions._
 final case class SelectionModel(
     dropped: Map[String, String],            // column -> reason
     catModels: Map[String, CatColModel],     // post-drop shrink models
-) {
-  def keptOf(cols: Seq[String]): Seq[String] = cols.filterNot(dropped.contains)
-}
+)
 
 object FeatureSelector {
   val DominantShare = 0.98

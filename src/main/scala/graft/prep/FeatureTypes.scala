@@ -27,7 +27,4 @@ object FeatureTypes {
     schema.fields.toSeq.collect {
       case f if !excluded.contains(f.name) => f.name -> of(f.dataType)
     }
-
-  def columnsOf(schema: StructType, t: FType, excluded: Set[String] = Set.empty): Seq[String] =
-    infer(schema, excluded).collect { case (c, `t`) => c }
 }

@@ -16,10 +16,12 @@ final case class NumColStats(
     quantiles: Seq[Double] = Nil,
 )
 
-/** Null-fill strategies for numerical columns
-  * (reference: utils/numerical_transformer.py:67-103 NUM_FILL_NULL_STRATEGIES).
-  * Order-dependent strategies (Forward/Backward/Interpolate) additionally
-  * need a per-series window — see [[NumericalTransformer.forwardFill]] etc.
+/** Null-fill strategies for numerical columns, the reference's one
+  * `num_fill_null` parameter
+  * (utils/numerical_transformer.py:67-103 NUM_FILL_NULL_STRATEGIES).
+  * [[NumericalTransformer.fill]] applies each of them. The
+  * [[FillStrategy.Ordered]] ones read the neighbouring rows of the
+  * series in `timeId` order, over one per-series window.
   */
 sealed trait FillStrategy
 object FillStrategy {
@@ -30,6 +32,15 @@ object FillStrategy {
   case object Zero        extends FillStrategy
   case object One         extends FillStrategy
   final case class Value(v: Double) extends FillStrategy
+
+  /** A fill that reads the series in order: `fit` requires a `timeId`. */
+  sealed trait Ordered extends FillStrategy
+  /** [[NumericalTransformer.forwardFill]]: leading nulls stay null. */
+  case object Forward     extends Ordered
+  /** [[NumericalTransformer.backwardFill]]: trailing nulls stay null. */
+  case object Backward    extends Ordered
+  /** [[NumericalTransformer.interpolate]]: leading and trailing nulls stay null. */
+  case object Interpolate extends Ordered
 }
 
 /** How quantile boundaries are fitted (kbins / quantile-grid / robust
@@ -176,27 +187,41 @@ object NumericalTransformer {
       stats.map { case (c, s) => c -> s.copy(quantiles = qs.getOrElse(c, Nil)) }
     }
 
-  /** Stateless fill using fit-time stats (mean/min/max) or constants. */
-  def fill(c: Column, strategy: FillStrategy, stats: => NumColStats): Column =
+  /** Fills the nulls of `c` by `strategy`: from fit-time stats
+    * (mean/min/max), a constant, or the series `w` for the
+    * [[FillStrategy.Ordered]] ones. `None_` leaves them null; the
+    * sentinel that stands in for them under some scalings is
+    * [[noneSentinel]].
+    */
+  def fill(c: Column, strategy: FillStrategy, stats: => NumColStats,
+           w: => SeriesWindow = throw new IllegalArgumentException(
+             "an ordered fill needs a series window")): Column =
     strategy match {
-      case FillStrategy.None_    => c
-      case FillStrategy.Mean     => coalesce(c, lit(stats.mean))
-      case FillStrategy.Min      => coalesce(c, lit(stats.min))
-      case FillStrategy.Max      => coalesce(c, lit(stats.max))
-      case FillStrategy.Zero     => coalesce(c, lit(0.0))
-      case FillStrategy.One      => coalesce(c, lit(1.0))
-      case FillStrategy.Value(v) => coalesce(c, lit(v))
+      case FillStrategy.None_       => c
+      case FillStrategy.Mean        => coalesce(c, lit(stats.mean))
+      case FillStrategy.Min         => coalesce(c, lit(stats.min))
+      case FillStrategy.Max         => coalesce(c, lit(stats.max))
+      case FillStrategy.Zero        => coalesce(c, lit(0.0))
+      case FillStrategy.One         => coalesce(c, lit(1.0))
+      case FillStrategy.Value(v)    => coalesce(c, lit(v))
+      case FillStrategy.Forward     => forwardFill(c, w)
+      case FillStrategy.Backward    => backwardFill(c, w)
+      case FillStrategy.Interpolate => interpolate(c, w)
     }
 
-  /** Series window: ALWAYS partitioned by a series key — a per-series
-    * sort after one hash shuffle; never a global single-partition sort.
+  /** The fill-none sentinel (numerical_transformer.py:80-96): min − 0.01
+    * under Normalize, mean − 3σ − 0.01 under Standardize, below every
+    * fitted value; the inverse maps anything at or under it (plus 1e-6
+    * of float slack) back to null. None otherwise: there a null passes
+    * through the scaler both ways (under Quantile, a sentinel would
+    * clamp onto the grid's minimum).
     */
-  def seriesWindow(partition: Seq[Column], order: Seq[Column]): SeriesWindow =
-    SeriesWindow(partition, order)
-
-  /** The order-dependent fills by their configuration name. */
-  val OrderedFills: Map[String, (Column, SeriesWindow) => Column] = Map(
-    "forward" -> forwardFill, "backward" -> backwardFill, "interpolate" -> interpolate)
+  def noneSentinel(strategy: FillStrategy, scaling: Scaling, stats: NumColStats): Option[Double] =
+    (strategy, scaling) match {
+      case (FillStrategy.None_, Scaling.Normalize)   => Some(stats.min - 0.01)
+      case (FillStrategy.None_, Scaling.Standardize) => Some(stats.mean - 3 * stats.std - 0.01)
+      case _                                         => None
+    }
 
   /** Last non-null value at or before the current row (polars
     * fill_null(strategy="forward")): one O(n) preceding frame. `c`

@@ -3,6 +3,7 @@ package graft.prep
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.SeriesWindow
 
 /** Scaling strategies (reference: preprocessor.py SCALING_STRATEGIES). */
 sealed trait Scaling
@@ -26,12 +27,12 @@ object MlTask {
 /** Fit/transform configuration (reference: preprocessor.py:109-162
   * `Preprocessor.__init__` parameters).
   *
-  * `seriesKey`/`timeId` drive the order-dependent fill strategies
-  * (forward/backward/interpolate, [[NumericalTransformer.OrderedFills]]):
-  * `orderedFill` needs `timeId` to order each series, and `fit` rejects
-  * it without one. The window should be partitioned by `seriesKey` —
-  * one hash shuffle, per-series sort — never a global single-partition
-  * sort (SURVEY §4).
+  * `numFillNull` is the reference's one `num_fill_null`. Its
+  * [[FillStrategy.Ordered]] cases (forward/backward/interpolate) order
+  * each series by `timeId`, and `fit` rejects them without one. That
+  * window is partitioned by `seriesKey` when one is set — one hash
+  * shuffle, per-series sort. Without one it is a single global sorted
+  * partition, which does not scale (SURVEY §4).
   */
 final case class PrepConfig(
     catLabelsThreshold: Double = 0.02,
@@ -46,7 +47,6 @@ final case class PrepConfig(
     missingValuesThreshold: Double = 0.999,
     scaling: Scaling = Scaling.None_,
     numFillNull: FillStrategy = FillStrategy.Mean,
-    orderedFill: Option[String] = None, // "forward" | "backward" | "interpolate"; needs timeId
     mlTask: Option[MlTask] = None,
     targetColumn: Option[String] = None,
     maxCategories: Int = 1024,
@@ -107,24 +107,20 @@ final class PrepModel(
     scalers.get(c).map(_.transform(filled)).getOrElse(filled)
   }
 
-  private def fillExpr(cleaned: Column, c: String): Column =
-    config.orderedFill match {
-      case Some(kind) =>
-        NumericalTransformer.OrderedFills(kind)(cleaned, NumericalTransformer.seriesWindow(
-          config.seriesKey.toSeq.map(col), config.timeId.toSeq.map(col)))
-      case None =>
-        (config.numFillNull, config.scaling) match {
-          // reference sentinel behavior for fill="none"
-          // (numerical_transformer.py:80-96): normalize/quantile use
-          // min-0.01, standardize uses mean-3*std-0.01.
-          case (FillStrategy.None_, Scaling.Normalize | _: Scaling.Quantile) =>
-            coalesce(cleaned, lit(numStats(c).min - 0.01))
-          case (FillStrategy.None_, Scaling.Standardize) =>
-            coalesce(cleaned, lit(numStats(c).mean - 3 * numStats(c).std - 0.01))
-          case (FillStrategy.None_, _) => cleaned
-          case (st, _) => NumericalTransformer.fill(cleaned, st, numStats(c))
-        }
-    }
+  private def fillExpr(cleaned: Column, c: String): Column = sentinel(c) match {
+    case Some(s) => coalesce(cleaned, lit(s))
+    case None    => NumericalTransformer.fill(cleaned, config.numFillNull, numStats(c),
+      series(config.timeId.toSeq.map(col)))
+  }
+
+  private def sentinel(c: String): Option[Double] =
+    NumericalTransformer.noneSentinel(config.numFillNull, config.scaling, numStats(c))
+
+  /** Each series in `order`: partitioned by `seriesKey`, or one global
+    * partition without it.
+    */
+  private def series(order: Seq[Column]): SeriesWindow =
+    SeriesWindow(config.seriesKey.toSeq.map(col), order)
 
   private def rawEpoch(c: String): Column = DatetimeTransformer.epoch(c, datetimeFormats.get(c))
 
@@ -138,10 +134,8 @@ final class PrepModel(
     // without one it is a single global sorted partition, matching the
     // reference's single-node semantics.
     val epoch = rawEpoch(c)
-    val w = NumericalTransformer.seriesWindow(
-      config.seriesKey.toSeq.map(col),
-      Seq(rawEpoch(originalOrder(datetimeFeatures).head)))
-    val interp = NumericalTransformer.interpolate(epoch, w)
+    val interp = NumericalTransformer.interpolate(epoch,
+      series(Seq(rawEpoch(originalOrder(datetimeFeatures).head))))
     scalers.get(c).map(_.transform(interp)).getOrElse(interp)
   }
 
@@ -224,15 +218,8 @@ final class PrepModel(
 
   /** fill="none" sentinel back to null (numerical_transformer.py:241-269). */
   private def sentinelToNull(unscaled: Column, c: String): Column =
-    (config.numFillNull, config.scaling) match {
-      // 1e-6 slack: scale∘unscale float noise must not hide the sentinel
-      case (FillStrategy.None_, Scaling.Normalize | _: Scaling.Quantile) =>
-        when(unscaled <= lit(numStats(c).min - 0.01 + 1e-6), lit(null)).otherwise(unscaled)
-      case (FillStrategy.None_, Scaling.Standardize) =>
-        when(unscaled <= lit(numStats(c).mean - 3 * numStats(c).std - 0.01 + 1e-6), lit(null))
-          .otherwise(unscaled)
-      case _ => unscaled
-    }
+    // 1e-6 slack: scale∘unscale float noise must not hide the sentinel
+    sentinel(c).fold(unscaled)(s => when(unscaled <= lit(s + 1e-6), lit(null)).otherwise(unscaled))
 
   /** (numerical sizes, per-categorical dummy counts)
     * (preprocessor.py:640-659 `get_features_sizes`).
@@ -317,12 +304,10 @@ object Preprocessor {
       "The target column is not present in the dataset"))
     config.excludedCols.foreach(c => require(df.columns.contains(c),
       s"The excluded column $c is not present in the dataset"))
-    config.orderedFill.foreach { kind =>
-      require(NumericalTransformer.OrderedFills.contains(kind),
-        s"Invalid value for orderedFill: $kind (expected one of " +
-          NumericalTransformer.OrderedFills.keys.toSeq.sorted.mkString(", ") + ")")
-      require(config.timeId.exists(df.columns.contains),
-        s"orderedFill = $kind needs a timeId column of the dataset to order the rows by")
+    config.numFillNull match {
+      case kind: FillStrategy.Ordered => require(config.timeId.exists(df.columns.contains),
+        s"numFillNull = $kind needs a timeId column of the dataset to order the rows by")
+      case _ =>
     }
 
     val schema = df.schema

@@ -141,17 +141,20 @@ object PowerTransform {
 /** Equal-frequency binning into `boundaries.size + 1` bins (polars
   * `qcut` / sklearn KBinsDiscretizer(strategy="quantile") analog,
   * numerical_transformer.py:168-174). Boundaries are the fitted
-  * k/n-quantiles; bin(x) = #{b : b < x}, i.e. left-closed bins.
+  * k/n-quantiles; bin(x) = #{b : b < x}, i.e. left-closed bins. A
+  * null stays null both ways.
   * The when-chain is branch-per-boundary — fine for codegen at the
   * typical n_bins <= 100.
   */
 final case class KBinsScaler(boundaries: Seq[Double]) extends Scaler {
   def transform(c: Column): Column =
-    boundaries.map(b => when(c > lit(b), 1).otherwise(0)).reduce(_ + _).cast("int")
-  /** qcut has no exact inverse; reconstruct the bin's midpoint. */
+    boundaries.map(b => (c > lit(b)).cast("int")).reduce(_ + _)
+  /** qcut has no exact inverse; reconstruct the bin's midpoint. A value
+    * that is no bin index, null included, maps to null.
+    */
   def inverse(c: Column): Column = {
     val mids = midpoints
-    mids.zipWithIndex.foldLeft(lit(mids.last): Column) { case (acc, (m, i)) =>
+    mids.zipWithIndex.foldLeft(lit(null): Column) { case (acc, (m, i)) =>
       when(c === lit(i), lit(m)).otherwise(acc)
     }
   }
@@ -169,7 +172,8 @@ final case class KBinsScaler(boundaries: Seq[Double]) extends Scaler {
   * QuantileTransformer analog, numerical_transformer.py:152-167).
   * `grid(k)` is the k/(n-1)-quantile of the fit data; transform maps
   * x to its interpolated CDF position in [0,1] ("uniform") and
-  * optionally through the normal inverse CDF ("normal").
+  * optionally through the normal inverse CDF ("normal"). A null stays
+  * null both ways.
   *
   * Scale note: unlike a percent_rank window (global sort of the
   * transformed data), the grid makes transform a pure per-row
@@ -183,14 +187,15 @@ final case class QuantileGridScaler(grid: IndexedSeq[Double], normal: Boolean = 
 
   def transform(c: Column): Column = {
     // piecewise-linear CDF: for x in [grid(i), grid(i+1)) ->
-    // (i + frac) / (n-1); clamp outside the grid.
+    // (i + frac) / (n-1); clamp outside the grid. Only a null reaches
+    // the fold's base.
     val segs = (0 until n - 1).map { i =>
       val lo = grid(i); val hi = grid(i + 1)
       val frac =
         if (hi > lo) (c - lit(lo)) / lit(hi - lo) else lit(0.0)
       (lit(i.toDouble) + frac) / lit((n - 1).toDouble)
     }
-    val uniform = (0 until n - 1).reverse.foldLeft(lit(1.0): Column) { (acc, i) =>
+    val uniform = (0 until n - 1).reverse.foldLeft(lit(null): Column) { (acc, i) =>
       when(c < lit(grid(i + 1)), segs(i)).otherwise(acc)
     }
     val clamped = when(c <= lit(grid.head), 0.0)
@@ -205,7 +210,8 @@ final case class QuantileGridScaler(grid: IndexedSeq[Double], normal: Boolean = 
     val segs = (0 until n - 1).map { i =>
       lit(grid(i)) + (pos - lit(i.toDouble)) * lit(grid(i + 1) - grid(i))
     }
-    val interp = (0 until n - 1).reverse.foldLeft(lit(grid.last): Column) { (acc, i) =>
+    // only a null reaches the fold's base
+    val interp = (0 until n - 1).reverse.foldLeft(lit(null): Column) { (acc, i) =>
       when(pos < lit((i + 1).toDouble), segs(i)).otherwise(acc)
     }
     when(u <= 0.0, grid.head).when(u >= 1.0, grid.last).otherwise(interp)
@@ -237,10 +243,11 @@ object Probit {
     coeffs.tail.foldLeft(lit(coeffs.head): Column)((acc, k) => acc * x + lit(k))
 
   /** probit(p) for p in (0,1); input clipped to [1e-7, 1-1e-7]
-    * (SURVEY §3) so transformed extremes stay finite.
+    * (SURVEY §3) so transformed extremes stay finite. A null stays null
+    * (`greatest`/`least` would skip it and clip it to 1e-7).
     */
   def apply(p0: Column): Column = {
-    val p = least(greatest(p0, lit(eps)), lit(1 - eps))
+    val p = when(p0 < lit(eps), lit(eps)).when(p0 > lit(1 - eps), lit(1 - eps)).otherwise(p0)
     val qLow  = sqrt(lit(-2.0) * log(p))
     val xLow  = poly(cc, qLow) / (poly(d, qLow) * qLow + lit(1.0))
     val qMid  = p - lit(0.5)

@@ -74,22 +74,23 @@ object PyBridge {
         s"Invalid value for scaling: $other")
     }
 
-  private def parseFill(s: String): (FillStrategy, Option[String]) =
+  private def parseFill(s: String): FillStrategy =
     s match {
-      case null | "" | "none" => (FillStrategy.None_, None)
-      case "mean"             => (FillStrategy.Mean, None)
-      case "min"              => (FillStrategy.Min, None)
-      case "max"              => (FillStrategy.Max, None)
-      case "zero"             => (FillStrategy.Zero, None)
-      case "one"              => (FillStrategy.One, None)
-      // order-dependent strategies ride the per-series window
-      case k if NumericalTransformer.OrderedFills.contains(k) => (FillStrategy.None_, Some(k))
+      case null | "" | "none" => FillStrategy.None_
+      case "mean"             => FillStrategy.Mean
+      case "min"              => FillStrategy.Min
+      case "max"              => FillStrategy.Max
+      case "zero"             => FillStrategy.Zero
+      case "one"              => FillStrategy.One
+      case "forward"          => FillStrategy.Forward
+      case "backward"         => FillStrategy.Backward
+      case "interpolate"      => FillStrategy.Interpolate
       case num =>
         val v = try num.toDouble catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(
             s"Invalid value for num_fill_null: $num")
         }
-        (FillStrategy.Value(v), None)
+        FillStrategy.Value(v)
     }
 
   private def parseQuantileFit(s: String): QuantileFitMode = s match {
@@ -117,7 +118,6 @@ object PyBridge {
           targetColumn: String,
           maxCategories: Int,
           quantileFit: String): PrepModel = {
-    val (fill, orderedFill) = parseFill(numFillNull)
     val task = mlTask match {
       case null | ""        => None
       case "classification" => Some(MlTask.Classification)
@@ -133,8 +133,7 @@ object PyBridge {
       seriesKey = opt(seriesKey),
       missingValuesThreshold = missingValuesThreshold,
       scaling = parseScaling(scaling, nBins),
-      numFillNull = fill,
-      orderedFill = orderedFill,
+      numFillNull = parseFill(numFillNull),
       mlTask = task,
       targetColumn = opt(targetColumn),
       maxCategories = maxCategories,

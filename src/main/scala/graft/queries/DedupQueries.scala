@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.operators.{Ann, Dedup}
+import StatsQueries.r6
 
 /** Deduplication + similarity coverage (SURVEY §2.3 rows 29-36).
   * TESTDATA documents are all-distinct, so every dedup query injects
@@ -367,7 +368,6 @@ object DedupQueries {
       val np = if (m.isNullAt(0)) 0L else m.getLong(0)
       val nt = if (m.isNullAt(1)) 0L else m.getLong(1)
       val tp = m.getLong(2)
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       val p = tp.toDouble / np
       val r = tp.toDouble / nt
       val f1 = if (tp == 0) 0.0 else 2.0 * p * r / (p + r)
@@ -1361,8 +1361,7 @@ object DedupQueries {
       .map(row => row.getInt(0) -> row.getLong(1)).toMap
     val rows = fracs.map { r =>
       val hits = hitsByCfg.getOrElse(if (r == nShards) 0 else r, 0L)
-      val rec = BigDecimal(hits.toDouble / nTruth)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val rec = r6(hits.toDouble / nTruth)
       (r, nShards, hits, nTruth, rec)
     }
     rows.toDF("n_route", "n_shards", "hits", "n_truth", "recall")
@@ -1846,7 +1845,6 @@ object DedupQueries {
       val nTri = wedges.join(ore.as("z"),
         col("p") === col("z.u") && col("q") === col("z.v")).count()
       val cc = if (wedgePairs == 0) 0.0 else 3.0 * nTri / wedgePairs
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((nN, nEdges, wedgePairs, nTri, r6(cc)))
         .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles", "c_global")
@@ -1958,7 +1956,6 @@ object DedupQueries {
         .groupBy(col("query_id")).agg(count(col("n2")).as("n_hit"))
       val t = hits.agg(sum(col("n_hit")), count(lit(1))).head()
       val mean = t.getLong(0).toDouble / (5.0 * t.getLong(1))
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       hits.select(col("query_id"), col("n_hit"),
         round(col("n_hit") / lit(5.0), 6).as("recall"),
         lit(r6(mean)).as("mean_recall"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.operators.SeriesWindow
 import graft.prep._
 
 /** Numerical-transformer coverage (SURVEY §2.1 rows 4-14).
@@ -105,7 +106,7 @@ object NumPrepQueries {
     "fill_forward",
     (s, dir) => {
       val df = nulledEvents(s, dir)
-      val w = NumericalTransformer.seriesWindow(Seq(col("user_id")), Seq(col("event_id")))
+      val w = SeriesWindow(Seq(col("user_id")), Seq(col("event_id")))
       df.select(col("event_id"), col("user_id"),
         round(NumericalTransformer.forwardFill(col("v"), w), 6).as("filled"))
     },
@@ -121,7 +122,7 @@ object NumPrepQueries {
     "fill_backward",
     (s, dir) => {
       val df = nulledEvents(s, dir)
-      val w = NumericalTransformer.seriesWindow(Seq(col("user_id")), Seq(col("event_id")))
+      val w = SeriesWindow(Seq(col("user_id")), Seq(col("event_id")))
       df.select(col("event_id"), col("user_id"),
         round(NumericalTransformer.backwardFill(col("v"), w), 6).as("filled"))
     },
@@ -138,7 +139,7 @@ object NumPrepQueries {
     "fill_interpolate",
     (s, dir) => {
       val df = nulledEvents(s, dir)
-      val w = NumericalTransformer.seriesWindow(Seq(col("user_id")), Seq(col("event_id")))
+      val w = SeriesWindow(Seq(col("user_id")), Seq(col("event_id")))
       df.select(col("event_id"), col("user_id"),
         round(NumericalTransformer.interpolate(col("v"), w), 6).as("filled"))
     },

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.prep._
+import StatsQueries.r6
 
 /** Full Preprocessor orchestration coverage (SURVEY §2.1 rows 22-24):
   * fit -> transform composed over selection + shrink + fill + scale +
@@ -261,7 +262,6 @@ object PipelineQueries {
         .groupBy(col("digit")).agg(count(lit(1)).as("n"))
         .orderBy(col("digit")).collect() // 9-cell fit state
       val total = digits.map(_.getLong(1)).sum
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       val rows = digits.map { r =>
         val d = r.getLong(0)
         val n = r.getLong(1)
@@ -421,7 +421,6 @@ object PipelineQueries {
         .groupBy(col("feature"), col("binf").cast("long").as("bin"))
         .agg(sum(col("isA")).as("n_a"), sum(lit(1L) - col("isA")).as("n_b"))
         .orderBy(col("feature"), col("bin")).collect() // bounded: 3 × 10
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       feats.map { f =>
         val rows = counts.filter(_.getString(0) == f)
@@ -502,7 +501,6 @@ object PipelineQueries {
       }
       val ece = terms.map(_._2).sum / 1e8
       val mce = terms.map(_._3).max / 1e8
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((n, terms.length.toLong, r6(ece), r6(mce)))
         .toDF("n", "n_bins", "ece", "mce")
@@ -789,8 +787,7 @@ object PipelineQueries {
       val (ne, na, nb, nab) =
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       val nHat = (na + 1.0) * (nb + 1.0) / (nab + 1.0) - 1.0
-      Seq((ne, na, nb, nab,
-        BigDecimal(nHat).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      Seq((ne, na, nb, nab, r6(nHat)))
         .toDF("n_exact", "n_a", "n_b", "n_both", "n_hat")
     },
     Some(s"""
@@ -893,8 +890,6 @@ object PipelineQueries {
     val n = m(k, k)
     def s1(i: Int) = m(i, k)
     def p(i: Int, j: Int) = m(math.min(i, j), math.max(i, j))
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     for {
       i <- corrCols.indices
       j <- (i + 1) until corrCols.length
@@ -902,7 +897,7 @@ object PipelineQueries {
       val corr = (n * p(i, j) - s1(i) * s1(j)) /
         (math.sqrt(n * p(i, i) - s1(i) * s1(i)) *
           math.sqrt(n * p(j, j) - s1(j) * s1(j)))
-      (corrCols(i), corrCols(j), round6(corr) + 0.0)
+      (corrCols(i), corrCols(j), r6(corr) + 0.0)
     }
   }
 
@@ -1077,9 +1072,7 @@ object PipelineQueries {
         def est(reg: org.apache.spark.sql.DataFrame): Double =
           HllSketch.estimate(reg, m).head().getDouble(0)
         val (a, b, u) = (est(ra), est(rb), est(ru))
-        def round6(x: Double): Double =
-          BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        Seq((round6(a), round6(b), round6(u), round6(a + b - u)))
+        Seq((r6(a), r6(b), r6(u), r6(a + b - u)))
           .toDF("est_a", "est_b", "est_union", "est_intersect")
       },
       Some {
@@ -1187,12 +1180,10 @@ object PipelineQueries {
       val w = bins.map(_.getLong(1)).toIndexedSeq
       val sPos = bins.map(_.getLong(2)).toIndexedSeq
       val iso = graft.operators.Calibration.pav(w, sPos)
-      def round6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       bins.indices.map { i =>
         (bins(i).getLong(0), w(i), sPos(i),
-          round6(sPos(i).toDouble / w(i).toDouble), round6(iso(i)))
+          r6(sPos(i).toDouble / w(i).toDouble), r6(iso(i)))
       }.toDF("bin", "w", "s", "rate_raw", "rate_iso")
     },
     Some(s"""
@@ -1242,7 +1233,6 @@ object PipelineQueries {
       val scored = Tables.events(s, dir)
         .select(round(col("value") * 100).cast("long").as("cents"), y.as("y"))
       val (np, nn, auc) = graft.operators.Eval.auc(scored, "cents", "y")
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((np, nn, r6(auc), r6(2 * auc - 1)))
         .toDF("n_pos", "n_neg", "auc", "gini")
@@ -1350,7 +1340,6 @@ object PipelineQueries {
         .collect() // bounded: r×c = 25 cells
         .toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       val (n, nr, nc, dof, chi2, v, p) = graft.operators.Eval.cramersV(cells)
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((n, nr, nc, dof, r6(chi2), r6(v), r6(p)))
         .toDF("n", "r", "c", "dof", "chi2", "cramers_v", "p_wh")
@@ -1410,7 +1399,6 @@ object PipelineQueries {
       val (n, miM, hrM, hcM) = graft.operators.Eval.mutualInfo(cells)
       val (mi, hr, hc) = (miM / 1e6, hrM / 1e6, hcM / 1e6)
       val nmi = mi / math.sqrt(hr * hc)
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((n, r6(mi), r6(hr), r6(hc), r6(nmi)))
         .toDF("n", "mi", "h_row", "h_col", "nmi")
@@ -1485,7 +1473,6 @@ object PipelineQueries {
       val (b0, b1, b2, r2) = graft.operators.Eval.ols2(
         n, c1(0), c1(1), c1(2),
         c2(0, 0), c2(0, 1), c2(1, 1), c2(0, 2), c2(1, 2), c2(2, 2))
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((n.toLong, r6(b0), r6(b1), r6(b2), r6(r2)))
         .toDF("n", "b_intercept", "b_quantity", "b_discount", "r2")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Q, Tables}
+import StatsQueries.r6
 
 /** Relational/engine layer: the query surface Polars gives the
   * reference (select/filter/group_by/agg/join/sort/window), expressed
@@ -1014,7 +1015,6 @@ object RelationalQueries {
       val rb = kB.toDouble / nB
       val pp = (kA + kB).toDouble / (nA + nB)
       val den = math.sqrt(pp * (1 - pp) * (1.0 / nA + 1.0 / nB))
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       // degenerate pooled rate (0 or 1): the test is undefined → null
       val (z6, p6) =
         if (den == 0) (None, None)
@@ -1167,7 +1167,6 @@ object RelationalQueries {
           sum(col("i") * col("cents")).as("six")).head()
       val (n, sx, six) = (r.getLong(0), r.getLong(1), r.getLong(2))
       val gini = 2.0 * six / (n.toDouble * sx) - (n + 1).toDouble / n
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((n, r6(sx / 100.0), r6(gini))).toDF("n_users", "total_revenue", "gini")
     },
@@ -1570,7 +1569,6 @@ object RelationalQueries {
       val e = (nA + nB) / 2.0
       val chi2 = (nA - e) * (nA - e) / e + (nB - e) * (nB - e) / e
       val p = TsFeatures.normTwoSidedP(math.sqrt(chi2))
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((nA, nB, r6(nA.toDouble / nB), r6(chi2), r6(p), if (p < 0.001) 1 else 0))
         .toDF("n_a", "n_b", "ratio", "chi2", "p", "srm_flag")

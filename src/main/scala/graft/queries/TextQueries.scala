@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.operators.{FreqSketch, TextAnalysis}
+import StatsQueries.r6
 
 /** Text-analysis coverage (SURVEY §2.3 rows 37-40) over documents. */
 object TextQueries {
@@ -1337,7 +1338,6 @@ object TextQueries {
         Seq.fill(math.min(c, 10L).toInt)(g)
       }.take(10)
       val idcg = ideal.zipWithIndex.map { case (rel, i) => term(rel, i + 1) }.sum
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((nJudged, r6(dcg / 1e6), r6(idcg / 1e6), r6(dcg.toDouble / idcg)))
         .toDF("n_judged", "dcg", "idcg", "ndcg")
@@ -1398,7 +1398,6 @@ object TextQueries {
         terms.map(_._3).sum / 1e6, terms.map(_._4).sum / 1e6)
       val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
       val intercept = (sy - slope * sx) / n
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
       Seq((terms.length.toLong, r6(slope), r6(intercept)))
         .toDF("n_terms", "zipf_slope", "zipf_intercept")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.SeriesWindow
 import graft.prep._
 
 class NumPrepSpec extends SparkSpec {
@@ -36,7 +37,7 @@ class NumPrepSpec extends SparkSpec {
   test("interpolate fills between knowns, leaves leading/trailing nulls") {
     val df = Seq((1, None: Option[Double]), (2, Some(10.0)), (3, None), (4, None),
       (5, Some(40.0)), (6, None)).toDF("i", "x")
-    val w = NumericalTransformer.seriesWindow(Seq(lit(1)), Seq($"i"))
+    val w = SeriesWindow(Seq(lit(1)), Seq($"i"))
     val got = df.select($"i", NumericalTransformer.interpolate($"x", w).as("x"))
       .orderBy($"i").collect()
       .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))

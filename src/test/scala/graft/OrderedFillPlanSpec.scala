@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import scala.util.Random
 
 import graft.operators.AsofJoin
-import graft.prep.{PrepConfig, PrepModel, Preprocessor}
+import graft.prep.{FillStrategy, PrepConfig, PrepModel, Preprocessor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing}
 import org.apache.spark.sql.execution.SparkPlan
@@ -89,9 +89,12 @@ object OrderedFillPlanSpec extends AdaptiveSparkPlanHelper {
     spark.sparkContext.parallelize(rows, 3).toDF("sk", "t", "v", "w", "d1", "d2")
   }
 
-  def fit(df: DataFrame, orderedFill: Option[String]): PrepModel =
+  def fit(df: DataFrame, fill: Option[String]): PrepModel =
     Preprocessor.fit(df, PrepConfig(excludedCols = Seq("sk", "t"),
-      seriesKey = Some("sk"), timeId = Some("t"), orderedFill = orderedFill))
+      seriesKey = Some("sk"), timeId = Some("t"),
+      numFillNull = fill.fold[FillStrategy](FillStrategy.Mean)(Map(
+        "forward" -> FillStrategy.Forward, "backward" -> FillStrategy.Backward,
+        "interpolate" -> FillStrategy.Interpolate))))
 
   def exchanges(plan: SparkPlan): Int = collect(plan) { case e: ShuffleExchangeLike => e }.size
 

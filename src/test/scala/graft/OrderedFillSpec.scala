@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 
-import graft.operators.AsofJoin
+import graft.operators.{AsofJoin, SeriesWindow}
 import graft.prep.NumericalTransformer
 
 /** The ordered fills and as-of matches against driver-side brute force,
@@ -27,7 +27,7 @@ class OrderedFillSpec extends SparkSpec {
       }
       val rows = rng.shuffle(series.flatMap { case (s, ts, xs) => ts.zip(xs).map { case (t, x) => (s, t, x) } })
       val df = spark.sparkContext.parallelize(rows, 4).toDF("s", "t", "x")
-      val w = NumericalTransformer.seriesWindow(Seq($"s"), Seq($"t"))
+      val w = SeriesWindow(Seq($"s"), Seq($"t"))
       val got = df.select($"s", $"t",
         NumericalTransformer.forwardFill($"x", w), NumericalTransformer.backwardFill($"x", w),
         NumericalTransformer.interpolate($"x", w)).collect()
@@ -51,8 +51,8 @@ class OrderedFillSpec extends SparkSpec {
         if (rng.nextInt(3) == 0) None else Some(rng.nextGaussian()),
         if (rng.nextInt(3) == 0) None else Some(rng.nextGaussian()))
     val df = spark.sparkContext.parallelize(rows, 3).toDF("s", "t", "d", "x", "y")
-    val byT = NumericalTransformer.seriesWindow(Seq($"s"), Seq($"t"))
-    val byD = NumericalTransformer.seriesWindow(Seq($"s"), Seq($"d"))
+    val byT = SeriesWindow(Seq($"s"), Seq($"t"))
+    val byD = SeriesWindow(Seq($"s"), Seq($"d"))
     val out = df.select($"s", $"x", NumericalTransformer.backwardFill($"y", byT),
       NumericalTransformer.interpolate($"x", byD)).collect()
     val known = rows.groupBy(_._1).map { case (s, rs) => s -> rs.flatMap(_._4) }
@@ -63,13 +63,13 @@ class OrderedFillSpec extends SparkSpec {
   }
 
   test("a window ordered by the filled column leaves forward fill and interpolation as the column") {
-    val w = NumericalTransformer.seriesWindow(Seq($"s"), Seq($"x"))
+    val w = SeriesWindow(Seq($"s"), Seq($"x"))
     assert(NumericalTransformer.forwardFill($"x", w) == $"x")
     assert(NumericalTransformer.interpolate($"x", w) == $"x")
-    assert(NumericalTransformer.interpolate($"x", NumericalTransformer.seriesWindow(Nil, Seq($"x".asc))) == $"x")
+    assert(NumericalTransformer.interpolate($"x", SeriesWindow(Nil, Seq($"x".asc))) == $"x")
     // backward fill does fill the leading nulls; descending order is not the rule's
     assert(NumericalTransformer.backwardFill($"x", w) != $"x")
-    assert(NumericalTransformer.forwardFill($"x", NumericalTransformer.seriesWindow(Nil, Seq($"x".desc))) != $"x")
+    assert(NumericalTransformer.forwardFill($"x", SeriesWindow(Nil, Seq($"x".desc))) != $"x")
   }
 
   for (seed <- 1 to 3)

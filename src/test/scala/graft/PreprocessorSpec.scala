@@ -193,35 +193,29 @@ class PreprocessorSpec extends SparkSpec {
     val m = Preprocessor.fit(df, PrepConfig(
       excludedCols = Seq("sk", "t"),
       seriesKey = Some("sk"), timeId = Some("t"),
-      orderedFill = Some("interpolate")))
+      numFillNull = FillStrategy.Interpolate))
     val out = m.transform(df).orderBy("sk", "t").collect()
     assert(out(1).getDouble(2) == 2.0)  // interpolated
     assert(out(3).isNullAt(2))          // leading null stays null
   }
 
-  private def orderedFillFixture = Seq(
+  private def seriesFixture = Seq(
     ("s1", 3L, Some(3.0)), ("s1", 1L, None), ("s1", 2L, Some(2.0)), ("s2", 1L, None),
   ).toDF("sk", "t", "v")
 
   private def rejected(config: PrepConfig): String =
-    intercept[IllegalArgumentException](Preprocessor.fit(orderedFillFixture, config)).getMessage
-
-  test("fit rejects an unknown ordered fill") {
-    val msg = rejected(PrepConfig(excludedCols = Seq("sk", "t"), seriesKey = Some("sk"),
-      timeId = Some("t"), orderedFill = Some("bogus")))
-    assert(msg.contains("orderedFill") && msg.contains("bogus"), msg)
-  }
+    intercept[IllegalArgumentException](Preprocessor.fit(seriesFixture, config)).getMessage
 
   test("fit rejects interpolation without a timeId") {
     val msg = rejected(PrepConfig(excludedCols = Seq("sk", "t"), seriesKey = Some("sk"),
-      orderedFill = Some("interpolate")))
+      numFillNull = FillStrategy.Interpolate))
     assert(msg.contains("timeId"), msg)
   }
 
   test("fit rejects forward and backward fills without a timeId column") {
-    for (kind <- Seq("forward", "backward"); timeId <- Seq(None, Some("missing"))) {
+    for (kind <- Seq(FillStrategy.Forward, FillStrategy.Backward); timeId <- Seq(None, Some("missing"))) {
       val msg = rejected(PrepConfig(excludedCols = Seq("sk", "t"), seriesKey = Some("sk"),
-        timeId = timeId, orderedFill = Some(kind)))
+        timeId = timeId, numFillNull = kind))
       assert(msg.contains("timeId"), s"$kind, timeId $timeId: $msg")
     }
   }
