@@ -90,6 +90,8 @@ def test_preprocessor_rejects_bad_args(spark, sf_dir):
         Preprocessor(df, scaling="bogus")
     with pytest.raises(IllegalArgumentException, match="num_fill_null"):
         Preprocessor(df, num_fill_null="bogus")
+    with pytest.raises(IllegalArgumentException, match="unseen_labels: bogus"):
+        Preprocessor(df, unseen_labels="bogus")
 
 
 def test_preprocessor_forward_fill_roundtrip(spark):

@@ -90,8 +90,9 @@ object SparkEntry {
     // the remaining former tsfresh skips (SURVEY §3), sequential-per-
     // series GroupedApply folds — bench + spec coverage (TsAdvancedSpec
     // pins each against closed forms / naive replays). ts_cwt, ts_pacf,
-    // ts_friedrich, and ts_matrix_profile moved to TsQueries (oracled,
-    // distributed) in r10; ts_adf followed in r12 (adfDistributed)
+    // ts_friedrich, and ts_matrix_profile moved to TsQueries (oracled)
+    // in r10 and ts_adf in r12; ts_cwt, ts_pacf and ts_adf now call the
+    // single per-series calculators (cwt, pacf, adf)
     "ts_cwt_peaks" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       graft.operators.TsFeatures.numberCwtPeaks(

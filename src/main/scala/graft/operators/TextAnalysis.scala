@@ -63,11 +63,6 @@ object TextAnalysis {
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "you3", "wo3", "ta1", "men5"),
   )
 
-  def langScores(text: Column): Seq[(String, Column)] =
-    LangMarkers.map { case (lang, markers) =>
-      lang -> graft.functions.GraftFunctions.markerRatio(text, markers)
-    }
-
   /** (language, score) with the highest marker score; first language in
     * code order wins ties. One tokenization pass over the text for all
     * languages (graft_langid expression).

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.math.BigInteger
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -909,47 +911,6 @@ object TsFeatures {
     }
   }
 
-  /** Solve the k×k linear system a·x = b by partial-pivot Gaussian
-    * elimination (inputs untouched; NaN vector on a singular pivot).
-    * k = lag+2 ≤ a handful — driver-free, per-series executor work.
-    */
-  private def solveLinear(a0: Array[Array[Double]], b0: Array[Double]): Array[Double] = {
-    val k = b0.length
-    val a = a0.map(_.clone())
-    val b = b0.clone()
-    var c = 0
-    while (c < k) {
-      var p = c
-      var r = c + 1
-      while (r < k) { if (math.abs(a(r)(c)) > math.abs(a(p)(c))) p = r; r += 1 }
-      val tA = a(p); a(p) = a(c); a(c) = tA
-      val tB = b(p); b(p) = b(c); b(c) = tB
-      val piv = a(c)(c)
-      if (piv == 0.0) return Array.fill(k)(Double.NaN)
-      r = c + 1
-      while (r < k) {
-        val f = a(r)(c) / piv
-        if (f != 0.0) {
-          var c2 = c
-          while (c2 < k) { a(r)(c2) -= f * a(c)(c2); c2 += 1 }
-          b(r) -= f * b(c)
-        }
-        r += 1
-      }
-      c += 1
-    }
-    val x = new Array[Double](k)
-    var r = k - 1
-    while (r >= 0) {
-      var s = b(r)
-      var c2 = r + 1
-      while (c2 < k) { s -= a(r)(c2) * x(c2); c2 += 1 }
-      x(r) = s / a(r)(r)
-      r -= 1
-    }
-    x
-  }
-
   /** Exponentially weighted moving average per series (pandas
     * `ewm(alpha, adjust=False).mean()` analog): y_1 = x_1,
     * y_t = α·x_t + (1−α)·y_{t−1} — an inherently SEQUENTIAL per-series
@@ -1026,8 +987,17 @@ object TsFeatures {
     * same double (BigDecimal HALF_UP), `halfUpDiv` is `(s + d/2) // d`
     * mirrored for a negative s.
     */
-  private[graft] def micro(v: Double): Long =
-    BigDecimal(v * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  private[graft] def micro(v: Double): Long = halfUp(v * 1e6)
+  /** SQL `cast(round(d) AS BIGINT)` on a double — BigDecimal HALF_UP of
+    * its shortest decimal form, as Spark evaluates it. Like the ANSI
+    * cast, a NaN, an infinity or a result past the Long range fails,
+    * naming the value, instead of wrapping.
+    */
+  private[graft] def halfUp(d: Double): Long = {
+    if (d.isNaN || d.isInfinite) throw new ArithmeticException(s"round($d) is not a BIGINT")
+    try BigDecimal(d).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact
+    catch { case _: ArithmeticException => throw new ArithmeticException(s"round($d) overflows BIGINT") }
+  }
   private[graft] def halfUpDiv(s: Long, d: Long): Long =
     if (s >= 0) (s + d / 2) / d else -((-s + d / 2) / d)
 
@@ -1043,173 +1013,221 @@ object TsFeatures {
     (lm, halfUpDiv(betaNum * (lm - lPrev) + (den - betaNum) * bPrev, den))
   }
 
-  /** Augmented Dickey–Fuller tau statistic with a FIXED lag — the
-    * regression tsfresh's `augmented_dickey_fuller` attribute
-    * "teststat" delegates to (statsmodels `adfuller(x, maxlag=lag,
-    * autolag=None, regression='c')`). [[adfAutolag]] adds the AIC lag
-    * search and [[adfDistributed]] the MacKinnon p-value.
+  /** Augmented Dickey–Fuller tau with a FIXED lag — tsfresh's
+    * `augmented_dickey_fuller` "teststat" (statsmodels `adfuller(x,
+    * maxlag=lag, autolag=None, regression='c')`) — plus its MacKinnon
+    * p-value. [[adfAutolag]] adds the AIC lag search.
     *
     * Model: Δy_t = α + β·y_{t−1} + Σ_{i=1..lag} γ_i·Δy_{t−i} + ε,
-    * stat = β̂/se(β̂). One [[perSeries]] fold (deterministic given the
-    * series), normal equations solved in-executor. Like `ts_lempel_ziv`
-    * this ships bench+spec: a 3-regressor OLS oracle in SQL would ride
-    * order-dependent distributed double sums, exactly the class the
-    * repo's oracle protocol excludes.
+    * stat = β̂/se(β̂). One [[perSeries]] kernel ([[adfFit]]) computes
+    * the arithmetic the `ts_adf` oracle replays from the [[Adf]] text,
+    * then one projection publishes tau at 6 dp and
+    * [[Adf.mackinnonPExpr]] of the rounded tau. Returns (key, adf_stat,
+    * adf_p, adf_nobs); fewer than lag + 3 samples or a singular X'X
+    * give a null stat. The solve costs O(k·2^k) for k = lag + 2, so
+    * lag is at most [[MaxAdfLag]].
     */
   def adf(df: DataFrame, seriesKey: String, orderCols: Seq[String],
           valueCol: String, lag: Int = 1): DataFrame = {
-    require(lag >= 0, s"adf lag must be >= 0, got $lag")
-    val k = lag + 2
-    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
+    require(lag >= 0 && lag <= MaxAdfLag, s"adf lag must be in 0..$MaxAdfLag, got $lag")
+    val fits = perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("adf_stat", DoubleType),
       StructField("adf_nobs", LongType))) { s =>
-      val y = s.points(0)
-      val n = y.length
-      val nobs = n - 1 - lag
-      def dy(t: Int): Double = y(t) - y(t - 1)
-      if (nobs < k + 1) {
-        Iterator.single(Row(null, math.max(nobs, 0).toLong))
-      } else {
-        // regressor row for sample i (t = lag+1+i):
-        // [y_{t−1}, Δy_{t−1}, …, Δy_{t−lag}, 1]; target Δy_t
-        val xtx = Array.ofDim[Double](k, k)
-        val xty = new Array[Double](k)
-        val row = new Array[Double](k)
-        var i = 0
-        while (i < nobs) {
-          val t = lag + 1 + i
-          row(0) = y(t - 1)
-          var j = 1
-          while (j <= lag) { row(j) = dy(t - j); j += 1 }
-          row(k - 1) = 1.0
-          val tgt = dy(t)
-          var a = 0
-          while (a < k) {
-            var b = 0
-            while (b < k) { xtx(a)(b) += row(a) * row(b); b += 1 }
-            xty(a) += row(a) * tgt
-            a += 1
-          }
-          i += 1
-        }
-        val beta = solveLinear(xtx, xty)
-        val e0 = new Array[Double](k); e0(0) = 1.0
-        val inv0 = solveLinear(xtx, e0) // (X'X)^{-1} column 0
-        var rss = 0.0
-        i = 0
-        while (i < nobs) {
-          val t = lag + 1 + i
-          var pred = beta(k - 1) + beta(0) * y(t - 1)
-          var j = 1
-          while (j <= lag) { pred += beta(j) * dy(t - j); j += 1 }
-          val e = dy(t) - pred
-          rss += e * e
-          i += 1
-        }
-        val se = math.sqrt(rss / (nobs - k) * inv0(0))
-        val stat = beta(0) / se
-        Iterator.single(Row(if (java.lang.Double.isFinite(stat)) stat else null,
-          nobs.toLong))
-      }
+      val xq = s.points(0).map(micro)
+      val tau = adfFit(xq, lag, lag + 1).flatMap(_._2)
+      Iterator.single(Row(tau.getOrElse(null), math.max(xq.length - 1 - lag, 0).toLong))
     }
+    publishAdf(fits, seriesKey, Seq("adf_nobs"))
   }
 
-  /** ADF with statsmodels `autolag="AIC"` for ARBITRARY maxLag — the
-    * per-series [[perSeries]] generalization of
-    * [[adfAutolagDistributed]]'s shared-text maxLag-1 path (VERDICT
-    * r14 #8): every candidate lag 0..maxLag fits on the COMMON sample
-    * t ≥ maxLag+1 (statsmodels' equal-nobs comparison), AIC =
-    * nn·ln(ssr/nn) + 2k picks the lag by (aic, lag) tuple-min (tie →
-    * smaller lag; a zero-SSR perfect fit wins outright), and the
-    * winner refits over its own full t ≥ lag+1 sample. Returns
-    * (key, adf_stat, adf_lag, adf_nobs); series too short for the
-    * largest candidate, or with every candidate singular, yield nulls.
+  /** ADF with statsmodels `autolag="AIC"` for any maxLag, plus the
+    * MacKinnon p-value. Every candidate lag 0..maxLag fits on the
+    * COMMON sample t ≥ maxLag+1 (statsmodels' equal-nobs comparison);
+    * AIC = nn·ln(ssr/nn) + 2k picks the lag by (aic, lag) tuple-min
+    * (tie → smaller lag; a zero-SSR perfect fit takes −1e308), and the
+    * winner refits over its own full t ≥ lag+1 sample. At maxLag 1 this
+    * is the arithmetic the `ts_adf_autolag` oracle replays from the
+    * [[Adf]] text. Returns (key, adf_stat, adf_p, adf_lag, adf_nobs);
+    * a series where any candidate has no fit gives all nulls. maxLag is
+    * at most [[MaxAdfLag]].
     */
   def adfAutolag(df: DataFrame, seriesKey: String, orderCols: Seq[String],
                  valueCol: String, maxLag: Int = 4): DataFrame = {
-    require(maxLag >= 0, s"adfAutolag maxLag must be >= 0, got $maxLag")
-    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
+    require(maxLag >= 0 && maxLag <= MaxAdfLag,
+      s"adfAutolag maxLag must be in 0..$MaxAdfLag, got $maxLag")
+    val fits = perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("adf_stat", DoubleType),
       StructField("adf_lag", IntegerType),
       StructField("adf_nobs", LongType))) { s =>
-      val y = s.points(0)
-      val n = y.length
-      def dy(t: Int): Double = y(t) - y(t - 1)
-      // one OLS of Δy_t on [y_{t−1}, Δy_{t−1..t−lag}, 1] over samples
-      // t = start..n−1; returns (ssr, tau, nobs) or null on a
-      // singular/underdetermined fit
-      def fit(lag: Int, start: Int): Option[(Double, Double, Int)] = {
-        val k = lag + 2
-        val nobs = n - start
-        if (nobs < k + 1) return None
-        val xtx = Array.ofDim[Double](k, k)
-        val xty = new Array[Double](k)
-        val row = new Array[Double](k)
-        var t = start
-        while (t < n) {
-          row(0) = y(t - 1)
-          var j = 1
-          while (j <= lag) { row(j) = dy(t - j); j += 1 }
-          row(k - 1) = 1.0
-          val tgt = dy(t)
-          var a = 0
-          while (a < k) {
-            var b = 0
-            while (b < k) { xtx(a)(b) += row(a) * row(b); b += 1 }
-            xty(a) += row(a) * tgt
-            a += 1
-          }
-          t += 1
-        }
-        val beta = solveLinear(xtx, xty)
-        val e0 = new Array[Double](k); e0(0) = 1.0
-        val inv0 = solveLinear(xtx, e0)
-        var rss = 0.0
-        t = start
-        while (t < n) {
-          var pred = beta(k - 1) + beta(0) * y(t - 1)
-          var j = 1
-          while (j <= lag) { pred += beta(j) * dy(t - j); j += 1 }
-          val e = dy(t) - pred
-          rss += e * e
-          t += 1
-        }
-        val se = math.sqrt(rss / (nobs - k) * inv0(0))
-        val tau = beta(0) / se
-        if (java.lang.Double.isFinite(rss) && java.lang.Double.isFinite(beta(0)))
-          Some((rss, tau, nobs))
-        else None
-      }
-      val commonStart = maxLag + 1
-      val nn = n - commonStart
-      val candidates = (0 to maxLag).flatMap { lag =>
-        fit(lag, commonStart).map { case (ssr, _, _) =>
-          val aic =
-            if (ssr <= 0.0) Double.NegativeInfinity
-            else nn * math.log(ssr / nn) + 2.0 * (lag + 2)
-          (aic, lag)
-        }
-      }
-      if (candidates.isEmpty)
-        Iterator.single(Row(null, null, null))
+      val xq = s.points(0).map(micro)
+      val nn = (xq.length - maxLag - 1).toDouble
+      val aics = (0 to maxLag).map(lag => adfFit(xq, lag, maxLag + 1).map { case (rss, _) =>
+        if (rss <= 0.0) -1e308 else nn * StrictMath.log(rss / nn) + 2.0 * (lag + 2)
+      })
+      if (aics.exists(_.isEmpty)) Iterator.single(Row(null, null, null))
       else {
-        val lag = candidates.min._2
-        fit(lag, lag + 1) match {
-          case Some((_, tau, nobs)) if java.lang.Double.isFinite(tau) =>
-            Iterator.single(Row(tau, lag, nobs.toLong))
-          case _ =>
-            Iterator.single(Row(null, lag, null))
-        }
+        val lag = aics.flatten.zipWithIndex.minBy(_._1)._2
+        val tau = adfFit(xq, lag, lag + 1).flatMap(_._2)
+        Iterator.single(Row(tau.getOrElse(null), lag, (xq.length - lag - 1).toLong))
       }
+    }
+    publishAdf(fits, seriesKey, Seq("adf_lag", "adf_nobs"))
+  }
+
+  /** The largest ADF lag: [[adfFit]]'s determinants memoize 2^(lag+2)
+    * minors, 2.3 MB at this bound.
+    */
+  val MaxAdfLag = 16
+
+  /** The ADF oracles' last step as one projection: tau at 6 dp, then
+    * the MacKinnon p of that rounded tau, also at 6 dp.
+    */
+  private def publishAdf(fits: DataFrame, seriesKey: String, rest: Seq[String]): DataFrame = {
+    requireUniqueOutput(Seq(seriesKey, "adf_stat", "adf_p") ++ rest)
+    fits.withColumn("adf_stat", round(col("adf_stat"), 6) + lit(0.0))
+      .select(col(seriesKey) +: col("adf_stat") +:
+        (round(expr(Adf.mackinnonPExpr("adf_stat")), 6) + lit(0.0)).as("adf_p") +:
+        rest.map(col): _*)
+  }
+
+  /** One ADF regression of Δy_t on [y_{t−1}, Δy_{t−1}, …, Δy_{t−lag}, 1]
+    * over the targets t = start until n of the micro-unit series `xq`,
+    * in the arithmetic of the [[Adf]] text: exact integer moment sums,
+    * each one double division by its micro scale; β by Cramer's rule
+    * over [[laplaceDet]]; RSS = y'y − β'X'y; (X'X)⁻¹[0][0] as
+    * cofactor/det; tau = β₀/√(RSS/(nobs − k)·(X'X)⁻¹[0][0]). At lag 1
+    * every double equals the oracle's. None when there is no β (fewer
+    * than k + 1 samples, or a singular X'X), else the RSS and tau —
+    * None when the variance estimate is not positive.
+    */
+  private def adfFit(xq: Array[Long], lag: Int, start: Int): Option[(Double, Option[Double])] = {
+    val k = lag + 2
+    val nobs = xq.length - start
+    if (nobs < k + 1) return None
+    // per target t: q(0) = y_{t−1}, q(j) = Δy_{t−j}; the constant is implicit
+    val qq = Array.fill(k - 1, k - 1)(new ExactSum)
+    val q1, qz = Array.fill(k - 1)(new ExactSum)
+    val z1, zz = new ExactSum
+    val q = new Array[Long](k - 1)
+    for (t <- start until xq.length) {
+      q(0) = xq(t - 1)
+      for (j <- 1 to lag) q(j) = Math.subtractExact(xq(t - j), xq(t - j - 1))
+      val z = Math.subtractExact(xq(t), xq(t - 1))
+      for (a <- 0 until k - 1) {
+        for (b <- a until k - 1) qq(a)(b).add(q(a), q(b))
+        q1(a).add(q(a), 1L)
+        qz(a).add(q(a), z)
+      }
+      z1.add(z, 1L)
+      zz.add(z, z)
+    }
+    val xtx = Array.ofDim[Double](k, k)
+    for (a <- 0 until k - 1) {
+      for (b <- a until k - 1) {
+        xtx(a)(b) = qq(a)(b).toDouble / 1e12
+        xtx(b)(a) = xtx(a)(b)
+      }
+      xtx(a)(k - 1) = q1(a).toDouble / 1e6
+      xtx(k - 1)(a) = xtx(a)(k - 1)
+    }
+    val nn = nobs.toDouble
+    xtx(k - 1)(k - 1) = nn
+    val xty = Array.tabulate(k)(a => if (a < k - 1) qz(a).toDouble / 1e12 else z1.toDouble / 1e6)
+    cramer(xtx, xty).map { beta =>
+      val rss = zz.toDouble / 1e12 -
+        (1 until k).foldLeft(beta(0) * xty(0))((s, a) => s + beta(a) * xty(a))
+      val det = laplaceDet(xtx)
+      val all = (1 << k) - 1
+      val v = (rss / (nn - k)) * (det(all & ~1) / det(all))
+      (rss, if (v <= 0.0) None else Some(beta(0) / math.sqrt(v)))
     }
   }
 
-  /** Shared expression text for [[adfDistributed]] — the lag-1 ADF
-    * normal equations (3 regressors: y_{t−1}, Δy_{t−1}, constant)
-    * solved by Cramer's rule on moment doubles cast from exact
-    * integer sums; same engine-symmetry device as [[Friedrich]]: both
-    * engines evaluate these strings verbatim, so every IEEE double —
-    * and therefore the 6-dp tau — matches bit-for-bit.
+  /** x solving a·x = b by Cramer's rule over [[laplaceDet]]: x_i =
+    * det(a with column i replaced by b) / det(a). None when det(a) = 0.
+    */
+  private def cramer(a: Array[Array[Double]], b: Array[Double]): Option[Array[Double]] = {
+    val k = b.length
+    val all = (1 << k) - 1
+    val det = laplaceDet(a)(all)
+    if (det == 0.0) None
+    else Some(Array.tabulate(k)(i =>
+      laplaceDet(Array.tabulate(k, k)((r, c) => if (c == i) b(r) else a(r)(c)))(all) / det))
+  }
+
+  /** det of the square matrix `m` by cofactor expansion along the first
+    * row, each minor again along its first row — at k = 3 the op order
+    * of [[Friedrich.det3]]. The returned function maps a column set
+    * (bit mask) of size s to the determinant of the last s rows over
+    * those columns: the full mask gives det(m), the mask without
+    * column 0 the (0, 0) cofactor. Minors are memoized by column set,
+    * so a k×k determinant costs O(k·2^k) products.
+    */
+  private def laplaceDet(m: Array[Array[Double]]): Int => Double = {
+    val k = m.length
+    val memo = new Array[Double](1 << k)
+    val known = new Array[Boolean](1 << k)
+    def det(cols: Int): Double = {
+      if (!known(cols)) {
+        val r = k - Integer.bitCount(cols)
+        var acc = 0.0
+        var i = 0
+        var rest = cols
+        while (rest != 0) {
+          val c = Integer.numberOfTrailingZeros(rest)
+          rest &= rest - 1
+          val minor = cols & ~(1 << c)
+          val term = if (minor == 0) m(r)(c) else m(r)(c) * det(minor)
+          acc = if (i == 0) term else if (i % 2 == 1) acc - term else acc + term
+          i += 1
+        }
+        memo(cols) = acc
+        known(cols) = true
+      }
+      memo(cols)
+    }
+    det
+  }
+
+  /** An exact integer sum of Long products — the order-free sum the
+    * oracles take in decimal(38,0) or HUGEINT. It adds the full 128-bit
+    * product into a 128-bit sum and moves to BigInteger only if that
+    * sum overflows, so no magnitude wraps.
+    */
+  private final class ExactSum {
+    private var hi = 0L // the sum is hi·2^64 + lo, lo unsigned
+    private var lo = 0L
+    private var big: BigInteger = null
+    private def product(a: Long, b: Long) = BigInteger.valueOf(a).multiply(BigInteger.valueOf(b))
+    def add(a: Long, b: Long): Unit =
+      if (big != null) big = big.add(product(a, b))
+      else {
+        val sum = lo + a * b
+        // |a·b| ≤ 2^126, so its high word plus a carry cannot overflow
+        val high = Math.multiplyHigh(a, b) + (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
+        try {
+          hi = Math.addExact(hi, high)
+          lo = sum
+        } catch {
+          case _: ArithmeticException => big = value.add(product(a, b))
+        }
+      }
+    def value: BigInteger =
+      if (big != null) big
+      else BigInteger.valueOf(hi).shiftLeft(64).add(BigInteger.valueOf(lo).and(Word))
+    /** The nearest double, as `cast(sum AS double)` rounds it. */
+    def toDouble: Double =
+      if (big == null && hi == (lo >> 63)) lo.toDouble else value.doubleValue
+  }
+  private val Word = BigInteger.ONE.shiftLeft(64).subtract(BigInteger.ONE)
+
+  /** The lag-1 ADF as SQL text — the specification the `ts_adf` and
+    * `ts_adf_autolag` oracles are generated from, and that [[adfFit]]
+    * replays op for op: the normal equations (3 regressors: y_{t−1},
+    * Δy_{t−1}, constant) solved by Cramer's rule on moment doubles cast
+    * from exact integer sums, so every IEEE double — and therefore the
+    * 6-dp tau — matches bit for bit. [[mackinnonPExpr]] is evaluated
+    * by both engines as written.
     */
   private[graft] object Adf {
     /** X'X with regressor order [y_{t−1}, Δy_{t−1}, 1]. */
@@ -1237,9 +1255,7 @@ object TsFeatures {
     def scaleDiv(power: Int): String =
       if (power == 1) "1000000.0" else "1000000000000.0"
 
-    /** β_i by Cramer; < k+1 usable samples or a singular X'X → null
-      * (the [[adf]] fold's convention).
-      */
+    /** β_i by Cramer; < k+1 usable samples or a singular X'X → null. */
     def beta(i: Int): String =
       s"CASE WHEN nobs < 4 OR det_a = 0.0 THEN NULL " +
         s"ELSE (${Friedrich.det3(aWith(i))} / det_a) END"
@@ -1256,7 +1272,7 @@ object TsFeatures {
       "ELSE ((m22*nn - m2*m2) / det_a) END"
 
     /** tau = β₀/se(β₀); a non-positive variance estimate (constant
-      * series round-off) yields null like the fold's finite-guard.
+      * series round-off) yields null.
       */
     val statExpr: String = """CASE
       WHEN b0 IS NULL THEN NULL
@@ -1351,159 +1367,21 @@ object TsFeatures {
       ("g1", "q1", 2), ("g0", "q0", 1), ("gq", "qq", 2))
   }
 
-  /** DISTRIBUTED fixed-lag ADF tau (lag = 1) — the same statistic as
-    * [[adf]] (statsmodels `adfuller(x, maxlag=1, autolag=None,
-    * regression='c')` teststat) without the per-series fold, and
-    * oracle-replayable — the [[friedrichDistributed]] recipe applied
-    * to the ADF normal equations:
+  /** tsfresh `partial_autocorrelation` at any lag: statsmodels
+    * `pacf(x, method="ld", nlags)` — biased sample autocorrelations
+    * r_k feed the Durbin–Levinson recursion, pacf(k) = φ_kk. The
+    * kernel computes what the `ts_pacf` oracle replays:
     *
-    *  - Per-sample regressors from micro-quantized values via two
-    *    `lead()` columns over one partitioned sort: x1 = y_{t−1},
-    *    x2 = Δy_{t−1}, target z = Δy_t — all exact int64.
-    *  - The ten (co)moment sums accumulate as exact decimal(38,0)
-    *    (order-free), then each moment is ONE double division by the
-    *    micro scale — bit-identical across engines.
-    *  - Cramer's-rule 3×3 solve, RSS via y'y − β'X'y, and tau from
-    *    SHARED expression text ([[Adf]]), so both engines run the
-    *    identical IEEE op sequence.
+    *  - r_k as ONE double division of two exact integers: with
+    *    micro-unit values xq and d_t = n·xq_t − Σxq, r_k = Σd_t·d_{t+k}
+    *    / Σd_t² (the n and μ divisions cancel). Each sum is expanded
+    *    as n²·Σxq_t·xq_{t+k} − n·Σxq·(Σ_{t<n−k} xq_t + Σ_{t≥k} xq_t)
+    *    + (n−k)·(Σxq)², so no term overflows.
+    *  - Durbin–Levinson unrolled in the oracle's fixed op order.
     *
-    * Series shorter than lag+2 points produce no samples (no output
-    * row); nobs < 4 or a singular X'X yields a null stat, like the
-    * fold. One window sort + one map-side-combined groupBy — no
-    * per-series collect, so the shape survives 100 TB.
-    */
-  def adfDistributed(df: DataFrame, seriesKey: String,
-                     orderCols: Seq[String], valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val A = Adf
-    val wOrd = Window.partitionBy(col(seriesKey)).orderBy(orderCols.map(col): _*)
-    val dec = "decimal(38,0)"
-    val sm = df
-      .withColumn("xq", round(col(valueCol) * lit(1e6)).cast("long"))
-      .withColumn("l1", lead(col("xq"), 1).over(wOrd))
-      .withColumn("l2", lead(col("xq"), 2).over(wOrd))
-      .where(col("l2").isNotNull)
-      .select(col(seriesKey),
-        col("l1").as("x1"),
-        (col("l1") - col("xq")).as("x2"),
-        (col("l2") - col("l1")).as("z"))
-    def prod(a: String, b: String) = expr(s"cast($a as $dec) * cast($b as $dec)")
-    val mo = sm.groupBy(col(seriesKey)).agg(
-      count(lit(1)).as("nobs"),
-      sum(prod("x1", "x1")).as("s11"), sum(prod("x1", "x2")).as("s12"),
-      sum(prod("x2", "x2")).as("s22"),
-      sum(col("x1").cast(dec)).as("s1"), sum(col("x2").cast(dec)).as("s2"),
-      sum(prod("x1", "z")).as("u1"), sum(prod("x2", "z")).as("u2"),
-      sum(col("z").cast(dec)).as("u0"), sum(prod("z", "z")).as("zq"))
-    val mo2 = mo.selectExpr(Seq(seriesKey, "nobs") ++
-      A.moments.map { case (m, s, p) =>
-        s"cast($s as double) / ${A.scaleDiv(p)} as $m" } :+
-      "cast(nobs as double) as nn": _*)
-    mo2
-      .withColumn("det_a", expr(Friedrich.det3(A.aMat)))
-      .withColumn("b0", expr(A.beta(0)))
-      .withColumn("b1", expr(A.beta(1)))
-      .withColumn("b2", expr(A.beta(2)))
-      .withColumn("rss", expr(A.rssExpr))
-      .withColumn("inv00", expr(A.inv00Expr))
-      .withColumn("stat6", round(expr(A.statExpr), 6) + lit(0.0))
-      .select(col(seriesKey),
-        col("stat6").as("adf_stat"),
-        (round(expr(A.mackinnonPExpr("stat6")), 6) + lit(0.0)).as("adf_p"),
-        col("nobs").as("adf_nobs"))
-  }
-
-  /** DISTRIBUTED ADF with statsmodels `autolag="AIC"` at maxLag 1
-    * (VERDICT r14 #8 — the default statsmodels path a user reaches
-    * for, where [[adfDistributed]] is the fixed-lag
-    * `autolag=None` variant): per series, BOTH candidate fits (lag 0
-    * and lag 1) run on the common t ≥ 2 sample — which at maxLag 1 is
-    * exactly the lag-1 sample set, so the existing 3×3 Cramer text is
-    * simultaneously the lag-1 selection fit AND its full refit — AIC
-    * picks the lag ((aic, lag) tuple-min: tie → smaller), and the
-    * lag-0 winner re-solves its 2×2 over the one-larger t ≥ 1 sample.
-    * All moments ride exact decimal sums off ONE window pass and ONE
-    * groupBy (conditional sums split the two sample sets); every
-    * double and the ln-based AIC compare are SHARED expression text
-    * ([[Adf]]), so the selection cannot drift between engines.
-    * Output (key, adf_stat, adf_lag, adf_nobs); degenerate series
-    * (either candidate unfittable) yield null stat/lag/nobs.
-    */
-  def adfAutolagDistributed(df: DataFrame, seriesKey: String,
-                            orderCols: Seq[String], valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val A = Adf
-    val wOrd = Window.partitionBy(col(seriesKey)).orderBy(orderCols.map(col): _*)
-    val dec = "decimal(38,0)"
-    val sm = df
-      .withColumn("xq", round(col(valueCol) * lit(1e6)).cast("long"))
-      .withColumn("l1", lead(col("xq"), 1).over(wOrd))
-      .withColumn("l2", lead(col("xq"), 2).over(wOrd))
-      .where(col("l1").isNotNull)
-      .select(col(seriesKey),
-        // lag-0 FULL sample (every t >= 1): x0 = y_{t-1}, z0 = Δy_t
-        col("xq").as("x0"),
-        (col("l1") - col("xq")).as("z0"),
-        // common sample (t >= 2) columns, null on the last pre-row so
-        // the conditional sums skip it
-        when(col("l2").isNotNull, col("l1")).as("x1"),
-        when(col("l2").isNotNull, col("l1") - col("xq")).as("x2"),
-        when(col("l2").isNotNull, col("l2") - col("l1")).as("z"))
-    def prod(a: String, b: String) = expr(s"cast($a as $dec) * cast($b as $dec)")
-    val mo = sm.groupBy(col(seriesKey)).agg(
-      count(col("x1")).as("nobs"), count(lit(1)).as("fcount"),
-      sum(prod("x1", "x1")).as("s11"), sum(prod("x1", "x2")).as("s12"),
-      sum(prod("x2", "x2")).as("s22"),
-      sum(col("x1").cast(dec)).as("s1"), sum(col("x2").cast(dec)).as("s2"),
-      sum(prod("x1", "z")).as("u1"), sum(prod("x2", "z")).as("u2"),
-      sum(col("z").cast(dec)).as("u0"), sum(prod("z", "z")).as("zq"),
-      sum(prod("x0", "x0")).as("p11"), sum(col("x0").cast(dec)).as("p1"),
-      sum(prod("x0", "z0")).as("q1"), sum(col("z0").cast(dec)).as("q0"),
-      sum(prod("z0", "z0")).as("qq"))
-    val mo2 = mo.selectExpr(Seq(seriesKey, "nobs", "fcount") ++
-      (A.moments ++ A.momentsF).map { case (m, s, p) =>
-        s"cast($s as double) / ${A.scaleDiv(p)} as $m" } ++
-      Seq("cast(nobs as double) as nn", "cast(fcount as double) as fnn"): _*)
-    mo2
-      .withColumn("det_a", expr(Friedrich.det3(A.aMat)))
-      .withColumn("b0", expr(A.beta(0)))
-      .withColumn("b1", expr(A.beta(1)))
-      .withColumn("b2", expr(A.beta(2)))
-      .withColumn("rss", expr(A.rssExpr))
-      .withColumn("inv00", expr(A.inv00Expr))
-      .withColumn("stat1", expr(A.statExpr))
-      .withColumn("det0c", expr(A.det0cExpr))
-      .withColumn("b0c", expr(A.b0cExpr))
-      .withColumn("b2c", expr(A.b2cExpr))
-      .withColumn("rss0c", expr(A.rss0cExpr))
-      .withColumn("aic0", expr(A.aic0Expr))
-      .withColumn("aic1", expr(A.aic1Expr))
-      .withColumn("lag", expr(A.lagSelExpr))
-      .withColumn("det0f", expr(A.det0fExpr))
-      .withColumn("b0f", expr(A.b0fExpr))
-      .withColumn("b2f", expr(A.b2fExpr))
-      .withColumn("rss0f", expr(A.rss0fExpr))
-      .withColumn("inv00f", expr(A.inv00fExpr))
-      .withColumn("stat0", expr(A.stat0Expr))
-      .withColumn("stat6", round(expr(A.statSelExpr), 6) + lit(0.0))
-      .select(col(seriesKey),
-        col("stat6").as("adf_stat"),
-        (round(expr(A.mackinnonPExpr("stat6")), 6) + lit(0.0)).as("adf_p"),
-        col("lag").cast("int").as("adf_lag"),
-        expr("CASE WHEN lag IS NULL THEN NULL " +
-          "WHEN lag = 0 THEN fcount ELSE nobs END").as("adf_nobs"))
-  }
-
-  /** tsfresh `partial_autocorrelation` at ANY lag — closes the
-    * documented "beyond lag 4" skip. statsmodels `pacf(x, method="ld",
-    * nlags)`: biased sample autocorrelations r_k feed the
-    * Durbin–Levinson recursion; pacf(k) = φ_{kk}. The acf pass and the
-    * O(nlags²) recursion are sequential per series → [[perSeries]].
-    * Lags with fewer than 2 usable
-    * points (n ≤ lag + 1) or a zero-variance series yield null, like
-    * tsfresh's NaN. Bench + spec (ADF precedent: an SQL oracle would
-    * ride order-dependent distributed double sums); the spec pins
-    * lag-1/lag-2 closed forms and an AR(1) recovery.
+    * One projection rounds pacf to 6 dp. Lags with n ≤ lag + 1 and a
+    * zero-variance series give null; a zero Durbin denominator nulls
+    * its lag and every later one.
     */
   def pacf(df: DataFrame, seriesKey: String, orderCols: Seq[String],
            valueCol: String, nlags: Int = 10): DataFrame = {
@@ -1511,64 +1389,61 @@ object TsFeatures {
     perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
       StructField("lag", IntegerType, nullable = false),
       StructField("pacf", DoubleType))) { s =>
-      val xs = s.points(0)
-      val n = xs.length
-      val mean = xs.sum / n
-      val c0 = xs.map(x => (x - mean) * (x - mean)).sum / n
-      val kMax = math.min(nlags, math.max(n - 1, 0))
-      val r = new Array[Double](kMax + 1)
-      r(0) = 1.0
-      var k = 1
-      while (k <= kMax && c0 > 0) {
-        var s = 0.0
-        var t = 0
-        while (t < n - k) { s += (xs(t) - mean) * (xs(t + k) - mean); t += 1 }
-        r(k) = s / n / c0
-        k += 1
-      }
-      val phiPrev = new Array[Double](kMax + 1)
-      val phiCur = new Array[Double](kMax + 1)
-      val out = Array.newBuilder[Row]
-      k = 1
-      while (k <= nlags) {
-        val v: Any =
-          if (c0 <= 0 || k > kMax || n <= k + 1) null
-          else if (k == 1) { phiPrev(1) = r(1); r(1) }
-          else {
-            var num = r(k)
-            var den = 1.0
-            var j = 1
-            while (j < k) {
-              num -= phiPrev(j) * r(k - j)
-              den -= phiPrev(j) * r(j)
-              j += 1
-            }
-            val pk = if (den == 0.0) Double.NaN else num / den
-            j = 1
-            while (j < k) {
-              phiCur(j) = phiPrev(j) - pk * phiPrev(k - j)
-              j += 1
-            }
-            phiCur(k) = pk
-            System.arraycopy(phiCur, 1, phiPrev, 1, k)
-            if (java.lang.Double.isFinite(pk)) pk else null
+      val xq = s.points(0).map(micro)
+      val n = xq.length
+      val pk = Array.fill[Option[Double]](nlags + 1)(None)
+      val kLive = math.min(nlags, n - 2) // the lags with n > k + 1
+      if (kLive >= 1) {
+        val total = new ExactSum
+        xq.foreach(total.add(_, 1L))
+        val sum = total.value
+        val nB = BigInteger.valueOf(n)
+        val b = (0 to kLive).map { k =>
+          val lagged, ends = new ExactSum
+          for (t <- 0 until n - k) {
+            lagged.add(xq(t), xq(t + k))
+            ends.add(xq(t), 1L)
+            ends.add(xq(t + k), 1L)
           }
-        out += Row(k, v)
-        k += 1
+          nB.multiply(nB).multiply(lagged.value)
+            .subtract(nB.multiply(sum).multiply(ends.value))
+            .add(BigInteger.valueOf(n - k).multiply(sum).multiply(sum))
+        }
+        if (b(0).signum != 0) {
+          val r = b.map(_.doubleValue / b(0).doubleValue)
+          pk(1) = Some(r(1))
+          var phi = Array(0.0, r(1)) // φ_{k−1, j}, j = 1..k−1
+          var k = 2
+          var defined = true // a zero denominator nulls its lag and every later one
+          while (k <= kLive && defined) {
+            var num = r(k)
+            for (j <- 1 until k) num = num - phi(j) * r(k - j)
+            var den = 1.0
+            for (j <- 1 until k) den = den - phi(j) * r(j)
+            defined = den != 0.0
+            if (defined) {
+              val kk = num / den
+              phi = Array.tabulate(k + 1)(j =>
+                if (j == k) kk else if (j == 0) 0.0 else phi(j) - kk * phi(k - j))
+              pk(k) = Some(kk)
+            }
+            k += 1
+          }
+        }
       }
-      out.result().iterator
-    }
+      (1 to nlags).iterator.map(k => Row(k, pk(k).getOrElse(null)))
+    }.withColumn("pacf", round(col("pacf"), 6))
   }
 
-  /** tsfresh `cwt_coefficients` (a.k.a. the Ricker/"Mexican hat"
-    * continuous wavelet transform): for each width w the series is
-    * convolved (same-mode) with the REVERSED Ricker wavelet of
-    * min(10·w, n) points — scipy `signal.cwt(x, ricker, widths)`
-    * semantics — and the first `nCoeffs` coefficients are emitted per
-    * (width, index). The convolution is sequential per series →
-    * [[perSeries]]. Bench + spec (naive-reimplementation pin +
-    * an impulse-response identity: cwt of a unit impulse replays the
-    * wavelet itself).
+  /** tsfresh `cwt_coefficients` (the Ricker/"Mexican hat" continuous
+    * wavelet transform): for each width w the series is convolved
+    * (same-mode) with the REVERSED Ricker wavelet of min(10·w, n)
+    * points — scipy `signal.cwt(x, ricker, widths)` semantics — and
+    * the first `nCoeffs` coefficients are emitted per (width, index).
+    * The kernel computes what the `ts_cwt` oracle replays: the
+    * [[Ricker]] kernel in pico-units times the micro-unit values,
+    * summed exactly, one double division by 1e18, then one projection
+    * rounds to 6 dp. Quantization moves a coefficient by ≲ 1e-6.
     */
   def cwt(df: DataFrame, seriesKey: String, orderCols: Seq[String],
           valueCol: String, widths: Seq[Int] = Seq(2, 5, 10, 20),
@@ -1578,14 +1453,56 @@ object TsFeatures {
       StructField("width", IntegerType, nullable = false),
       StructField("idx", IntegerType, nullable = false),
       StructField("coeff", DoubleType))) { s =>
-      val xs = s.points(0)
-      val n = xs.length
+      val xq = s.points(0).map(micro)
+      val n = xq.length
       widths.iterator.flatMap { w =>
-        val row = cwtRow(xs, w)
+        val m = math.min(10 * w, n)
+        val off = (m - 1) / 2
+        lazy val kq = Ricker.kq(w, m)
         (0 until math.min(nCoeffs, n)).iterator.map { t =>
-          Row(w, t, row(t))
+          val coeff = new ExactSum
+          for (i <- math.max(0, t + off - m + 1) to math.min(n - 1, t + off))
+            coeff.add(xq(i), kq(m - 1 - (t + off - i)))
+          Row(w, t, coeff.toDouble / 1e18)
         }
       }
+    }.withColumn("coeff", round(col("coeff"), 6))
+  }
+
+  /** The Ricker wavelet `ricker(m, w)` in pico-units, as the `ts_cwt`
+    * oracle computes it. Its only transcendental is exp, whose libm
+    * differs between engines, so exp runs in a FIXED op order:
+    * k = ⌊y/ln2 + ½⌋, r = y − k·ln2, a degree-9 Taylor sum left to
+    * right, times 2^k as 1/(1 << −k) (exact); π^¼ is √√π. Every other
+    * op is IEEE-correctly-rounded, so each kernel double is the
+    * oracle's, and kq(j) = `round(kern · 1e12)`. Tables are memoized
+    * per (w, m).
+    */
+  private[graft] object Ricker {
+    private val Ln2 = 0.6931471805599453
+    private val QuarterPi = math.sqrt(math.sqrt(3.141592653589793))
+    private val tables = scala.collection.concurrent.TrieMap.empty[(Int, Int), Array[Long]]
+
+    def kq(w: Int, m: Int): Array[Long] =
+      tables.getOrElseUpdate((w, m), Array.tabulate(m)(j => halfUp(kern(w, m, j) * 1e12)))
+
+    private def kern(w: Int, m: Int, j: Int): Double = {
+      val wd = w.toDouble
+      val x = j.toDouble - (m - 1).toDouble / 2.0
+      val xa = x / wd
+      val y = -(x * x) / (2.0 * wd * wd)
+      val k = math.floor(y / Ln2 + 0.5).toLong
+      val r = y - k.toDouble * Ln2
+      var p = 1.0 + r
+      var power = r
+      var factorial = 1.0
+      for (d <- 2 to 9) {
+        power = power * r
+        factorial = factorial * d
+        p = p + power / factorial
+      }
+      val dx = p * (1.0 / (1L << (-k).toInt).toDouble)
+      (2.0 / (math.sqrt(3.0 * wd) * QuarterPi)) * (1.0 - xa * xa) * dx
     }
   }
 
@@ -2082,171 +1999,6 @@ object TsFeatures {
       (round(expr(F.fpExpr), 6) + lit(0.0)).as("max_fixed_point"))
   }
 
-  /** DISTRIBUTED `partial_autocorrelation` (SURVEY §15 #2) — the same
-    * statsmodels `pacf(x, method="ld")` semantics as [[pacf]] without
-    * the sequential per-series fold, and oracle-replayable:
-    *
-    *  - Biased ACF as an EXACT integer ratio: with micro-quantized
-    *    values xq and d_t = n·xq_t − Σxq (exact int64), the biased
-    *    autocovariance ratio r_k = Σd_t·d_{t+k} / Σd_t² — the n and μ
-    *    divisions cancel — so r_k is one double division of two exact
-    *    decimal(38,0) sums, BIT-IDENTICAL on both engines. The lag
-    *    products ride `lead()` over one partitioned sort (the
-    *    lag-join machinery), then a single map-side-combined groupBy.
-    *  - Durbin–Levinson UNROLLED as fixed-op-order column arithmetic
-    *    (lags 2..nlags, each step publishing its φ row as columns):
-    *    only + − × ÷ on bit-identical doubles, so every engine
-    *    replays every φ and every pacf bit-for-bit — no quantization
-    *    of intermediates needed (the logreg-step recipe, simplified).
-    *
-    * Nulls follow tsfresh: zero-variance series (Σd² = 0) and lags
-    * with n ≤ lag+1 yield null; a zero Durbin denominator nulls that
-    * lag and propagates (the fold's NaN convention). Envelope: |d| ≤
-    * n·|x|·1e6, Σd·d ≤ n·d² must fit decimal(38,0) — holds to ~1e6-pt
-    * series of 1e6-magnitude values, then re-scale the quantization.
-    */
-  def pacfDurbin(df: DataFrame, seriesKey: String, orderCols: Seq[String],
-                 valueCol: String, nlags: Int = 10): DataFrame = {
-    require(nlags >= 2, s"pacfDurbin needs nlags >= 2, got $nlags")
-    import org.apache.spark.sql.expressions.Window
-    val wOrd = Window.partitionBy(col(seriesKey)).orderBy(orderCols.map(col): _*)
-    val wAll = Window.partitionBy(col(seriesKey))
-    val dec = "decimal(38,0)"
-    // pin the window stage's parallelism (the matrixProfileProf
-    // discipline, §12m): the per-row work here — nlags lead() columns
-    // plus nlags+1 decimal(38,0) product sums — is the compute-dense
-    // stage of this operator, and AQE's byte-based coalescing of the
-    // tiny window exchange serialized it onto single-digit tasks at
-    // sf0.1 (Profile r17: 7 tasks total, 2.3 s). Same
-    // hashpartitioning(seriesKey) exchange the window inserts, with
-    // numPartitions pinned to the scale-adaptive knob; results
-    // unchanged (per-series windows + per-series aggregate).
-    val nShuffle = df.sparkSession.conf.get("spark.sql.shuffle.partitions",
-      df.sparkSession.sparkContext.defaultParallelism.toString).toInt
-    val base = df
-      .repartition(nShuffle, col(seriesKey))
-      .withColumn("xq", round(col(valueCol) * lit(1e6)).cast("long"))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .withColumn("s", sum(col("xq")).over(wAll))
-      .withColumn("d", col("n") * col("xq") - col("s"))
-    val withLeads = base.select(
-      (col(seriesKey) +: col("n") +: col("d") +:
-        (1 to nlags).map(k => lead(col("d"), k).over(wOrd).as(s"d$k"))): _*)
-    val sums =
-      sum(col("d").cast(dec) * col("d").cast(dec)).as("b0") +:
-        (1 to nlags).map(k =>
-          sum(col("d").cast(dec) * col(s"d$k").cast(dec)).as(s"b$k"))
-    val acfB = withLeads.groupBy(col(seriesKey), col("n"))
-      .agg(sums.head, sums.tail: _*)
-    val acf = acfB.select(
-      (col(seriesKey) +: col("n") +: col("b0") +:
-        (1 to nlags).map(k => when(col("b0") === 0, lit(null))
-          .otherwise(col(s"b$k").cast("double") / col("b0").cast("double"))
-          .as(s"r$k"))): _*)
-    // Durbin–Levinson, unrolled: f{k}_{j} = φ after step k. The oracle
-    // SQL (TsQueries.pacfOracleSql) is GENERATED from the same loops —
-    // keep the op order here and there in lockstep.
-    var cur = acf.withColumn("f1_1", col("r1"))
-    for (k <- 2 to nlags) {
-      val num = (1 until k).foldLeft(col(s"r$k"))((acc, j) =>
-        acc - col(s"f${k - 1}_$j") * col(s"r${k - j}"))
-      val den = (1 until k).foldLeft(lit(1.0))((acc, j) =>
-        acc - col(s"f${k - 1}_$j") * col(s"r$j"))
-      cur = cur.withColumn(s"k$k",
-        when(den === 0.0, lit(null)).otherwise(num / den))
-      for (j <- 1 until k)
-        cur = cur.withColumn(s"f${k}_$j",
-          col(s"f${k - 1}_$j") - col(s"k$k") * col(s"f${k - 1}_${k - j}"))
-      cur = cur.withColumn(s"f${k}_$k", col(s"k$k"))
-    }
-    val lagCols = (1 to nlags).map { k =>
-      val v = if (k == 1) col("r1") else col(s"k$k")
-      when(col("b0") === 0 || col("n") <= k + 1, lit(null))
-        .otherwise(round(v, 6)).as(s"p$k")
-    }
-    val stacked = cur.select((col(seriesKey) +: lagCols): _*)
-    stacked.select(col(seriesKey),
-      expr("stack(" + nlags + ", " +
-        (1 to nlags).map(k => s"cast($k as bigint), p$k").mkString(", ") +
-        ") as (lag, pacf)"))
-  }
-
-  /** SCATTER-SHAPED `cwt_coefficients` (SURVEY §15 #1) — the same
-    * semantics as [[cwt]] (scipy `signal.cwt(x, ricker, widths)`,
-    * first `nCoeffs` coefficients per width) re-expressed as one
-    * map-side-combinable shuffle instead of a sequential per-series
-    * fold: each input row scatters into its ≤ nCoeffs live target
-    * indices per width (t ∈ [i−off, i−off+m−1] ∩ [0, nCoeffs)), the
-    * kernel value is computed INLINE as pure column arithmetic, and
-    * the coefficient is an exact decimal sum both engines replay.
-    *
-    * Cross-engine determinism: the only transcendental in the Ricker
-    * kernel is exp, whose libm differs between JVM and DuckDB — so
-    * the kernel uses a FIXED-OP-ORDER exp: k = ⌊y/ln2 + ½⌋,
-    * r = y − k·ln2, degree-9 Taylor in explicit left-associated
-    * order, ×2^k via 1/(1<<−k) (exact). Every remaining op (+ − × ÷
-    * sqrt) is IEEE-correctly-rounded, so the kernel doubles are
-    * BIT-IDENTICAL on both engines; π^¼ is sqrt(sqrt(π)) for the same
-    * reason. Kernel quantizes to pico-units (×1e12), values to
-    * micro-units (×1e6); terms are exact int products summed in
-    * decimal(38,0) (≤1e23 ≪ 1e38), so the sum is order-free. Total
-    * quantization error ≲ 1e-6 on the 6-dp-rounded output (measured
-    * 5e-7 max vs the exact double convolution at sf0.001).
-    *
-    * Scale shape: one hash Exchange on the series key for the
-    * (i, n) windows, then a narrow ≤(4·nCoeffs)-fold explode and one
-    * partial-aggregated shuffle on (series, width, idx) — no
-    * per-series collect, no sequential fold; reference
-    * preprocessor.py:558-638 → tsfresh cwt_coefficients delegation.
-    */
-  def cwtScatter(df: DataFrame, seriesKey: String, orderCols: Seq[String],
-                 valueCol: String, nCoeffs: Int = 15): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val LN2 = 0.6931471805599453
-    val qpi = math.sqrt(math.sqrt(3.141592653589793)) // pi^(1/4), 2 exact sqrts
-    val wOrd = Window.partitionBy(col(seriesKey)).orderBy(orderCols.map(col): _*)
-    val wAll = Window.partitionBy(col(seriesKey))
-    val base = df
-      .withColumn("xq", round(col(valueCol) * lit(1e6)).cast("long"))
-      .withColumn("i0", row_number().over(wOrd).cast("long") - 1L)
-      .withColumn("n", count(lit(1)).over(wAll))
-      .select(col(seriesKey), col("i0"), col("xq"), col("n"))
-    val wd = col("w").cast("double")
-    def pw(k: Int): Column = Seq.fill(k)(col("r")).reduceLeft(_ * _)
-    base
-      .withColumn("w", explode(array(Seq(2L, 5L, 10L, 20L).map(lit): _*)))
-      .withColumn("m", least(col("w") * 10L, col("n")))
-      .withColumn("off", expr("(m - 1) DIV 2"))
-      .withColumn("t_lo", greatest(lit(0L), col("i0") - col("off")))
-      .withColumn("t_hi", least(least(lit(nCoeffs.toLong), col("n")) - 1L,
-        col("i0") - col("off") + col("m") - 1L))
-      .where(col("t_hi") >= col("t_lo"))
-      .withColumn("t", explode(sequence(col("t_lo"), col("t_hi"))))
-      .withColumn("j", col("m") - 1L - (col("t") + col("off") - col("i0")))
-      .withColumn("x",
-        col("j").cast("double") - (col("m") - 1L).cast("double") / lit(2.0))
-      .withColumn("xa", col("x") / wd)
-      .withColumn("y", -(col("x") * col("x")) / (lit(2.0) * wd * wd))
-      .withColumn("kk", floor(col("y") / lit(LN2) + lit(0.5)))
-      .withColumn("r", col("y") - col("kk") * lit(LN2))
-      .withColumn("p",
-        lit(1.0) + col("r") + pw(2) / lit(2.0) + pw(3) / lit(6.0) +
-          pw(4) / lit(24.0) + pw(5) / lit(120.0) + pw(6) / lit(720.0) +
-          pw(7) / lit(5040.0) + pw(8) / lit(40320.0) + pw(9) / lit(362880.0))
-      .withColumn("dx", col("p") *
-        (lit(1.0) /
-          expr("cast(shiftleft(cast(1 as bigint), cast(-kk as int)) as double)")))
-      .withColumn("kern",
-        (lit(2.0) / (sqrt(lit(3.0) * wd) * lit(qpi))) *
-          (lit(1.0) - col("xa") * col("xa")) * col("dx"))
-      .withColumn("kq", round(col("kern") * lit(1e12)).cast("long"))
-      .groupBy(col(seriesKey), col("w"), col("t"))
-      .agg(sum(col("xq").cast("decimal(38,0)") * col("kq").cast("decimal(38,0)"))
-        .as("s"))
-      .select(col(seriesKey), col("w").as("width"), col("t").as("idx"),
-        round(col("s").cast("double") / lit(1e18), 6).as("coeff"))
-  }
-
   /** One same-mode Ricker CWT row: convolve(x, ricker(min(10w, n),
     * w)[::-1], mode='same') — scipy `signal.cwt` row semantics.
     */
@@ -2483,8 +2235,8 @@ object TsFeatures {
     * and `max_langevin_fixed_point`: bin x_t into r equal-frequency
     * bins (pandas qcut semantics: linear-interpolated quantile edges,
     * (lo, hi] intervals), per-bin means of x and Δx, weighted-free
-    * cubic `polyfit` over the bin means (normal equations, partial
-    * pivot), coefficients emitted HIGHEST DEGREE FIRST (np.polyfit
+    * cubic `polyfit` over the bin means (normal equations by
+    * [[cramer]]), coefficients emitted HIGHEST DEGREE FIRST (np.polyfit
     * order); the fixed point is max(Re(roots(h))) over all cubic
     * roots (numpy `roots` semantics via Cardano). Series with fewer
     * than order+1 distinct usable bins yield nulls, like tsfresh's
@@ -2548,14 +2300,14 @@ object TsFeatures {
               a += 1
             }
           }
-          val beta = solveLinear(xtx, xty) // ascending degree
-          if (beta.exists(v => !java.lang.Double.isFinite(v))) {
-            Iterator.single(Row(null, null, null, null, null))
-          } else {
-            val maxFp = cubicMaxRealPart(beta(3), beta(2), beta(1), beta(0))
-            Iterator.single(Row(beta(3), beta(2), beta(1), beta(0),
-              if (maxFp.isDefined && java.lang.Double.isFinite(maxFp.get))
-                maxFp.get else null))
+          cramer(xtx, xty) match { // ascending degree
+            case Some(beta) if beta.forall(v => java.lang.Double.isFinite(v)) =>
+              val maxFp = cubicMaxRealPart(beta(3), beta(2), beta(1), beta(0))
+              Iterator.single(Row(beta(3), beta(2), beta(1), beta(0),
+                if (maxFp.isDefined && java.lang.Double.isFinite(maxFp.get))
+                  maxFp.get else null))
+            case _ =>
+              Iterator.single(Row(null, null, null, null, null))
           }
         }
       }

@@ -178,10 +178,10 @@ object CategoricalTransformer {
         // violating the reference's unseen_labels="error" contract
         // (fit-time labels never error). Fail at wiring time instead:
         // fit with buildBloom=true (Preprocessor does when
-        // unseenLabels == "error").
+        // unseenLabels is UnseenLabels.Error).
         throw new IllegalStateException(
           s"oneHotStrict($colName) requires the fit-time bloom filter: " +
-            """fit with buildBloom=true (unseenLabels="error") so """ +
+            "fit with buildBloom=true (unseenLabels = UnseenLabels.Error) so " +
             "fit-time rare labels never raise")
     }
     oneHot(colName, m).zip(m.categories).map { case (dummy, cat) =>

@@ -18,6 +18,19 @@ object Scaling {
   final case class KBins(nBins: Int) extends Scaling
 }
 
+/** What `transform` does with a categorical label `fit` never saw
+  * (reference: preprocessor.py `unseen_labels`).
+  */
+sealed trait UnseenLabels
+object UnseenLabels {
+  /** The label one-hot encodes to all zeros. */
+  case object Ignore extends UnseenLabels
+  /** The job fails on the label; `fit` builds the bloom filters that
+    * tell a rare fit-time label from an unseen one.
+    */
+  case object Error  extends UnseenLabels
+}
+
 sealed trait MlTask
 object MlTask {
   case object Classification extends MlTask
@@ -56,10 +69,7 @@ final case class PrepConfig(
       * still oracle-replayable — see [[QuantileFitMode]]).
       */
     quantileFit: QuantileFitMode = QuantileFitMode.Exact,
-    /** "ignore": unseen labels one-hot to all zeros; "error": the job
-      * fails on an unseen label (preprocessor.py unseen_labels).
-      */
-    unseenLabels: String = "ignore",
+    unseenLabels: UnseenLabels = UnseenLabels.Ignore,
 )
 
 /** The fitted preprocessing model: a handful of driver-side doubles,
@@ -155,7 +165,7 @@ final class PrepModel(
       case c                                    => col(c)
     }
     val dummies = originalOrder(categoricalFeatures).flatMap { c =>
-      if (config.unseenLabels == "error") CategoricalTransformer.oneHotStrict(c, catModels(c))
+      if (config.unseenLabels == UnseenLabels.Error) CategoricalTransformer.oneHotStrict(c, catModels(c))
       else CategoricalTransformer.oneHot(c, catModels(c))
     }
     df.select(plain ++ dummies: _*)
@@ -286,7 +296,7 @@ object Preprocessor {
     *        the categorical columns, before the missing-share drop
     *        ([[CategoricalTransformer.countStats]]; three jobs under AQE,
     *        none without categorical columns), which also builds the
-    *        bloom filters when `unseenLabels = "error"`.
+    *        bloom filters when `unseenLabels = UnseenLabels.Error`.
     *   Only when configured, after them: the Sketch bucket-count job
     *   (`quantileFit = Sketch` with Quantile/KBins scaling) and the
     *   label-encoder distinct (Classification target).
@@ -298,8 +308,6 @@ object Preprocessor {
       "Invalid value for cat_labels_threshold")
     require(config.missingValuesThreshold >= 0 && config.missingValuesThreshold <= 1,
       "Invalid value for missing_values_threshold")
-    require(Set("ignore", "error").contains(config.unseenLabels),
-      "Invalid value for unseen_labels (expected \"ignore\" or \"error\")")
     config.targetColumn.foreach(t => require(df.columns.contains(t),
       "The target column is not present in the dataset"))
     config.excludedCols.foreach(c => require(df.columns.contains(c),
@@ -347,7 +355,7 @@ object Preprocessor {
         config.quantileFit, regressionTarget.toSeq.flatMap(t =>
           Seq(min(col(t)).cast(DoubleType), max(col(t)).cast(DoubleType)))),
       CategoricalTransformer.countStats(df, categorical, config.catLabelsThreshold,
-        buildBloom = config.unseenLabels == "error"))
+        buildBloom = config.unseenLabels == UnseenLabels.Error))
     val total = scan.total.toDouble
     val missingDropped: Map[String, String] =
       if (total == 0) Map.empty

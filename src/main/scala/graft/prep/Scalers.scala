@@ -205,7 +205,7 @@ final case class QuantileGridScaler(grid: IndexedSeq[Double], normal: Boolean = 
   }
 
   def inverse(c: Column): Column = {
-    val u = if (normal) Probit.cdf(c) else c
+    val u = if (normal) Probit.inverse(c) else c
     val pos = u * lit((n - 1).toDouble)
     val segs = (0 until n - 1).map { i =>
       lit(grid(i)) + (pos - lit(i.toDouble)) * lit(grid(i + 1) - grid(i))
@@ -277,6 +277,30 @@ object Probit {
        |    (${poly(a, s"(($pc - 0.5) * ($pc - 0.5))")}) * ($pc - 0.5) /
        |    ((${poly(b, s"(($pc - 0.5) * ($pc - 0.5))")}) * (($pc - 0.5) * ($pc - 0.5)) + 1.0)
        |END)""".stripMargin
+  }
+
+  /** Newton steps of [[inverse]]: from [[cdf]]'s start, two reach the
+    * double round-off of u everywhere in the clip range; the third
+    * covers the ends, where the start is relatively coarsest.
+    */
+  private val newtonSteps = 3
+
+  /** The u in [0, 1] that [[apply]] maps to z. It starts from [[cdf]]
+    * (good to 1.5e-7) clamped into the clip range and takes Newton
+    * steps u ← u − (probit(u) − z)·φ(z) against this probit itself —
+    * φ(z) is 1/probit′(u) at the root — so a transformed u comes back
+    * to about 1e-14. A z at or past a clip bound, probit(1e-7) or
+    * probit(1 − 1e-7), maps to exactly 0 or 1, the way sklearn's
+    * `BOUNDS_THRESHOLD` sends the clipped extremes to the grid ends. A
+    * null stays null.
+    */
+  def inverse(z: Column): Column = {
+    val phi = exp(-z * z / lit(2.0)) / lit(math.sqrt(2 * math.Pi))
+    val u0 = cdf(z)
+    val start = when(u0 < lit(eps), lit(eps)).when(u0 > lit(1 - eps), lit(1 - eps)).otherwise(u0)
+    val refined = aggregate(sequence(lit(1), lit(newtonSteps)), start,
+      (u, _) => u - (apply(u) - z) * phi)
+    when(z <= apply(lit(eps)), 0.0).when(z >= apply(lit(1 - eps)), 1.0).otherwise(refined)
   }
 
   /** Standard normal CDF via erf (A&S 7.1.26, |err| < 1.5e-7). */

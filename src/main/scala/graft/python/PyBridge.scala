@@ -101,6 +101,13 @@ object PyBridge {
       s"Invalid value for quantile_fit: $other")
   }
 
+  private def parseUnseenLabels(s: String): UnseenLabels = s match {
+    case null | "" | "ignore" => UnseenLabels.Ignore
+    case "error"              => UnseenLabels.Error
+    case other => throw new IllegalArgumentException(
+      s"Invalid value for unseen_labels: $other (expected \"ignore\" or \"error\")")
+  }
+
   /** Fit a [[PrepModel]] — the reference `Preprocessor.__init__` knobs
     * as py4j-friendly scalars; null/"" means "not set".
     */
@@ -138,8 +145,7 @@ object PyBridge {
       targetColumn = opt(targetColumn),
       maxCategories = maxCategories,
       quantileFit = parseQuantileFit(quantileFit),
-      unseenLabels = if (unseenLabels == null || unseenLabels.isEmpty) "ignore"
-                     else unseenLabels))
+      unseenLabels = parseUnseenLabels(unseenLabels)))
   }
 
   def transform(model: PrepModel, df: DataFrame): DataFrame =
@@ -316,12 +322,12 @@ object PyBridge {
 
   /** ADF with AIC lag selection at maxLag 1 plus the MacKinnon
     * regression-surface p-value: (key, adf_stat, adf_p, adf_lag,
-    * adf_nobs) — [[graft.operators.TsFeatures.adfAutolagDistributed]].
+    * adf_nobs) — [[graft.operators.TsFeatures.adfAutolag]].
     */
   def adfAutolag(df: DataFrame, seriesKey: String, timeCol: String,
                  valueCol: String): DataFrame =
-    graft.operators.TsFeatures.adfAutolagDistributed(
-      df, seriesKey, Seq(timeCol), valueCol)
+    graft.operators.TsFeatures.adfAutolag(
+      df, seriesKey, Seq(timeCol), valueCol, maxLag = 1)
 
   /** Motif/discord locations over the banded matrix profile:
     * (key, motif_idx, motif_dist, discord_idx, discord_dist).

@@ -264,7 +264,6 @@ object NumPrepQueries {
     */
   val scalePower: Q = {
     val grid = PowerTransform.defaultGrid
-    val gridSql = grid.map(l => s"($l)").mkString(", ")
     Q(
       "scale_power",
       (s, dir) => {

@@ -2180,20 +2180,21 @@ object TsQueries {
   )
 
   /** tsfresh `cwt_coefficients` (Ricker CWT, widths 2/5/10/20, first
-    * 15 coefficients) — the SCATTER-SHAPED redesign (SURVEY §15 #1)
-    * that moved this row from bench-only into the cross-engine hash
-    * protocol: [[graft.operators.TsFeatures.cwtScatter]] computes the
-    * kernel inline with a fixed-op-order deterministic exp (both
-    * engines produce bit-identical doubles), scatters each row into
-    * its ≤15 live targets per width, and sums exact pico×micro
-    * integer products. The oracle replays the identical arithmetic —
-    * same op order, same quantization — so the result hash-matches.
+    * 15 coefficients) in the cross-engine hash protocol:
+    * [[graft.operators.TsFeatures.cwt]] computes the Ricker kernel with
+    * a fixed-op-order exp (both engines produce bit-identical doubles)
+    * and sums exact pico×micro integer products. The oracle scatters
+    * each row into its ≤15 live targets per width and replays the
+    * identical arithmetic — same op order, same quantization — so the
+    * result hash-matches.
     */
   val tsCwt: Q = Q(
     "ts_cwt",
-    (s, dir) => graft.operators.TsFeatures.cwtScatter(
+    (s, dir) => graft.operators.TsFeatures.cwt(
       Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")),
-      "user_id", Seq("ts"), "value"),
+      "user_id", Seq("ts"), "value")
+      .select(col("user_id"), col("width").cast("long").as("width"),
+        col("idx").cast("long").as("idx"), col("coeff")),
     Some("""
       WITH ev AS (
         SELECT user_id,
@@ -2232,8 +2233,8 @@ object TsQueries {
   )
 
   /** GENERATED oracle for `ts_pacf` — built from the same k/j loops as
-    * [[graft.operators.TsFeatures.pacfDurbin]] so the Durbin–Levinson
-    * op order is identical by construction: r_k is one double division
+    * [[graft.operators.TsFeatures.pacf]] so the Durbin–Levinson op
+    * order is identical by construction: r_k is one double division
     * of two exact HUGEINT sums (Σd·d_{+k} / Σd², d = n·xq − Σxq), then
     * each unrolled step publishes its φ row as CTE columns.
     */
@@ -2279,18 +2280,18 @@ object TsQueries {
     """
   }
 
-  /** tsfresh `partial_autocorrelation` lags 1..10 — the r10 redesign
-    * (SURVEY §15 #2) that moved this row from bench-only into the
-    * hash protocol: exact-integer biased-ACF ratios + unrolled
+  /** tsfresh `partial_autocorrelation` lags 1..10 in the hash
+    * protocol: exact-integer biased-ACF ratios + unrolled
     * Durbin–Levinson in bit-identical fixed-op-order doubles on both
-    * engines ([[graft.operators.TsFeatures.pacfDurbin]]); the oracle
-    * text is GENERATED from the same loops.
+    * engines ([[graft.operators.TsFeatures.pacf]]); the oracle text is
+    * GENERATED from the same loops.
     */
   val tsPacf: Q = Q(
     "ts_pacf",
-    (s, dir) => graft.operators.TsFeatures.pacfDurbin(
+    (s, dir) => graft.operators.TsFeatures.pacf(
       Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")),
-      "user_id", Seq("ts"), "value"),
+      "user_id", Seq("ts"), "value")
+      .withColumn("lag", col("lag").cast("long")),
     Some(pacfOracleSql(10)),
   )
 
@@ -2381,12 +2382,10 @@ object TsQueries {
     Some(friedrichOracleSql(30)),
   )
 
-  /** GENERATED oracle for `ts_adf` — shares every scalar expression
-    * string with [[graft.operators.TsFeatures.adfDistributed]] (the
-    * `Adf` builders): the Cramer 3×3 solve, the RSS identity, and the
-    * tau expression run the identical op sequence; only the
-    * exact-int casts (HUGEINT vs decimal(38,0)) and window syntax are
-    * DuckDB-specific.
+  /** GENERATED oracle for `ts_adf` — the `Adf` builders' text, which
+    * [[graft.operators.TsFeatures.adf]] replays op for op: the Cramer
+    * 3×3 solve, the RSS identity, and the tau expression run the
+    * identical op sequence.
     */
   private def adfOracleSql: String = {
     val A = graft.operators.TsFeatures.Adf
@@ -2424,14 +2423,13 @@ object TsQueries {
     """
   }
 
-  /** Fixed-lag-1 ADF tau per series — the r12 conversion of the
-    * GroupedApply fold (which stays, statsmodels-parity-spec'd) into
-    * the oracle protocol via the friedrich machinery: exact-integer
-    * moments, shared-text Cramer solve, 6-dp micro-stable output.
+  /** Fixed-lag-1 ADF tau and MacKinnon p per series
+    * ([[graft.operators.TsFeatures.adf]]): exact-integer moments,
+    * shared-text Cramer solve, 6-dp micro-stable output.
     */
   val tsAdf: Q = Q(
     "ts_adf",
-    (s, dir) => graft.operators.TsFeatures.adfDistributed(
+    (s, dir) => graft.operators.TsFeatures.adf(
       Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")),
       "user_id", Seq("ts"), "value"),
     Some(adfOracleSql),
@@ -2501,15 +2499,16 @@ object TsQueries {
 
   /** ADF with statsmodels `autolag="AIC"` (maxLag 1) per series — the
     * default statsmodels path next to row `ts_adf`'s fixed-lag
-    * variant (VERDICT r14 #8): common-sample AIC selection between the
-    * lag-0 and lag-1 fits, tuple-min tie-break, full-sample refit of
-    * the winner — all shared expression text, fully DuckDB-replayed.
+    * variant ([[graft.operators.TsFeatures.adfAutolag]]):
+    * common-sample AIC selection between the lag-0 and lag-1 fits,
+    * tuple-min tie-break, full-sample refit of the winner — all in the
+    * shared expression text's arithmetic, fully DuckDB-replayed.
     */
   val tsAdfAutolag: Q = Q(
     "ts_adf_autolag",
-    (s, dir) => graft.operators.TsFeatures.adfAutolagDistributed(
+    (s, dir) => graft.operators.TsFeatures.adfAutolag(
       Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")),
-      "user_id", Seq("ts"), "value"),
+      "user_id", Seq("ts"), "value", maxLag = 1),
     Some(adfAutolagOracleSql),
   )
 

@@ -7,10 +7,10 @@ import graft.prep._
   * other row the filled value (within 1e-6), or under KBins the
   * midpoint of the filled value's bin. Two series with leading, middle
   * and trailing nulls and one +inf, which `transform` cleans to a null.
-  * The values span four units: the quantile-normal round trip goes
-  * through a probit clipped at 1e-7 and an erf approximation good to
-  * 1.5e-7, which keeps its error near the grid's ends under 1e-6 only
-  * over a range of a few units.
+  * The values span 1,600 units, so a round trip that loses 1e-9 of the
+  * range shows: the quantile-normal inverse must undo the probit to
+  * about 1e-14 near the grid's ends, not to the 1.5e-7 of an erf
+  * approximation.
   */
 class FillRoundTripSpec extends SparkSpec {
   import spark.implicits._
@@ -18,9 +18,9 @@ class FillRoundTripSpec extends SparkSpec {
 
   /** Per series, the values in `t` order (t = 1, 2, …); None is null. */
   private val series: Seq[(String, Seq[Option[Double]])] = Seq(
-    "s1" -> Seq(None, Some(-1.5), Some(0.5), None, None, Some(2.0),
+    "s1" -> Seq(None, Some(-600.0), Some(200.0), None, None, Some(800.0),
       Some(Double.PositiveInfinity), None),
-    "s2" -> Seq(None, Some(1.25), Some(-0.5), None, Some(2.5), Some(0.25), None))
+    "s2" -> Seq(None, Some(500.0), Some(-200.0), None, Some(1000.0), Some(100.0), None))
 
   private val fills: Seq[FillStrategy] =
     Seq(None_, Mean, Min, Max, Zero, One, Value(0.75), Forward, Backward, Interpolate)

@@ -43,7 +43,7 @@ object PrepGoldenFixtures {
 
   val cases: Seq[(String, PrepConfig)] = Seq(
     "quantile_exact_classification" -> PrepConfig(excludedCols = Seq("id"),
-      scaling = Scaling.Quantile(11), unseenLabels = "error",
+      scaling = Scaling.Quantile(11), unseenLabels = UnseenLabels.Error,
       mlTask = Some(MlTask.Classification), targetColumn = Some("yc")),
     "quantile_sketch_regression" -> PrepConfig(excludedCols = Seq("id"),
       scaling = Scaling.Quantile(11, normal = false), quantileFit = QuantileFitMode.Sketch,
@@ -53,7 +53,7 @@ object PrepGoldenFixtures {
       scaling = Scaling.KBins(5), catLabelsThreshold = 0.05),
     "standardize_strict_sparse" -> PrepConfig(excludedCols = Seq("id"),
       scaling = Scaling.Standardize, numFillNull = FillStrategy.None_,
-      missingValuesThreshold = 0.5, unseenLabels = "error"),
+      missingValuesThreshold = 0.5, unseenLabels = UnseenLabels.Error),
   )
 
   /** Every fitted field as one line each; doubles in their exact

@@ -25,6 +25,14 @@ class TsAdvancedSpec extends SparkSpec {
 
   // ---------------------------------------------------------------- pacf
 
+  /** Half a unit of the 6th decimal, where pacf and cwt publish, plus
+    * double round-off.
+    */
+  private val published = 5e-7 + 1e-12
+
+  /** xs snapped to the 1e-6 grid, so micro-quantization is exact. */
+  private def micro(xs: Array[Double]): Array[Double] = xs.map(v => math.rint(v * 1e6) / 1e6)
+
   private def biasedAcf(xs: Array[Double], k: Int): Double = {
     val n = xs.length
     val mu = xs.sum / n
@@ -32,21 +40,11 @@ class TsAdvancedSpec extends SparkSpec {
     (0 until n - k).map(t => (xs(t) - mu) * (xs(t + k) - mu)).sum / n / c0
   }
 
-  test("pacf lag-1 and lag-2 match the closed forms") {
-    val xs = lcgSeries(64)
-    val out = TsFeatures.pacf(toSeriesDF(xs), "user_id", Seq("ts"), "value", nlags = 4)
-      .orderBy("lag").collect()
-    val r1 = biasedAcf(xs, 1)
-    val r2 = biasedAcf(xs, 2)
-    assert(math.abs(out(0).getDouble(2) - r1) < 1e-12)
-    assert(math.abs(out(1).getDouble(2) - (r2 - r1 * r1) / (1 - r1 * r1)) < 1e-12)
-  }
-
-  test("pacf matches an independent Durbin-Levinson replay at lag 10") {
-    val xs = lcgSeries(120, seed = 7L)
-    val nl = 10
+  /** A naive double Durbin-Levinson replay (textbook formulation, fresh
+    * arrays per step): pacf at lags 1..nl.
+    */
+  private def naivePacf(xs: Array[Double], nl: Int): Array[Double] = {
     val r = (0 to nl).map(k => if (k == 0) 1.0 else biasedAcf(xs, k)).toArray
-    // independent recursion (textbook formulation, fresh arrays per step)
     var phiPrev = Array(0.0, r(1))
     val want = Array.fill(nl + 1)(0.0)
     want(1) = r(1)
@@ -60,10 +58,27 @@ class TsAdvancedSpec extends SparkSpec {
       want(k) = pk
       phiPrev = cur
     }
+    want
+  }
+
+  test("pacf lag-1 and lag-2 match the closed forms") {
+    val xs = micro(lcgSeries(64))
+    val out = TsFeatures.pacf(toSeriesDF(xs), "user_id", Seq("ts"), "value", nlags = 4)
+      .orderBy("lag").collect()
+    val r1 = biasedAcf(xs, 1)
+    val r2 = biasedAcf(xs, 2)
+    assert(math.abs(out(0).getDouble(2) - r1) < published)
+    assert(math.abs(out(1).getDouble(2) - (r2 - r1 * r1) / (1 - r1 * r1)) < published)
+  }
+
+  test("pacf matches an independent Durbin-Levinson replay at lag 10") {
+    val xs = micro(lcgSeries(120, seed = 7L))
+    val nl = 10
+    val want = naivePacf(xs, nl)
     val out = TsFeatures.pacf(toSeriesDF(xs), "user_id", Seq("ts"), "value", nlags = nl)
       .orderBy("lag").collect()
     for (k <- 1 to nl)
-      assert(math.abs(out(k - 1).getDouble(2) - want(k)) < 1e-12, s"lag $k")
+      assert(math.abs(out(k - 1).getDouble(2) - want(k)) < published, s"lag $k")
   }
 
   test("pacf yields null past the usable-lag bound and on constant series") {
@@ -98,67 +113,62 @@ class TsAdvancedSpec extends SparkSpec {
   }
 
   test("cwt matches a naive full-convolution + crop replay") {
-    val xs = lcgSeries(40, seed = 3L)
+    // on the micro grid only the pico-unit kernel quantization (≤ 40 ·
+    // 0.5 · 5e-13) and the 6-dp publication separate the two
+    val xs = micro(lcgSeries(40, seed = 3L))
     for (w <- Seq(2, 5)) {
       val want = naiveCwt(xs, w)
       val out = TsFeatures.cwt(toSeriesDF(xs), "user_id", Seq("ts"), "value",
         widths = Seq(w), nCoeffs = 15).orderBy("idx").collect()
       assert(out.length == 15)
       out.foreach { r =>
-        assert(math.abs(r.getDouble(3) - want(r.getInt(2))) < 1e-12,
+        assert(math.abs(r.getDouble(3) - want(r.getInt(2))) < published + 1e-10,
           s"w=$w idx=${r.getInt(2)}")
       }
     }
   }
 
-  test("pacfDurbin equals the sequential Durbin-Levinson fold within quantization tolerance") {
-    // the distributed version works on micro-quantized values (exact
-    // integer ACF ratios); the fold uses raw doubles — differences are
-    // O(1e-6) on r_k, amplified mildly by the recursion
+  test("pacf tracks the naive double Durbin-Levinson replay within quantization tolerance") {
+    // pacf works on micro-quantized values (exact integer ACF ratios);
+    // the replay uses raw doubles — differences are O(1e-6) on r_k,
+    // amplified mildly by the recursion
     val xs = lcgSeries(80, seed = 11L).map(v => v * 50.0 + 3.0)
-    val df = toSeriesDF(xs)
-    val got = TsFeatures.pacfDurbin(df, "user_id", Seq("ts"), "value")
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toMap
-    val want = TsFeatures.pacf(df, "user_id", Seq("ts"), "value")
-      .collect().map(r => (r.getInt(1).toLong, r.getDouble(2))).toMap
-    assert(got.keySet == (1L to 10L).toSet)
+    val got = TsFeatures.pacf(toSeriesDF(xs), "user_id", Seq("ts"), "value")
+      .collect().map(r => (r.getInt(1), r.getDouble(2))).toMap
+    val want = naivePacf(xs, 10)
+    assert(got.keySet == (1 to 10).toSet)
     got.foreach { case (k, v) =>
       assert(math.abs(v - want(k)) < 1e-4, s"lag=$k got=$v want=${want(k)}")
     }
   }
 
-  test("pacfDurbin: zero-variance series yields all-null pacf") {
+  test("pacf: zero-variance series yields all-null pacf at every default lag") {
     val df = toSeriesDF(Array.fill(30)(7.5))
-    val rows = TsFeatures.pacfDurbin(df, "user_id", Seq("ts"), "value").collect()
+    val rows = TsFeatures.pacf(df, "user_id", Seq("ts"), "value").collect()
     assert(rows.length == 10 && rows.forall(_.isNullAt(2)))
   }
 
-  test("cwtScatter equals the sequential cwt fold within quantization tolerance") {
-    // scatter semantics = the GroupedApply fold's, modulo the documented
-    // pico-kernel/micro-value quantization (measured ≲ 1e-6 end to end;
-    // outputs round at 6 dp). lcg values are in [-0.5, 0.5] so the
+  test("cwt tracks the naive double replay within quantization tolerance") {
+    // the pico-kernel/micro-value quantization (measured ≲ 1e-6 end to
+    // end; outputs round at 6 dp). lcg values are in [-0.5, 0.5] so the
     // micro-quantization error dominates: allow 2e-6.
     val xs = lcgSeries(60, seed = 7L).map(v => v * 100.0)
-    val df = toSeriesDF(xs)
-    val got = TsFeatures.cwtScatter(df, "user_id", Seq("ts"), "value")
-      .collect().map(r => ((r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
-    val want = TsFeatures.cwt(df, "user_id", Seq("ts"), "value")
-      .collect().map(r => ((r.getInt(1).toLong, r.getInt(2).toLong), r.getDouble(3))).toMap
+    val got = TsFeatures.cwt(toSeriesDF(xs), "user_id", Seq("ts"), "value")
+      .collect().map(r => ((r.getInt(1), r.getInt(2)), r.getDouble(3))).toMap
+    val want = (for (w <- Seq(2, 5, 10, 20); row = naiveCwt(xs, w); t <- 0 until 15)
+      yield (w, t) -> row(t)).toMap
     assert(got.keySet == want.keySet)
     got.foreach { case (k, v) =>
       assert(math.abs(v - want(k)) < 2e-6, s"(width,idx)=$k got=$v want=${want(k)}")
     }
   }
 
-  test("cwtScatter plan: no GroupedApply object fold — scatter + one partial agg") {
+  test("cwt plan: one Exchange, no Window") {
     val df = toSeriesDF(lcgSeries(50, seed = 9L))
-    val plan = TsFeatures.cwtScatter(df, "user_id", Seq("ts"), "value")
+    val plan = TsFeatures.cwt(df, "user_id", Seq("ts"), "value")
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("MapGroups") && !plan.contains("mapPartitions"),
-      plan.take(2000))
-    assert(plan.contains("Generate explode"), plan.take(2000)) // the scatter
-    assert(plan.contains("HashAggregate") || plan.contains("ObjectHashAggregate"),
-      plan.take(2000)) // map-side-combinable coefficient sum
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan.take(2000))
+    assert(!plan.contains("Window"), plan.take(2000))
   }
 
   test("cwt of a centered unit impulse replays the wavelet peak") {
@@ -173,7 +183,77 @@ class TsAdvancedSpec extends SparkSpec {
     val amp = 2.0 / (math.sqrt(3.0 * w) * math.pow(math.Pi, 0.25))
     val center = out.find(_.getInt(2) == 9).get.getDouble(3)
     assert(math.abs(center - amp * (1.0 - 0.25 / (w * w)) *
-      math.exp(-0.25 / (2.0 * w * w))) < 1e-12)
+      math.exp(-0.25 / (2.0 * w * w))) < published)
+  }
+
+  test("adf, pacf and cwt are scale-invariant past the Long range of their sums") {
+    // y on the micro grid up to 5e3 and 1e4·y up to 5e7: the micro
+    // products of 1e4·y reach 2.5e27 (moments) and 5e25 (cwt terms),
+    // far past Long, so only exact sums keep them in step
+    val rnd = new scala.util.Random(5)
+    val ys = Array.fill(80)(rnd.nextLong(10000000000L) - 5000000000L) // micro units
+    val small = toSeriesDF(ys.map(_ / 1e6), "y")
+    val large = toSeriesDF(ys.map(k => (k * 10000L) / 1e6), "big")
+    // 1e9·y (values to 5e12) takes pacf's sums past 2^127 as well
+    val huge = toSeriesDF(ys.map(k => (BigDecimal(k) * 1000L).toDouble), "huge")
+    val frame = small.union(large)
+    def byKey[T](df: org.apache.spark.sql.DataFrame)(value: org.apache.spark.sql.Row => T) =
+      df.collect().groupBy(_.getString(0)).map { case (k, rs) => k -> rs.toSeq.map(value) }
+    val tau = byKey(TsFeatures.adf(frame, "user_id", Seq("ts"), "value"))(
+      _.getAs[Double]("adf_stat"))
+    assert(math.abs(tau("y").head - tau("big").head) < 2e-6, tau)
+    val pacf = byKey(TsFeatures.pacf(frame, "user_id", Seq("ts"), "value"))(
+      r => (r.getInt(1), r.getDouble(2))).map { case (k, v) => k -> v.toMap }
+    val hugePacf = TsFeatures.pacf(huge, "user_id", Seq("ts"), "value").collect()
+      .map(r => r.getInt(1) -> r.getDouble(2)).toMap
+    for (lag <- 1 to 10) {
+      assert(math.abs(pacf("y")(lag) - pacf("big")(lag)) < 2e-6, s"lag $lag")
+      assert(math.abs(pacf("y")(lag) - hugePacf(lag)) < 2e-6, s"lag $lag at 1e9·y")
+    }
+    val cwt = byKey(TsFeatures.cwt(frame, "user_id", Seq("ts"), "value"))(
+      r => ((r.getInt(1), r.getInt(2)), r.getDouble(3))).map { case (k, v) => k -> v.toMap }
+    assert(cwt("y").keySet == cwt("big").keySet && cwt("y").size == 60)
+    for ((at, c) <- cwt("y"))
+      assert(math.abs(cwt("big")(at) - 1e4 * c) <= 1e4 * 1e-6, s"$at: ${cwt("big")(at)} vs 1e4 * $c")
+    // a value whose micro units pass the BIGINT range fails, naming it,
+    // as the oracles' ANSI cast does, instead of wrapping
+    val e = intercept[org.apache.spark.SparkException] {
+      TsFeatures.pacf(toSeriesDF(Array(1.0, 2e13, 3.0)), "user_id", Seq("ts"), "value").collect()
+    }
+    assert(e.getMessage.contains("round(2.0E19) overflows BIGINT"), e.getMessage)
+  }
+
+  test("Ricker kq table equals the Spark expression text for every width and m in 1..200") {
+    // the old scatter's column arithmetic, evaluated by Spark: the
+    // fixed-op-order exp and the pico-unit rounding the ts_cwt oracle
+    // replays
+    val LN2 = 0.6931471805599453
+    val qpi = math.sqrt(math.sqrt(3.141592653589793))
+    val widths = Seq(2, 5, 10, 20)
+    val grid = for (w <- widths; m <- 1 to 200; j <- 0 until m) yield (w.toLong, m.toLong, j.toLong)
+    val wd = col("w").cast("double")
+    def pw(k: Int) = Seq.fill(k)(col("r")).reduceLeft(_ * _)
+    val evaluated = grid.toDF("w", "m", "j")
+      .withColumn("x", col("j").cast("double") - (col("m") - 1L).cast("double") / lit(2.0))
+      .withColumn("xa", col("x") / wd)
+      .withColumn("y", -(col("x") * col("x")) / (lit(2.0) * wd * wd))
+      .withColumn("kk", floor(col("y") / lit(LN2) + lit(0.5)))
+      .withColumn("r", col("y") - col("kk") * lit(LN2))
+      .withColumn("p",
+        lit(1.0) + col("r") + pw(2) / lit(2.0) + pw(3) / lit(6.0) +
+          pw(4) / lit(24.0) + pw(5) / lit(120.0) + pw(6) / lit(720.0) +
+          pw(7) / lit(5040.0) + pw(8) / lit(40320.0) + pw(9) / lit(362880.0))
+      .withColumn("dx", col("p") *
+        (lit(1.0) /
+          expr("cast(shiftleft(cast(1 as bigint), cast(-kk as int)) as double)")))
+      .withColumn("kern",
+        (lit(2.0) / (sqrt(lit(3.0) * wd) * lit(qpi))) *
+          (lit(1.0) - col("xa") * col("xa")) * col("dx"))
+      .select(col("w"), col("m"), col("j"), round(col("kern") * lit(1e12)).cast("long"))
+      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2).toInt) -> r.getLong(3))
+    assert(evaluated.length == grid.size)
+    val wrong = evaluated.filter { case ((w, m, j), kq) => TsFeatures.Ricker.kq(w, m)(j) != kq }
+    assert(wrong.isEmpty, s"${wrong.length} of ${evaluated.length} differ: ${wrong.take(5).toSeq}")
   }
 
   // ------------------------------------------------------ number_cwt_peaks

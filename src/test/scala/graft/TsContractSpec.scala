@@ -36,8 +36,8 @@ class TsContractSpec extends SparkSpec {
     "lempelZiv" -> Seq(Seq(null)),
     "ewma" -> Seq(),
     "holt" -> Seq(),
-    "adf" -> Seq(Seq(null, 0L)),
-    "adfAutolag" -> Seq(Seq(null, null, null)),
+    "adf" -> Seq(Seq(null, null, 0L)),
+    "adfAutolag" -> Seq(Seq(null, null, null, null)),
     "pacf" -> (1 to 10).map(lag => Seq(lag, null)),
     "cwt" -> Seq(),
     "numberCwtPeaks" -> Seq(Seq(0L)),

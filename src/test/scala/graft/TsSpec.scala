@@ -163,53 +163,82 @@ class TsSpec extends SparkSpec {
     assert(c.getDouble(1) == 0.5) // phrases {0, 00} over n=4
   }
 
+  // the statsmodels fixtures of the ADF tests: a trending sawtooth T
+  // (unit-root-ish), a mean-reverting oscillation S and a white-noise-ish
+  // draw W
+  private val adfTrend = Seq(1.0, 2.0, 1.5, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0)
+  private val adfStat = Seq(0.5, -0.3, 0.8, -0.6, 0.2, 0.9, -0.7, 0.1, -0.2, 0.6, -0.4, 0.3)
+  private val adfW = Seq(1.788628, 0.43651, 0.096497, -1.863493, -0.277388, -0.354759,
+    -0.082741, -0.627001, -0.043818, -0.477218, -1.313865, 0.884622)
+
+  private def adfFrame(series: (String, Seq[Double])*) =
+    series.flatMap { case (k, xs) => xs.zipWithIndex.map { case (v, i) => (k, i.toLong, v) } }
+      .toDF("sk", "t", "v")
+
+  /** A naive double replay of one ADF regression: Δy_t on [y_{t−1},
+    * Δy_{t−1..t−lag}, 1] over t = start until n, normal equations
+    * solved by Gauss–Jordan elimination with partial pivoting. None on
+    * too few samples or a singular X'X, else (ssr, tau).
+    */
+  private def naiveAdf(y: Array[Double], lag: Int, start: Int): Option[(Double, Double)] = {
+    val k = lag + 2
+    val rows = (start until y.length).map { t =>
+      (Array(y(t - 1)) ++ (1 to lag).map(j => y(t - j) - y(t - j - 1)) :+ 1.0,
+        y(t) - y(t - 1))
+    }
+    if (rows.size < k + 1) return None
+    val a = Array.tabulate(k, 2 * k + 1) { (i, j) =>
+      if (j < k) rows.map { case (x, _) => x(i) * x(j) }.sum
+      else if (j < 2 * k) (if (j - k == i) 1.0 else 0.0)
+      else rows.map { case (x, z) => x(i) * z }.sum
+    }
+    for (c <- 0 until k) {
+      val p = (c until k).maxBy(r => math.abs(a(r)(c)))
+      if (a(p)(c) == 0.0) return None
+      val tmp = a(p); a(p) = a(c); a(c) = tmp
+      val piv = a(c)(c)
+      for (j <- a(c).indices) a(c)(j) /= piv
+      for (r <- 0 until k if r != c) {
+        val f = a(r)(c)
+        for (j <- a(r).indices) a(r)(j) -= f * a(c)(j)
+      }
+    }
+    val beta = a.map(_(2 * k))
+    val ssr = rows.map { case (x, z) => val e = z - x.indices.map(i => beta(i) * x(i)).sum; e * e }.sum
+    Some((ssr, beta(0) / math.sqrt(ssr / (rows.size - k) * a(0)(k))))
+  }
+
   test("ADF tau statistic matches an independent least-squares computation") {
-    import spark.implicits._
     // expected values from an independent numpy lstsq implementation of
     // the same fixed-lag regression Δy_t = α + β·y_{t−1} + γ·Δy_{t−1}:
     // a trending sawtooth (unit-root-ish, β̂/se = 1.3484) and a
     // mean-reverting oscillation (strongly stationary, −3.876036)
-    val trend = Array(1.0, 2.0, 1.5, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0)
-    val stat = Array(0.5, -0.3, 0.8, -0.6, 0.2, 0.9, -0.7, 0.1, -0.2, 0.6, -0.4, 0.3)
-    val in = (trend.zipWithIndex.map { case (v, i) => ("T", i.toLong, v) } ++
-      stat.zipWithIndex.map { case (v, i) => ("S", i.toLong, v) }).toSeq
-      .toDF("sk", "t", "v")
+    val in = adfFrame("T" -> adfTrend, "S" -> adfStat)
     val got = TsFeatures.adf(in, "sk", Seq("t"), "v", lag = 1)
-      .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
+      .collect().map(r => r.getString(0) ->
+        ((r.getAs[Double]("adf_stat"), r.getAs[Long]("adf_nobs")))).toMap
     assert(math.abs(got("T")._1 - 1.3484) < 1e-4)
     assert(got("T")._2 == 8L)
     assert(math.abs(got("S")._1 - -3.876036) < 1e-6)
     assert(got("S")._2 == 10L)
   }
 
-  test("distributed ADF matches the GroupedApply fold on the pinned fixtures") {
-    import spark.implicits._
-    val trend = Array(1.0, 2.0, 1.5, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0)
-    val stat = Array(0.5, -0.3, 0.8, -0.6, 0.2, 0.9, -0.7, 0.1, -0.2, 0.6, -0.4, 0.3)
-    val in = (trend.zipWithIndex.map { case (v, i) => ("T", i.toLong, v) } ++
-      stat.zipWithIndex.map { case (v, i) => ("S", i.toLong, v) }).toSeq
-      .toDF("sk", "t", "v")
-    val got = TsFeatures.adfDistributed(in, "sk", Seq("t"), "v")
-      .collect().map(r => r.getString(0) ->
-        ((r.getAs[Double]("adf_stat"), r.getAs[Long]("adf_nobs")))).toMap
-    // fixture values are exact micro multiples, so quantization is
-    // exact and only the solve's op order differs from the fold
-    assert(math.abs(got("T")._1 - 1.3484) < 1e-4)
-    assert(got("T")._2 == 8L)
-    assert(math.abs(got("S")._1 - -3.876036) < 1e-5)
-    assert(got("S")._2 == 10L)
-    // degenerate shapes: nobs < 4 and singular X'X stay null
-    val deg = (Seq(("A", 1L, 1.0), ("A", 2L, 2.0), ("A", 3L, 3.0),
-      ("A", 4L, 2.5), ("A", 5L, 3.5)) ++
-      (1L to 7L).map(t => ("B", t, 5.0))).toDF("sk", "t", "v")
-    val nulls = TsFeatures.adfDistributed(deg, "sk", Seq("t"), "v")
-      .collect().map(r => r.getString(0) -> r.isNullAt(1)).toMap
-    assert(nulls("A")) // 5 points -> nobs = 3 < 4 -> null
-    assert(nulls("B")) // constant series: singular X'X
+  test("ADF keeps the numpy tau beside degenerate series; those stay null") {
+    // fixture values are exact micro multiples, so quantization is exact
+    val deg = Seq(1.0, 2.0, 3.0, 2.5, 3.5) // 5 points -> nobs = 3 < 4
+    val in = adfFrame("T" -> adfTrend, "S" -> adfStat, "A" -> deg, "B" -> Seq.fill(7)(5.0))
+    val got = TsFeatures.adf(in, "sk", Seq("t"), "v")
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(math.abs(got("T").getAs[Double]("adf_stat") - 1.3484) < 1e-4)
+    assert(got("T").getAs[Long]("adf_nobs") == 8L)
+    assert(math.abs(got("S").getAs[Double]("adf_stat") - -3.876036) < 1e-5)
+    assert(got("S").getAs[Long]("adf_nobs") == 10L)
+    for (k <- Seq("A", "B")) // B is constant: singular X'X
+      assert(got(k).isNullAt(1) && got(k).isNullAt(2), s"$k: ${got(k)}")
+    assert(got("A").getAs[Long]("adf_nobs") == 3L)
   }
 
   test("MacKinnon p-value surface matches the published critical values") {
-    import spark.implicits._
     // non-circular anchors: MacKinnon's asymptotic critical values for
     // regression='c' (1%/5%/10% = -3.43/-2.86/-2.57) must map to p ≈
     // 0.01/0.05/0.10 under the response surface; plus clamp bounds and
@@ -224,105 +253,93 @@ class TsSpec extends SparkSpec {
     assert(math.abs(got(-2.57) - 0.10) < 3e-3, s"10% cv -> ${got(-2.57)}")
     assert(got(-18.84) == 0.0 && got(2.75) == 1.0)
     assert(math.abs(got(-1.6099) - got(-1.6101)) < 1e-3, "branch continuity")
-    // wired through adfDistributed: the stationary fixture's tau
-    // -3.876036 sits near the 1% tail, the trending one's p ~ 1
-    val trend = Array(1.0, 2.0, 1.5, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0)
-    val stat = Array(0.5, -0.3, 0.8, -0.6, 0.2, 0.9, -0.7, 0.1, -0.2, 0.6, -0.4, 0.3)
-    val in = (trend.zipWithIndex.map { case (v, i) => ("T", i.toLong, v) } ++
-      stat.zipWithIndex.map { case (v, i) => ("S", i.toLong, v) }).toSeq
-      .toDF("sk", "t", "v")
-    val p = TsFeatures.adfDistributed(in, "sk", Seq("t"), "v")
+    // wired through adf: the stationary fixture's tau -3.876036 sits
+    // near the 1% tail, the trending one's p ~ 1
+    val in = adfFrame("T" -> adfTrend, "S" -> adfStat)
+    val p = TsFeatures.adf(in, "sk", Seq("t"), "v")
       .collect().map(r => r.getString(0) -> r.getAs[Double]("adf_p")).toMap
     assert(p("S") > 0.0 && p("S") < 0.01, s"stationary p ${p("S")}")
     assert(p("T") > 0.9, s"trending p ${p("T")}")
   }
 
-  test("distributed ADF tracks the fold on seeded random series") {
-    import spark.implicits._
+  test("ADF tracks a naive double replay on seeded random series") {
     // values pre-snapped to the 1e-6 grid so micro-quantization is
-    // exact and any residual difference is pure solve op-order
+    // exact and any residual difference is solve op order plus the
+    // 6-dp publication
     val rnd = new scala.util.Random(7)
-    val rows = for {
-      s <- 0 until 6
-      t <- 0 until 40
-    } yield (s"s$s", t.toLong,
+    val series = (0 until 6).map(s => s"s$s" -> (0 until 40).map(t =>
       math.floor((rnd.nextDouble() * 20 - 10) * 1e6) / 1e6 +
-        (if (s % 2 == 0) t * 0.05 else 0.0))
-    val in = rows.toDF("sk", "t", "v")
-    val fold = TsFeatures.adf(in, "sk", Seq("t"), "v")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val dist = TsFeatures.adfDistributed(in, "sk", Seq("t"), "v")
+        (if (s % 2 == 0) t * 0.05 else 0.0)))
+    val got = TsFeatures.adf(adfFrame(series: _*), "sk", Seq("t"), "v")
       .collect().map(r => r.getString(0) -> r.getAs[Double]("adf_stat")).toMap
-    assert(fold.keySet === dist.keySet)
-    fold.foreach { case (k, v) =>
-      assert(math.abs(dist(k) - v) < 1e-3, s"$k: fold $v vs dist ${dist(k)}")
+    assert(got.keySet == series.map(_._1).toSet)
+    for ((k, xs) <- series) {
+      val want = naiveAdf(xs.toArray, 1, 2).get._2
+      assert(math.abs(got(k) - want) < 1e-3, s"$k: naive $want vs adf ${got(k)}")
     }
   }
 
   test("ADF autolag fold matches the independent numpy statsmodels replay") {
-    import spark.implicits._
     // expected values from an independent numpy lstsq implementation
     // of statsmodels adfuller(autolag="AIC"): common-sample AIC
     // selection ((aic, lag) tuple-min), full-sample refit at the
     // chosen lag. W is a white-noise-ish draw that PICKS LAG 0 at
     // maxLag 1 (T and S both pick 1), so both selection branches run.
-    val trend = Array(1.0, 2.0, 1.5, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0)
-    val stat = Array(0.5, -0.3, 0.8, -0.6, 0.2, 0.9, -0.7, 0.1, -0.2, 0.6, -0.4, 0.3)
-    val w = Array(1.788628, 0.43651, 0.096497, -1.863493, -0.277388, -0.354759,
-      -0.082741, -0.627001, -0.043818, -0.477218, -1.313865, 0.884622)
-    val in = (trend.zipWithIndex.map { case (v, i) => ("T", i.toLong, v) } ++
-      stat.zipWithIndex.map { case (v, i) => ("S", i.toLong, v) } ++
-      w.zipWithIndex.map { case (v, i) => ("W", i.toLong, v) }).toSeq
-      .toDF("sk", "t", "v")
-    val got = TsFeatures.adfAutolag(in, "sk", Seq("t"), "v", maxLag = 1)
-      .collect().map(r => r.getString(0) ->
-        ((r.getDouble(1), r.getInt(2), r.getLong(3)))).toMap
-    assert(got("T")._2 == 1 && math.abs(got("T")._1 - 1.3484) < 1e-4 &&
+    val in = adfFrame("T" -> adfTrend, "S" -> adfStat, "W" -> adfW)
+    def fits(maxLag: Int) = TsFeatures.adfAutolag(in, "sk", Seq("t"), "v", maxLag = maxLag)
+      .collect().map(r => r.getString(0) -> ((Option(r.getAs[Any]("adf_stat")),
+        r.getAs[Int]("adf_lag"), r.getAs[Long]("adf_nobs")))).toMap // null lag reads 0
+    def tau(fit: (Option[Any], Int, Long)): Double = fit._1.get.asInstanceOf[Double]
+    val got = fits(1)
+    assert(got("T")._2 == 1 && math.abs(tau(got("T")) - 1.3484) < 1e-4 &&
       got("T")._3 == 8L)
-    assert(got("S")._2 == 1 && math.abs(got("S")._1 - -3.876036) < 1e-5 &&
+    assert(got("S")._2 == 1 && math.abs(tau(got("S")) - -3.876036) < 1e-5 &&
       got("S")._3 == 10L)
-    assert(got("W")._2 == 0 && math.abs(got("W")._1 - -3.697984) < 1e-5 &&
+    assert(got("W")._2 == 0 && math.abs(tau(got("W")) - -3.697984) < 1e-5 &&
       got("W")._3 == 11L)
-    // arbitrary maxLag: T at maxLag 3 selects lag 2 (the sawtooth is
-    // EXACTLY Δy_t = 1 − Δy_{t−1}, so the lag-2 fit is perfect —
-    // ssr ≈ 1e-29 float noise — and its tau is solver-noise-dependent:
-    // only the AIC pick is assertable); S's tau stays solid
-    val got3 = TsFeatures.adfAutolag(in, "sk", Seq("t"), "v", maxLag = 3)
-      .collect().map(r => r.getString(0) ->
-        ((r.getDouble(1), r.getInt(2), r.getLong(3)))).toMap
-    assert(got3("T")._2 == 2 && got3("T")._3 == 7L)
-    assert(got3("S")._2 == 1 && math.abs(got3("S")._1 - -3.876036) < 1e-5)
+    // arbitrary maxLag: W selects lag 2 at maxLag 2 and lag 3 at maxLag
+    // 3; S's pick and tau stay solid. The sawtooth T is EXACTLY Δy_t =
+    // 1 − Δy_{t−1}, so its lag-2 candidate's regressors Δy_{t−1} +
+    // Δy_{t−2} ≡ 1 are collinear with the constant: the exact moments
+    // make X'X singular (numpy's lstsq "picks" it by round-off), and a
+    // candidate without a fit nulls the series, as at maxLag 1
+    val got2 = fits(2)
+    assert(got2("W")._2 == 2 && math.abs(tau(got2("W")) - -4.865931) < 1e-5 &&
+      got2("W")._3 == 9L)
+    val got3 = fits(3)
+    assert(got3("W")._2 == 3 && math.abs(tau(got3("W")) - -2.829548) < 1e-5 &&
+      got3("W")._3 == 8L)
+    assert(got3("S")._2 == 1 && math.abs(tau(got3("S")) - -3.876036) < 1e-5)
+    assert(got3("T")._1.isEmpty)
   }
 
-  test("distributed ADF autolag matches the fold at maxLag 1") {
-    import spark.implicits._
-    val trend = Array(1.0, 2.0, 1.5, 3.0, 2.5, 4.0, 3.5, 5.0, 4.5, 6.0)
-    val w = Array(1.788628, 0.43651, 0.096497, -1.863493, -0.277388, -0.354759,
-      -0.082741, -0.627001, -0.043818, -0.477218, -1.313865, 0.884622)
+  test("ADF autolag at maxLag 1 tracks a naive double replay; degenerate series stay null") {
     val rnd = new scala.util.Random(11)
-    val rows = (trend.zipWithIndex.map { case (v, i) => ("T", i.toLong, v) } ++
-      w.zipWithIndex.map { case (v, i) => ("W", i.toLong, v) }) ++
-      (for (s <- 0 until 4; t <- 0 until 30) yield
-        (s"r$s", t.toLong, math.floor((rnd.nextDouble() * 20 - 10) * 1e6) / 1e6 +
+    val series = Seq("T" -> adfTrend, "W" -> adfW) ++
+      (0 until 4).map(s => s"r$s" -> (0 until 30).map(t =>
+        math.floor((rnd.nextDouble() * 20 - 10) * 1e6) / 1e6 +
           (if (s % 2 == 0) t * 0.1 else 0.0)))
-    val in = rows.toSeq.toDF("sk", "t", "v")
-    val fold = TsFeatures.adfAutolag(in, "sk", Seq("t"), "v", maxLag = 1)
-      .collect().map(r => r.getString(0) ->
-        ((r.getDouble(1), r.getInt(2), r.getLong(3)))).toMap
-    val dist = TsFeatures.adfAutolagDistributed(in, "sk", Seq("t"), "v")
+    val got = TsFeatures.adfAutolag(adfFrame(series: _*), "sk", Seq("t"), "v", maxLag = 1)
       .collect().map(r => r.getString(0) ->
         ((r.getAs[Double]("adf_stat"), r.getAs[Int]("adf_lag"),
           r.getAs[Long]("adf_nobs")))).toMap
-    assert(fold.keySet === dist.keySet)
-    fold.foreach { case (k, (tau, lag, nobs)) =>
-      assert(dist(k)._2 == lag, s"$k lag: fold $lag vs dist ${dist(k)._2}")
-      assert(dist(k)._3 == nobs, s"$k nobs")
-      assert(math.abs(dist(k)._1 - tau) < 1e-3, s"$k tau: $tau vs ${dist(k)._1}")
+    assert(got.keySet == series.map(_._1).toSet)
+    for ((k, xs) <- series) {
+      // statsmodels autolag at maxLag 1: both candidates on t >= 2, the
+      // smaller AIC (ties to lag 0), then the refit over t >= lag + 1
+      val y = xs.toArray
+      val nn = (y.length - 2).toDouble
+      val aic = (0 to 1).map(lag => naiveAdf(y, lag, 2).get._1)
+        .zipWithIndex.map { case (ssr, lag) => nn * math.log(ssr / nn) + 2.0 * (lag + 2) }
+      val lag = if (aic(0) <= aic(1)) 0 else 1
+      val tau = naiveAdf(y, lag, lag + 1).get._2
+      assert(got(k)._2 == lag, s"$k lag: naive $lag vs adfAutolag ${got(k)._2}")
+      assert(got(k)._3 == y.length - lag - 1, s"$k nobs")
+      assert(math.abs(got(k)._1 - tau) < 1e-3, s"$k tau: $tau vs ${got(k)._1}")
     }
     // degenerate shapes stay null, not a crash
-    val deg = (Seq(("A", 1L, 1.0), ("A", 2L, 2.0), ("A", 3L, 3.0)) ++
-      (1L to 7L).map(t => ("B", t, 5.0))).toDF("sk", "t", "v")
-    val nulls = TsFeatures.adfAutolagDistributed(deg, "sk", Seq("t"), "v")
+    val deg = adfFrame("A" -> Seq(1.0, 2.0, 3.0), "B" -> Seq.fill(7)(5.0))
+    val nulls = TsFeatures.adfAutolag(deg, "sk", Seq("t"), "v", maxLag = 1)
       .collect().map(r => r.getString(0) -> r.isNullAt(1)).toMap
     assert(nulls("A") && nulls("B"))
   }
