@@ -91,8 +91,9 @@ object SparkEntry {
     // series GroupedApply folds — bench + spec coverage (TsAdvancedSpec
     // pins each against closed forms / naive replays). ts_cwt, ts_pacf,
     // ts_friedrich, and ts_matrix_profile moved to TsQueries (oracled)
-    // in r10 and ts_adf in r12; ts_cwt, ts_pacf and ts_adf now call the
-    // single per-series calculators (cwt, pacf, adf)
+    // in r10 and ts_adf in r12; ts_cwt, ts_pacf, ts_adf and the three
+    // ts_matrix_profile rows now call the single per-series calculators
+    // (cwt, pacf, adf, matrixProfile and its motif and FLUSS forms)
     "ts_cwt_peaks" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       graft.operators.TsFeatures.numberCwtPeaks(

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * multi-column and windowed forms) and every per-series calculator
   * ([[sampleEntropy]], [[lempelZiv]], [[ewma]], [[holt]], [[adf]],
   * [[adfAutolag]], [[pacf]], [[cwt]], [[numberCwtPeaks]],
-  * [[matrixProfile]], [[friedrich]]) run through one runner,
+  * [[matrixProfile]] with [[matrixProfileIndices]] and
+  * [[matrixProfileFluss]], [[friedrich]]) run through one runner,
   * [[perSeries]]: one hash shuffle on the series key, each series'
   * rows sorted by the order columns, every value column read as a
   * double. Its null contract is one rule: a null value is not a point
@@ -1506,17 +1507,13 @@ object TsFeatures {
     }
   }
 
-  /** Shared expression-text builders for the BANDED matrix profile
-    * (SURVEY §15 #4) — same engine-symmetry device as [[Friedrich]]:
-    * the per-pair z-normalized distance and the percentile tail are
-    * built once as SQL text and evaluated by both engines, so every
-    * IEEE double matches bit-for-bit. All pair statistics come from
-    * ONE window pass of `band + window − 1` leads in exact int64:
-    * QT(i, i+o) = xq·l_o + Σ_{k<m} l_k·l_{o+k},
-    * Sx_j = Σ_k l_{o+k}, m²·var = m·S2 − Sx² — no second pass, no
-    * per-series fold. Envelope: m²·xq² must fit int64 (|x| ≤ ~7.6e8
-    * micro-units at m=4, i.e. values to ~760 — the events domain;
-    * larger values re-scale the quantization).
+  /** The BANDED matrix profile as SQL text (SURVEY §15 #4) — the
+    * specification the `ts_matrix_profile*` oracles are generated from
+    * and that [[bandedProfile]] computes op for op: micro-unit values
+    * xq, the pair statistics from `band + window − 1` leads as exact
+    * integers, QT(i, i+o) = xq·l_o + Σ_{k<m} l_k·l_{o+k},
+    * Sx_j = Σ_k l_{o+k}, m²·var = m·S2 − Sx², then the [[dCase]]
+    * double tail and the percentile and arc-curve tails.
     */
   private[graft] object MatrixProfileShared {
     def sx(m: Int): String = (Seq("xq") ++ (1 until m).map(k => s"l$k")).mkString(" + ")
@@ -1548,10 +1545,9 @@ object TsFeatures {
     }
 
     /** The fully-inlined d(i, i+o) the DuckDB oracle replays (partner
-      * moments re-expanded from the raw leads). Spark assembles the
-      * same exact integers as lead() of the own-window moment COLUMNS
-      * instead ([[graft.operators.TsFeatures.matrixProfileBanded]]) —
-      * same values, and the double tail is [[dCase]] in both engines.
+      * moments re-expanded from the raw leads); [[bandedProfile]] sums
+      * the same exact integers per window pair and takes the same
+      * [[dCase]] tail.
       */
     def dStr(o: Int, m: Int, castD: String => String): String = {
       val vj = s"($m*(${s2j(o, m)}) - (${sxj(o, m)})*(${sxj(o, m)}))"
@@ -1589,221 +1585,215 @@ object TsFeatures {
         s"ELSE least(${castD(ac)} / $ideal, 1.0) END"
   }
 
-  /** BANDED z-normalized matrix profile (SURVEY §15 #4) — the same
-    * distance/summary semantics as [[matrixProfile]] restricted to a
-    * bounded offset band excl ≤ j − i ≤ band (the documented §3
-    * tie-break: the nearest non-trivial neighbor is searched within
-    * `band` steps, not the whole series — the bound that survives
-    * 100 TB, where O(n²) per series does not). Fully relational:
-    * one partitioned window pass (band+m−1 leads), per-pair distances
-    * as shared-text arithmetic over exact int64 window moments, a
-    * stack-scatter of each distance to both endpoints, min-combine
-    * per window index, and the §14 exact-rank percentile tail
-    * (numpy-style linear interpolation; the mean micro-quantizes so
-    * the sum is order-free).
+  /** The z-normalized matrix profile summary (the tsfresh
+    * `matrix_profile` feature family): each length-`window`
+    * subsequence's distance to its nearest non-trivial neighbor, with
+    * exclusion zone ⌈m/2⌉ (the SCAMP/STUMPY convention) and neighbors
+    * searched within `band` offsets, summarized per series as
+    * min/max/mean/median/p25/p75. A band of at least the series length
+    * gives the full profile. One [[perSeries]] kernel,
+    * [[bandedProfile]], computes the arithmetic the `ts_matrix_profile`
+    * oracle replays from the [[MatrixProfileShared]] text; the mean is
+    * Σ micro(pv) / (n·1e6), the percentiles numpy's linear ones, and one
+    * projection rounds to 6 dp. A series with fewer than window +
+    * ⌈window/2⌉ points has no profile and gives nulls.
+    *
+    * Cost: O(n·min(band, n)·m) per series. The longest series sits
+    * whole in one task: [[perSeries]]' rows (about 100 B a point) plus
+    * the kernel's arrays (about 50 B a point), so a task with 1 GB
+    * holds a series of about 6 million points.
     */
-  /** The banded profile itself — (seriesKey, idx, pv): each window
-    * index's distance to its nearest non-trivial neighbor within the
-    * band. Shared trunk of [[matrixProfileBanded]] (summary stats) and
-    * [[matrixProfileIndices]] (motif/discord argmin — VERDICT r14 #7).
-    */
-  private[graft] def matrixProfileProf(df: DataFrame, seriesKey: String,
-                                       orderCols: Seq[String], valueCol: String,
-                                       window: Int = 4, band: Int = 20,
-                                       withNN: Boolean = false): DataFrame = {
-    val m = window
-    val excl = (m + 1) / 2
-    require(m >= 2 && band >= excl, s"window=$m band=$band invalid")
-    import org.apache.spark.sql.expressions.Window
-    val MP = MatrixProfileShared
-    val castD = (s: String) => s"cast($s as double)"
-    val wOrd = Window.partitionBy(col(seriesKey)).orderBy(orderCols.map(col): _*)
-    // pin the window stage's parallelism with an explicit keyed
-    // repartition (same hashpartitioning(seriesKey) exchange the
-    // window would insert, with numPartitions fixed so AQE's
-    // BYTE-based coalescing cannot serialize it): the banded distance
-    // pass is the compute-dense stage of this operator — §12m measured
-    // it coalesced to single-digit tasks at sf0.1 (~20 MB of shuffle
-    // carrying ~n·band distance evaluations), wasting 30 of 32 cores.
-    // Partition count follows spark.sql.shuffle.partitions (the
-    // scale-adaptive knob), never a local constant; results are
-    // unchanged (per-series windows + order-free min rollup).
-    val nShuffle = df.sparkSession.conf.get("spark.sql.shuffle.partitions",
-      df.sparkSession.sparkContext.defaultParallelism.toString).toInt
-    var w1 = df
-      .repartition(nShuffle, col(seriesKey))
-      .withColumn("xq", round(col(valueCol) * lit(1e6)).cast("long"))
-      .withColumn("i0", row_number().over(wOrd).cast("long") - 1L)
-    for (k <- 1 to band + m - 1)
-      w1 = w1.withColumn(s"l$k", lead(col("xq"), k).over(wOrd))
-    var w2 = w1
-      .withColumn("sx", expr(MP.sx(m)))
-      .withColumn("vi", expr(s"$m*(${MP.s2(m)}) - (${MP.sx(m)})*(${MP.sx(m)})"))
-    // the partner window's moments are lead() of the own-window moment
-    // COLUMNS (a second pass over the SAME window spec — no new sort or
-    // shuffle), not a per-offset re-expansion of the raw leads: the r12
-    // restructure that shrank each distance to a small dCase over exact
-    // int columns (the per-offset inline s2j/sxj strings tripled in the
-    // CASE text and blew up the generated code). Values are identical —
-    // integer moments are exact — and the double tail is the SAME
-    // dCase text the oracle's dStr inlines.
-    for (o <- excl to band)
-      w2 = w2
-        .withColumn(s"sxj$o", lead(col("sx"), o).over(wOrd))
-        .withColumn(s"vj$o", lead(col("vi"), o).over(wOrd))
-    for (o <- excl to band)
-      w2 = w2
-        .withColumn(s"num$o", expr(s"$m*(${MP.qt(o, m)}) - sx*sxj$o"))
-        .withColumn(s"d$o",
-          expr(MP.dCase(s"vj$o", "vi", s"vj$o", s"num$o", m, castD)))
-    // scatter each distance to both endpoints through ONE array
-    // explode (a Generate over a 2·(band−excl+1)-struct array built
-    // once per row — each dCase evaluates once, unlike a stack whose
-    // per-projection inlining re-expands them), then min-combine per
-    // window index; the groupBy's map-side partial min compacts the
-    // scatter to one row per (series, idx) before its single Exchange.
-    // (A lag()-based per-row min-combine with no amplification was
-    // A/B'd too — all formulations land inside the row's session-noise
-    // band, see SURVEY §12g; this one keeps single evaluation and the
-    // one-Exchange plan.)
-    val arr = array((excl to band).flatMap(o => Seq(
-      struct(col("i0").as("idx"), col(s"d$o").as("d"), (col("i0") + o).as("nn")),
-      struct((col("i0") + o).as("idx"), col(s"d$o").as("d"), col("i0").as("nn")))): _*)
-    val pairs = w2
-      .select(col(seriesKey), explode(arr).as("p"))
-      .select(col(seriesKey), col("p.idx").as("idx"), col("p.d").as("d"),
-        col("p.nn").as("nn"))
-      .where(col("d").isNotNull)
-    if (withNN)
-      // nearest-neighbor INDEX rides the same rollup: the (d, nn)
-      // struct-min is deterministic (partners are distinct per idx, so
-      // ties on d break to the SMALLEST partner) and DuckDB replays it
-      // as min(struct_pack(d, nn)).nn — identical lexicographic order
-      pairs.groupBy(col(seriesKey), col("idx"))
-        .agg(min(col("d")).as("pv"),
-          min(struct(col("d"), col("nn"))).getField("nn").as("nn"))
-    else
-      pairs.groupBy(col(seriesKey), col("idx"))
-        .agg(min(col("d")).as("pv"))
+  def matrixProfile(df: DataFrame, seriesKey: String, orderCols: Seq[String],
+                    valueCol: String, window: Int = 4, band: Int = 20): DataFrame = {
+    val fields = Seq("mp_min", "mp_max", "mp_mean", "mp_median", "mp_p25", "mp_p75")
+    profiled(df, seriesKey, orderCols, valueCol, window, band,
+      fields.map(StructField(_, DoubleType))) { p =>
+      if (p.pv.isEmpty) Row.fromSeq(fields.map(_ => null))
+      else {
+        val sorted = p.pv.sorted
+        val n = sorted.length
+        val mean = p.pv.map(micro).sum.toDouble / (n.toDouble * 1000000.0)
+        Row.fromSeq(Seq(sorted(0), sorted(n - 1), mean) ++
+          Seq(0.5, 0.25, 0.75).map(linearPercentile(sorted, _)))
+      }
+    }.select(col(seriesKey) +: fields.map(f => round(col(f), 6).as(f)): _*)
   }
 
-  def matrixProfileBanded(df: DataFrame, seriesKey: String,
-                          orderCols: Seq[String], valueCol: String,
-                          window: Int = 4, band: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val MP = MatrixProfileShared
-    val castD = (s: String) => s"cast($s as double)"
-    val prof = matrixProfileProf(df, seriesKey, orderCols, valueCol, window, band)
-    val wAll = Window.partitionBy(col(seriesKey))
-    val wCum = Window.partitionBy(col(seriesKey)).orderBy(col("pv"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val vg = prof.groupBy(col(seriesKey), col("pv"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("cnt", sum(col("c")).over(wAll))
-      .withColumn("bef", coalesce(sum(col("c")).over(wCum), lit(0L)))
-    val picks = Seq("0.25" -> "25", "0.5" -> "50", "0.75" -> "75").flatMap {
-      case (p, tag) => Seq(
-        expr(MP.pickStr(s"cast(floor((cnt - 1) * $p) as bigint)")).as(s"v${tag}lo"),
-        expr(MP.pickStr(s"least(cast(floor((cnt - 1) * $p) as bigint) + 1, cnt - 1)"))
-          .as(s"v${tag}hi"))
-    }
-    val agg = vg.groupBy(col(seriesKey)).agg(
-      min(col("pv")).as("mn"),
-      (Seq(max(col("pv")).as("mx"),
-        sum(expr("c * cast(round(pv * 1000000.0) as bigint)")).as("ssum"),
-        max(col("cnt")).as("n")) ++ picks): _*)
-    agg.select(col(seriesKey),
-      round(col("mn"), 6).as("mp_min"), round(col("mx"), 6).as("mp_max"),
-      round(expr(s"${castD("ssum")} / (${castD("n")} * 1000000.0)"), 6).as("mp_mean"),
-      round(expr(MP.pctStr("0.5", "v50lo", "v50hi")), 6).as("mp_median"),
-      round(expr(MP.pctStr("0.25", "v25lo", "v25hi")), 6).as("mp_p25"),
-      round(expr(MP.pctStr("0.75", "v75lo", "v75hi")), 6).as("mp_p75"))
-  }
-
-  /** Motif/discord LOCATIONS over the banded profile (VERDICT r14 #7 —
-    * the tsfresh-user ask the summary stats left out): per series, the
-    * window index whose nearest-neighbor distance is smallest (motif —
-    * it has a close repeat) and largest (discord — the anomaly), with
-    * the distances. Argmin/argmax by (pv, idx): the distance doubles
-    * are the same shared-text arithmetic both engines replay
-    * bit-identically, and the idx tie-break (SMALLEST index on equal
-    * distance, both ends) makes the pick deterministic even on flat
-    * series where many windows tie at 0. Same single-Exchange profile
-    * trunk; the argmax rides the same rollup as the argmin.
+  /** Motif and discord locations over [[matrixProfile]]'s profile (the
+    * matrix-profile classes past the summary): per series, the window
+    * whose nearest-neighbor distance is smallest (the motif: it has a
+    * close repeat) and largest (the discord: the anomaly), with those
+    * distances at 6 dp. Both ends break ties on the smallest window
+    * index, so a flat series, where many windows tie at 0, picks
+    * deterministically. Returns (key, motif_idx, motif_dist,
+    * discord_idx, discord_dist); a series with no profile gives nulls.
     */
   def matrixProfileIndices(df: DataFrame, seriesKey: String,
                            orderCols: Seq[String], valueCol: String,
-                           window: Int = 4, band: Int = 20): DataFrame = {
-    val prof = matrixProfileProf(df, seriesKey, orderCols, valueCol, window, band)
-    prof.groupBy(col(seriesKey)).agg(
-      min_by(col("idx"), struct(col("pv"), col("idx"))).as("motif_idx"),
-      min(col("pv")).as("md"),
-      max_by(col("idx"), struct(col("pv"), (lit(-1L) * col("idx")).as("ni")))
-        .as("discord_idx"),
-      max(col("pv")).as("dd"))
-      .select(col(seriesKey), col("motif_idx"),
-        round(col("md"), 6).as("motif_dist"), col("discord_idx"),
-        round(col("dd"), 6).as("discord_dist"))
-  }
+                           window: Int = 4, band: Int = 20): DataFrame =
+    profiled(df, seriesKey, orderCols, valueCol, window, band, Seq(
+      StructField("motif_idx", LongType), StructField("motif_dist", DoubleType),
+      StructField("discord_idx", LongType), StructField("discord_dist", DoubleType))) { p =>
+      if (p.pv.isEmpty) Row(null, null, null, null)
+      else {
+        var lo, hi = 0 // strict compares in window order keep the smallest index
+        for (k <- p.pv.indices) {
+          if (p.pv(k) < p.pv(lo)) lo = k
+          if (p.pv(k) > p.pv(hi)) hi = k
+        }
+        Row(p.idx(lo).toLong, p.pv(lo), p.idx(hi).toLong, p.pv(hi))
+      }
+    }.select(col(seriesKey), col("motif_idx"), round(col("motif_dist"), 6).as("motif_dist"),
+      col("discord_idx"), round(col("discord_dist"), 6).as("discord_dist"))
 
-  /** FLUSS regime segmentation over the banded profile (VERDICT r15
-    * #5 — the matrix-profile class beyond summary + motif/discord):
-    * semantic segmentation via the corrected arc curve (Gharghabi et
-    * al., "Matrix Profile VIII: Domain Agnostic Online Semantic
-    * Segmentation", ICDM 2017; stumpy `fluss`). Each window's
-    * nearest-neighbor arc (i ↔ nn(i), from the SAME banded trunk that
-    * feeds motif/discord — nn is the (d, partner)-lexicographic
-    * argmin, deterministic under ties) contributes +1 at its left end
-    * and −1 at its right end; the running sum over window indices is
-    * the arc count AC(t) — arcs SPANNING t — which dips where few
-    * subsequences pair across a boundary. CAC normalizes by the
-    * BANDED idealized arc count (E[offset] = (excl+band)/2, constant —
-    * see [[MatrixProfileShared.cacStr]] for why the global parabola
-    * does not apply to a banded profile) and pins the edge zones to 1
-    * (shared text); the regime location is the
-    * (cac, idx) struct-min — smallest index on ties, replayed by
-    * DuckDB's identical struct ordering. All bounded rollups over the
-    * trunk: the arc scatter is 2 rows per window, the cumsum one
-    * partitioned sort — nothing super-linear at any series length.
-    * Output (key, regime_idx, cac_min, n_win).
+  /** FLUSS regime segmentation over [[matrixProfile]]'s profile: the
+    * corrected arc curve (Gharghabi et al., "Matrix Profile VIII:
+    * Domain Agnostic Online Semantic Segmentation", ICDM 2017; stumpy
+    * `fluss`). Each profile window's arc to its nearest neighbor adds
+    * +1 at its left end and −1 at its right end; the running sum in
+    * window order is the arc count AC(t), the arcs spanning t, which
+    * dips where few subsequences pair across a boundary.
+    * [[MatrixProfileShared.cacStr]] normalizes it by the banded ideal
+    * arc count (⌈m/2⌉ + band)/2 and pins the `exclFactor`·m edge zones
+    * to 1, with the count of profile windows as n_win. The regime is the
+    * smallest corrected value, the smallest window index on a tie.
+    * Returns (key, regime_idx, cac_min, n_win); a series with no
+    * profile gives (null, null, 0).
     */
   def matrixProfileFluss(df: DataFrame, seriesKey: String,
                          orderCols: Seq[String], valueCol: String,
                          window: Int = 4, band: Int = 20,
                          exclFactor: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val MP = MatrixProfileShared
-    val castD = (s: String) => s"cast($s as double)"
-    val excl = exclFactor * window
-    val nnp = matrixProfileProf(df, seriesKey, orderCols, valueCol,
-      window, band, withNN = true)
-    val deltas = nnp
-      .select(col(seriesKey),
-        least(col("idx"), col("nn")).as("lo"),
-        greatest(col("idx"), col("nn")).as("hi"))
-      .select(col(seriesKey), explode(array(
-        struct(col("lo").as("pos"), lit(1L).as("mk")),
-        struct(col("hi").as("pos"), lit(-1L).as("mk")))).as("e"))
-      .groupBy(col(seriesKey), col("e.pos").as("pos"))
-      .agg(sum(col("e.mk")).as("mk"))
-    // arc endpoints are window indices, so a left join onto the trunk's
-    // (key, idx) frame covers every position; cumsum = AC(t)
-    val wCum = Window.partitionBy(col(seriesKey)).orderBy(col("idx"))
-    val wAll = Window.partitionBy(col(seriesKey))
-    val ac = nnp.select(col(seriesKey), col("idx")).alias("f")
-      .join(deltas.alias("dl"),
-        col(s"f.$seriesKey") === col(s"dl.$seriesKey") &&
-          col("f.idx") === col("dl.pos"), "left")
-      .select(col(s"f.$seriesKey").as(seriesKey), col("f.idx").as("idx"),
-        coalesce(col("dl.mk"), lit(0L)).as("mk"))
-      .withColumn("ac", sum(col("mk")).over(wCum))
-      .withColumn("nw", count(lit(1)).over(wAll))
-      .withColumn("cac", expr(MP.cacStr("ac", "idx", "nw", excl,
-        ((window + 1) / 2 + band) / 2.0, castD)))
-    ac.groupBy(col(seriesKey)).agg(
-      min(struct(col("cac"), col("idx"))).getField("idx").as("regime_idx"),
-      round(min(col("cac")), 6).as("cac_min"),
-      max(col("nw")).as("n_win"))
+    val edge = exclFactor * window
+    val ideal = ((window + 1) / 2 + band) / 2.0
+    profiled(df, seriesKey, orderCols, valueCol, window, band, Seq(
+      StructField("regime_idx", LongType), StructField("cac_min", DoubleType),
+      StructField("n_win", LongType))) { p =>
+      val nw = p.idx.length
+      if (nw == 0) Row(null, null, 0L)
+      else {
+        // every arc ends on profile windows, so a running sum over all
+        // window positions reads AC at each profile window
+        val mark = new Array[Long](p.idx.last + 1)
+        for (k <- 0 until nw) {
+          mark(math.min(p.idx(k), p.nn(k))) += 1
+          mark(math.max(p.idx(k), p.nn(k))) -= 1
+        }
+        var ac = 0L
+        var pos = 0
+        var regime = -1
+        var cacMin = 0.0
+        for (t <- p.idx) {
+          while (pos <= t) { ac += mark(pos); pos += 1 }
+          val cac = if (t < edge || t + edge >= nw) 1.0 else math.min(ac.toDouble / ideal, 1.0)
+          if (regime < 0 || cac < cacMin) { regime = t; cacMin = cac }
+        }
+        Row(regime.toLong, cacMin, nw.toLong)
+      }
+    }.withColumn("cac_min", round(col("cac_min"), 6))
+  }
+
+  /** The runner of the three matrix-profile calculators: each series'
+    * points as micro-units through [[bandedProfile]], then `publish`
+    * turns the profile into the one output row.
+    */
+  private def profiled(df: DataFrame, seriesKey: String, orderCols: Seq[String],
+                       valueCol: String, window: Int, band: Int, fields: Seq[StructField])(
+      publish: Profile => Row): DataFrame = {
+    require(window >= 2 && band >= (window + 1) / 2,
+      s"matrix profile needs window >= 2 and band >= ceil(window/2), " +
+        s"got window $window, band $band")
+    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), fields) { s =>
+      Iterator.single(publish(bandedProfile(s.points(0).map(micro), window, band)))
+    }
+  }
+
+  /** A banded matrix profile: the windows that have a partner, in window
+    * order, each with its nearest partner's distance `pv` and that
+    * partner `nn`.
+    */
+  private final case class Profile(idx: Array[Int], pv: Array[Double], nn: Array[Int])
+
+  /** The banded matrix profile of the micro-unit series `xq`, in the
+    * arithmetic the [[MatrixProfileShared]] text specifies. Window i's
+    * partners are the windows j with ⌈m/2⌉ ≤ |j − i| ≤ `band`; a pair's
+    * distance is [[MatrixProfileShared.dCase]]'s double tail over the
+    * exact integers vi = m·S2 − sx² of both windows and num = m·QT −
+    * sx·sxj ([[comoment]]). A window's profile value is its smallest
+    * distance, `nn` the smallest partner at that distance — the
+    * oracle's (d, partner) minimum.
+    */
+  private def bandedProfile(xq: Array[Long], window: Int, band: Int): Profile = {
+    val m = window
+    val excl = (m + 1) / 2
+    val nw = math.max(xq.length - m + 1, 0)
+    val twoM = 2.0 * m
+    val vi = Array.tabulate(nw)(i => comoment(xq, i, i, m))
+    val pv = Array.fill(nw)(Double.PositiveInfinity)
+    val nn = Array.fill(nw)(-1)
+    var i = 0
+    while (i < nw) {
+      var j = i + excl
+      val last = math.min(i.toLong + band, nw - 1L).toInt
+      while (j <= last) {
+        val d =
+          if (vi(i) == 0.0 && vi(j) == 0.0) 0.0
+          else if (vi(i) == 0.0 || vi(j) == 0.0) math.sqrt(twoM)
+          else {
+            val corr = comoment(xq, i, j, m) / math.sqrt(vi(i) * vi(j))
+            math.sqrt(math.max(twoM * (1.0 - math.min(corr, 1.0)), 0.0))
+          }
+        // a window meets its partners in ascending order (first as j of
+        // the earlier windows, then as i), so a strict minimum keeps the
+        // smallest partner among equal distances
+        if (d < pv(i)) { pv(i) = d; nn(i) = j }
+        if (d < pv(j)) { pv(j) = d; nn(j) = i }
+        j += 1
+      }
+      i += 1
+    }
+    val idx = Array.range(0, nw).filter(nn(_) >= 0)
+    Profile(idx, idx.map(pv), idx.map(nn))
+  }
+
+  /** m·Σa_k·b_k − Σa_k·Σb_k for the length-m windows a at i and b at j
+    * of `xq` — the exact integer the oracle text holds as `vi` (i = j)
+    * or `num` — as the nearest double, which is what `cast(· AS double)`
+    * gives. Long arithmetic with exact checks, redone in BigInteger past
+    * the Long range, so no magnitude wraps.
+    */
+  private def comoment(xq: Array[Long], i: Int, j: Int, m: Int): Double =
+    try {
+      var qt, sa, sb = 0L
+      var k = 0
+      while (k < m) {
+        qt = Math.addExact(qt, Math.multiplyExact(xq(i + k), xq(j + k)))
+        sa = Math.addExact(sa, xq(i + k))
+        sb = Math.addExact(sb, xq(j + k))
+        k += 1
+      }
+      Math.subtractExact(Math.multiplyExact(m.toLong, qt), Math.multiplyExact(sa, sb)).toDouble
+    } catch {
+      case _: ArithmeticException =>
+        def big(k: Int) = BigInteger.valueOf(xq(k))
+        var qt, sa, sb = BigInteger.ZERO
+        for (k <- 0 until m) {
+          qt = qt.add(big(i + k).multiply(big(j + k)))
+          sa = sa.add(big(i + k))
+          sb = sb.add(big(j + k))
+        }
+        BigInteger.valueOf(m).multiply(qt).subtract(sa.multiply(sb)).doubleValue
+    }
+
+  /** numpy's default (linear) percentile p of the ascending `sorted`:
+    * s(lo) + (h − lo)·(s(hi) − s(lo)), h = (n − 1)·p, lo = ⌊h⌋,
+    * hi = min(lo + 1, n − 1).
+    */
+  private def linearPercentile(sorted: Array[Double], p: Double): Double = {
+    val h = (sorted.length - 1) * p
+    val lo = h.toInt
+    val hi = math.min(lo + 1, sorted.length - 1)
+    sorted(lo) + (h - lo) * (sorted(hi) - sorted(lo))
   }
 
   /** Shared expression-text builders for the DISTRIBUTED
@@ -2114,15 +2104,8 @@ object TsFeatures {
     val windowSize = math.ceil(len / 20.0).toInt
     val hf = windowSize / 2
     val odd = windowSize % 2
-    def pct10(a: Array[Double]): Double = {
-      val s = a.sorted
-      val h = (s.length - 1) * 0.10
-      val lo = h.toInt
-      val hi = math.min(lo + 1, s.length - 1)
-      s(lo) + (h - lo) * (s(hi) - s(lo))
-    }
     val noises = Array.tabulate(len) { i =>
-      pct10(row0.slice(math.max(i - hf, 0), math.min(i + hf + odd, len)))
+      linearPercentile(row0.slice(math.max(i - hf, 0), math.min(i + hf + odd, len)).sorted, 0.10)
     }
     val minLength = math.ceil(nWidths / 4.0)
     lines.iterator.flatMap { l =>
@@ -2144,90 +2127,6 @@ object TsFeatures {
       val x = i - (points - 1) / 2.0
       val xa = x / a
       amp * (1.0 - xa * xa) * math.exp(-x * x / (2.0 * a * a))
-    }
-  }
-
-  /** Matrix profile summary (the tsfresh `matrix_profile` feature
-    * family): z-normalized Euclidean distance from each length-m
-    * subsequence to its nearest non-trivial neighbor (exclusion zone
-    * ⌈m/2⌉, the SCAMP/STUMPY convention), summarized per series as
-    * min/max/mean/median/p25/p75. O(n²·m) per series — the same
-    * inherent cost tsfresh pays via the matrixprofile lib — so it
-    * runs through [[perSeries]]: cost bounded by the longest series,
-    * never cross-series. Series too short for two non-overlapping
-    * windows (n < m + ⌈m/2⌉ + 1) or zero-variance windows yield nulls.
-    * Bench + spec (brute-force pin on hand-checked fixtures).
-    */
-  def matrixProfile(df: DataFrame, seriesKey: String, orderCols: Seq[String],
-                    valueCol: String, window: Int = 4): DataFrame = {
-    require(window >= 2, s"matrixProfile window must be >= 2, got $window")
-    val excl = (window + 1) / 2
-    perSeries(df, Seq(seriesKey), orderCols, Seq(valueCol), Seq(
-      StructField("mp_min", DoubleType), StructField("mp_max", DoubleType),
-      StructField("mp_mean", DoubleType), StructField("mp_median", DoubleType),
-      StructField("mp_p25", DoubleType), StructField("mp_p75", DoubleType))) { s =>
-      val xs = s.points(0)
-      val n = xs.length
-      val nw = n - window + 1
-      if (nw < excl + 2) {
-        Iterator.single(Row(null, null, null, null, null, null))
-      } else {
-        // per-window mean/std for z-normalization
-        val mu = new Array[Double](nw)
-        val sd = new Array[Double](nw)
-        var i = 0
-        while (i < nw) {
-          var s = 0.0
-          var s2 = 0.0
-          var k = 0
-          while (k < window) { val v = xs(i + k); s += v; s2 += v * v; k += 1 }
-          mu(i) = s / window
-          val varr = s2 / window - mu(i) * mu(i)
-          sd(i) = if (varr > 0) math.sqrt(varr) else 0.0
-          i += 1
-        }
-        val prof = new Array[Double](nw)
-        java.util.Arrays.fill(prof, Double.PositiveInfinity)
-        i = 0
-        while (i < nw) {
-          var j = i + excl
-          while (j < nw) {
-            // z-normalized distance via the dot product identity:
-            // d² = 2m(1 − (qt − m·μᵢμⱼ)/(m·σᵢσⱼ))
-            val d =
-              if (sd(i) == 0.0 || sd(j) == 0.0) {
-                // degenerate window: fall back to both-flat = 0, else max
-                if (sd(i) == 0.0 && sd(j) == 0.0) 0.0
-                else math.sqrt(2.0 * window)
-              } else {
-                var qt = 0.0
-                var k = 0
-                while (k < window) { qt += xs(i + k) * xs(j + k); k += 1 }
-                val corr = (qt - window * mu(i) * mu(j)) / (window * sd(i) * sd(j))
-                math.sqrt(math.max(2.0 * window * (1.0 - math.min(corr, 1.0)), 0.0))
-              }
-            if (d < prof(i)) prof(i) = d
-            if (d < prof(j)) prof(j) = d
-            j += 1
-          }
-          i += 1
-        }
-        val finite = prof.filter(java.lang.Double.isFinite)
-        if (finite.isEmpty) {
-          Iterator.single(Row(null, null, null, null, null, null))
-        } else {
-          val sorted = finite.sorted
-          // linear-interpolated percentile (numpy default)
-          def pct(p: Double): Double = {
-            val h = (sorted.length - 1) * p
-            val lo = h.toInt
-            val hi = math.min(lo + 1, sorted.length - 1)
-            sorted(lo) + (h - lo) * (sorted(hi) - sorted(lo))
-          }
-          Iterator.single(Row(sorted.head, sorted.last, finite.sum / finite.length,
-            pct(0.5), pct(0.25), pct(0.75)))
-        }
-      }
     }
   }
 
@@ -2259,13 +2158,7 @@ object TsFeatures {
         val delta = Array.tabulate(n - 1)(t => xs(t + 1) - xs(t))
         // pandas-default (linear) quantile edges over sig
         val sorted = sig.sorted
-        def quant(p: Double): Double = {
-          val h = (sorted.length - 1) * p
-          val lo = h.toInt
-          val hi = math.min(lo + 1, sorted.length - 1)
-          sorted(lo) + (h - lo) * (sorted(hi) - sorted(lo))
-        }
-        val edges = Array.tabulate(bins + 1)(j => quant(j.toDouble / bins))
+        val edges = Array.tabulate(bins + 1)(j => linearPercentile(sorted, j.toDouble / bins))
         // qcut: (edge(b-1), edge(b)] — leftmost bin closed on the left
         def binOf(x: Double): Int = {
           var b = 1

@@ -2512,19 +2512,13 @@ object TsQueries {
     Some(adfAutolagOracleSql),
   )
 
-  /** GENERATED oracle for `ts_matrix_profile` — shares the distance
-    * and percentile expression text with
-    * [[graft.operators.TsFeatures.matrixProfileBanded]] so both
-    * engines replay bit-identical doubles; the lead columns, the
-    * struct-unnest pair scatter, and the cast syntax are the only
-    * DuckDB-specific parts.
+  /** Shared WITH-chain up to the profile CTE `prof(user_id, idx, pv)`
+    * (plus `nn` when `withNN`) — the trunk the three matrix-profile
+    * oracles build on, replaying the profile the kernel behind
+    * [[graft.operators.TsFeatures.matrixProfile]] computes.
     */
-  /** Shared WITH-chain up to the profile CTE `prof(user_id, idx, pv)` —
-    * the trunk both matrix-profile oracles build on (mirror of
-    * [[graft.operators.TsFeatures.matrixProfileProf]]).
-    */
-  private def matrixProfileProfSql(m: Int, band: Int,
-                                   withNN: Boolean = false): String = {
+  private def bandedProfileSql(m: Int, band: Int,
+                               withNN: Boolean = false): String = {
     val MP = graft.operators.TsFeatures.MatrixProfileShared
     val excl = (m + 1) / 2
     val castD = (s: String) => s"($s::DOUBLE)"
@@ -2535,8 +2529,8 @@ object TsQueries {
     val scatter = (excl to band).flatMap(o => Seq(
       s"struct_pack(idx := i0, d := d$o, nn := i0 + $o)",
       s"struct_pack(idx := i0 + $o, d := d$o, nn := i0)")).mkString(", ")
-    // the nn column mirrors the Spark trunk's (d, nn) struct-min —
-    // DuckDB's struct ordering is the same lexicographic compare
+    // the nn column is the kernel's (d, partner) minimum — DuckDB's
+    // struct ordering is that lexicographic compare
     val nnSel =
       if (withNN) ", min(struct_pack(d := d, nn := nn)).nn AS nn" else ""
     s"""WITH base AS (SELECT user_id, ts, round(value * 1e6)::BIGINT AS xq FROM events),
@@ -2555,6 +2549,13 @@ object TsQueries {
       prof AS (SELECT user_id, idx, min(d) AS pv$nnSel FROM pp GROUP BY 1, 2)"""
   }
 
+  /** GENERATED oracle for `ts_matrix_profile` — built from the
+    * `MatrixProfileShared` distance and percentile text, the arithmetic
+    * the kernel behind [[graft.operators.TsFeatures.matrixProfile]]
+    * computes op for op, so both engines give bit-identical doubles;
+    * the lead columns, the struct-unnest pair scatter, and the cast
+    * syntax are the only DuckDB-specific parts.
+    */
   private def matrixProfileOracleSql(m: Int, band: Int): String = {
     val MP = graft.operators.TsFeatures.MatrixProfileShared
     val castD = (s: String) => s"($s::DOUBLE)"
@@ -2564,7 +2565,7 @@ object TsQueries {
         s"${MP.pickStr(s"least(floor((cnt - 1) * $p)::BIGINT + 1, cnt - 1)")} AS v${tag}hi")
     }.mkString(",\n               ")
     s"""
-      ${matrixProfileProfSql(m, band)},
+      ${bandedProfileSql(m, band)},
       vg AS (SELECT user_id, pv, count(*) AS c FROM prof GROUP BY 1, 2),
       vg2 AS (SELECT *, sum(c) OVER (PARTITION BY user_id) AS cnt,
                 coalesce(sum(c) OVER (PARTITION BY user_id ORDER BY pv
@@ -2591,7 +2592,7 @@ object TsQueries {
     */
   val tsMatrixProfile: Q = Q(
     "ts_matrix_profile",
-    (s, dir) => graft.operators.TsFeatures.matrixProfileBanded(
+    (s, dir) => graft.operators.TsFeatures.matrixProfile(
       Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")),
       "user_id", Seq("ts"), "value"),
     Some(matrixProfileOracleSql(4, 20)),
@@ -2599,7 +2600,7 @@ object TsQueries {
 
   /** Motif/discord LOCATIONS from the banded profile (the §3
     * "still out" matrix-profile classes — VERDICT r14 #7): argmin /
-    * argmax of (pv, idx) per series over the SAME profile trunk the
+    * argmax of (pv, idx) per series over the SAME profile the
     * summary row replays; the idx tie-break pins flat-series ties
     * identically in both engines.
     */
@@ -2609,7 +2610,7 @@ object TsQueries {
       Tables.events(s, dir).select(col("user_id"), col("ts"), col("value")),
       "user_id", Seq("ts"), "value"),
     Some(s"""
-      ${matrixProfileProfSql(4, 20)},
+      ${bandedProfileSql(4, 20)},
       sel AS (SELECT user_id, idx, pv,
                 row_number() OVER (PARTITION BY user_id ORDER BY pv, idx) AS rmin,
                 row_number() OVER (PARTITION BY user_id ORDER BY pv DESC, idx) AS rmax
@@ -2625,10 +2626,10 @@ object TsQueries {
 
   /** FLUSS regime segmentation (VERDICT r15 #5): corrected arc curve
     * over the banded profile's nearest-neighbor arcs — arc-endpoint
-    * scatter (+1/−1), running-sum arc count, idealized-parabola
+    * scatter (+1/−1), running-sum arc count, banded ideal arc count
     * normalization with edge zones pinned to 1 (shared `cacStr`
-    * text), regime = the (cac, idx) struct-min. Bounded rollups on
-    * the same single-window-pass trunk as summary/motif.
+    * text), regime = the (cac, idx) struct-min, over the same profile
+    * as summary/motif.
     */
   val tsMatrixProfileFluss: Q = Q(
     "ts_matrix_profile_fluss",
@@ -2639,7 +2640,7 @@ object TsQueries {
       val MP = graft.operators.TsFeatures.MatrixProfileShared
       val castD = (s: String) => s"($s::DOUBLE)"
       s"""
-      ${matrixProfileProfSql(4, 20, withNN = true)},
+      ${bandedProfileSql(4, 20, withNN = true)},
       arcs AS (SELECT user_id, least(idx, nn) AS lo, greatest(idx, nn) AS hi
                FROM prof),
       marks AS (

@@ -50,6 +50,8 @@ class ExtractPlanSpec extends SparkSpec {
       "cwt" -> TsFeatures.cwt(e, k, o, v),
       "numberCwtPeaks" -> TsFeatures.numberCwtPeaks(e, k, o, v),
       "matrixProfile" -> TsFeatures.matrixProfile(e, k, o, v),
+      "matrixProfileIndices" -> TsFeatures.matrixProfileIndices(e, k, o, v),
+      "matrixProfileFluss" -> TsFeatures.matrixProfileFluss(e, k, o, v),
       "friedrich" -> TsFeatures.friedrich(e, k, o, v))
     for ((name, df) <- calculators) {
       val plan = df.queryExecution.executedPlan.toString

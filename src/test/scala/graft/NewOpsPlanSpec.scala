@@ -109,23 +109,21 @@ class NewOpsPlanSpec extends SparkSpec {
   }
 
   test("banded matrix-profile pass keeps >1 partition once data exceeds the advisory size") {
-    // §12m: at bench SFs AQE coalesces the ~20 MB banded shuffle into
-    // ONE partition (4 jobs / 7 tasks) — fine there, but the 100 TB
-    // claim is that AQE only coalesces BELOW the advisory size. Pin it:
-    // with the advisory dropped under the fixture's shuffle bytes, the
-    // profile must execute on >1 partition (i.e. the plan's partition
-    // count comes back the moment data outgrows the advisory, so the
-    // banded pass parallelizes at scale instead of serializing).
-    // both knobs govern the coalesce floor: advisory is the target,
-    // minPartitionSize (default 1m, via parallelismFirst) the floor —
-    // at 100 TB the shuffle dwarfs both defaults, so shrinking both
-    // under the fixture's bytes simulates the data-outgrows-config case
+    // at bench SFs AQE may coalesce the profile's one shuffle into a
+    // single partition — fine there, but the 100 TB claim is that AQE
+    // only coalesces BELOW the advisory size. Pin it: with the advisory
+    // dropped under the fixture's shuffle bytes, the profile must
+    // execute on >1 partition. Both knobs govern the coalesce floor:
+    // advisory is the target, minPartitionSize (default 1m, via
+    // parallelismFirst) the floor — at 100 TB the shuffle dwarfs both
+    // defaults, so shrinking both under the fixture's bytes simulates
+    // the data-outgrows-config case
     val keys = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize")
     val prev = keys.map(k => k -> spark.conf.getOption(k))
     keys.foreach(k => spark.conf.set(k, "65536"))
     try {
-      val prof = graft.operators.TsFeatures.matrixProfileProf(
+      val prof = graft.operators.TsFeatures.matrixProfile(
         Tables.events(spark, "/root/testdata/sf0.01")
           .select(org.apache.spark.sql.functions.col("user_id"),
             org.apache.spark.sql.functions.col("ts"),
@@ -142,8 +140,8 @@ class NewOpsPlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
-    // window pass + profile rollup + argmin rollup: bounded Exchanges
-    assert("Exchange (hash|range|Single)".r.findAllIn(plan).size <= 3, plan)
+    // the per-series kernel's one shuffle, nothing after it
+    assert("Exchange (hash|range|Single)".r.findAllIn(plan).size == 1, plan)
   }
 
   test("q_mad keeps the groupBy shape (low group cardinality: window medians lose)") {

@@ -318,9 +318,47 @@ class TsAdvancedSpec extends SparkSpec {
   }
 
   test("matrix profile yields nulls when too short for two windows") {
-    val out = TsFeatures.matrixProfile(toSeriesDF(lcgSeries(6)),
+    val out = TsFeatures.matrixProfile(toSeriesDF(lcgSeries(5)),
       "user_id", Seq("ts"), "value", window = 4).collect()(0)
     for (i <- 1 to 6) assert(out.isNullAt(i))
+  }
+
+  test("matrix profile of 6 points at window 4 is the one pair (0, 2)") {
+    // window + ⌈window/2⌉ points: windows 0 and 2 are each other's only partner
+    val xs = lcgSeries(6)
+    val want = naiveBandedMp(xs, 4, 20)
+    assert(want.length == 2 && want(0) == want(1))
+    val out = TsFeatures.matrixProfile(toSeriesDF(xs), "user_id", Seq("ts"), "value")
+      .collect()(0)
+    for (i <- 1 to 6)
+      assert(math.abs(out.getDouble(i) - want(0)) < 1e-6, s"column $i: ${out.getDouble(i)} vs ${want(0)}")
+    val motif = TsFeatures.matrixProfileIndices(toSeriesDF(xs), "user_id", Seq("ts"), "value")
+      .collect()(0)
+    assert(motif.getAs[Long]("motif_idx") == 0L && motif.getAs[Long]("discord_idx") == 0L)
+    val fluss = TsFeatures.matrixProfileFluss(toSeriesDF(xs), "user_id", Seq("ts"), "value")
+      .collect()(0)
+    assert(fluss.getAs[Long]("n_win") == 2L && fluss.getAs[Double]("cac_min") == 1.0)
+  }
+
+  test("matrix profile, motif and FLUSS are scale-invariant past the old Long envelope") {
+    // y on the micro grid up to 5e3 and 1e4·y up to 5e7: the distance is
+    // z-normalized, but the micro moments of 1e4·y reach 1e28, past Long
+    val rnd = new scala.util.Random(17)
+    val ys = Array.fill(80)(rnd.nextLong(10000000000L) - 5000000000L) // micro units
+    val frame = toSeriesDF(ys.map(_ / 1e6), "y")
+      .union(toSeriesDF(ys.map(k => (k * 10000L) / 1e6), "big"))
+    def byKey(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.collect().map(r => r.getString(0) -> cols.map(r.getAs[Double])).toMap
+    for ((df, cols) <- Seq(
+      TsFeatures.matrixProfile(frame, "user_id", Seq("ts"), "value") ->
+        Seq("mp_min", "mp_max", "mp_mean", "mp_median", "mp_p25", "mp_p75"),
+      TsFeatures.matrixProfileIndices(frame, "user_id", Seq("ts"), "value") ->
+        Seq("motif_dist", "discord_dist"),
+      TsFeatures.matrixProfileFluss(frame, "user_id", Seq("ts"), "value") -> Seq("cac_min"))) {
+      val got = byKey(df, cols)
+      for ((c, (y, big)) <- cols.zip(got("y").zip(got("big"))))
+        assert(math.abs(y - big) < 1e-6, s"$c: $y at y vs $big at 1e4·y")
+    }
   }
 
   // ------------------------------------------------- friedrich / langevin
@@ -363,7 +401,7 @@ class TsAdvancedSpec extends SparkSpec {
   }
 
   // naive banded matrix-profile replay: same semantics as
-  // matrixProfileBanded, written as the obvious per-series double loop
+  // matrixProfile, written as the obvious per-series double loop
   private def naiveBandedMp(xs: Array[Double], m: Int, band: Int): Array[Double] = {
     val excl = (m + 1) / 2
     val q = xs.map(v => math.round(v * 1e6).toDouble / 1e6)
@@ -391,9 +429,9 @@ class TsAdvancedSpec extends SparkSpec {
     prof.filter(java.lang.Double.isFinite)
   }
 
-  test("matrixProfileBanded matches a naive banded replay (min/max/mean/percentiles)") {
+  test("matrixProfile matches a naive banded replay (min/max/mean/percentiles)") {
     val xs = lcgSeries(70, seed = 31L).map(v => v * 200.0 + 300.0)
-    val out = TsFeatures.matrixProfileBanded(toSeriesDF(xs), "user_id",
+    val out = TsFeatures.matrixProfile(toSeriesDF(xs), "user_id",
       Seq("ts"), "value").collect()(0)
     val prof = naiveBandedMp(xs, 4, 20).sorted
     def pct(p: Double): Double = {
@@ -410,13 +448,13 @@ class TsAdvancedSpec extends SparkSpec {
     assert(math.abs(out.getDouble(6) - pct(0.75)) < 1e-4, s"p75")
   }
 
-  test("matrixProfileBanded: a planted in-band motif drives mp_min to zero") {
+  test("matrixProfile: a planted in-band motif drives mp_min to zero") {
     // two identical 4-point subsequences 6 apart (inside the band,
     // outside the exclusion zone) -> z-normalized distance 0
     val base = lcgSeries(40, seed = 41L).map(v => v * 10.0)
     val motif = Array(1.0, 5.0, 2.0, 8.0)
     val xs = base.take(10) ++ motif ++ base.slice(10, 12) ++ motif ++ base.drop(12)
-    val out = TsFeatures.matrixProfileBanded(toSeriesDF(xs), "user_id",
+    val out = TsFeatures.matrixProfile(toSeriesDF(xs), "user_id",
       Seq("ts"), "value").collect()(0)
     assert(out.getDouble(1) == 0.0, s"mp_min ${out.getDouble(1)}")
   }

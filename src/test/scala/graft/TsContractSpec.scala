@@ -25,6 +25,8 @@ class TsContractSpec extends SparkSpec {
     "cwt" -> ((df, k, o, v) => TsFeatures.cwt(df, k, Seq(o), v)),
     "numberCwtPeaks" -> ((df, k, o, v) => TsFeatures.numberCwtPeaks(df, k, Seq(o), v)),
     "matrixProfile" -> ((df, k, o, v) => TsFeatures.matrixProfile(df, k, Seq(o), v)),
+    "matrixProfileIndices" -> ((df, k, o, v) => TsFeatures.matrixProfileIndices(df, k, Seq(o), v)),
+    "matrixProfileFluss" -> ((df, k, o, v) => TsFeatures.matrixProfileFluss(df, k, Seq(o), v)),
     "friedrich" -> ((df, k, o, v) => TsFeatures.friedrich(df, k, Seq(o), v)),
     "extract" -> ((df, k, o, v) => TsFeatures.extract(df, k, Seq(o), v)))
 
@@ -42,6 +44,8 @@ class TsContractSpec extends SparkSpec {
     "cwt" -> Seq(),
     "numberCwtPeaks" -> Seq(Seq(0L)),
     "matrixProfile" -> Seq(Seq.fill(6)(null)),
+    "matrixProfileIndices" -> Seq(Seq.fill(4)(null)),
+    "matrixProfileFluss" -> Seq(Seq(null, null, 0L)),
     "friedrich" -> Seq(Seq.fill(5)(null)))
 
   // 12 integer values, far from constant, so every calculator has a
